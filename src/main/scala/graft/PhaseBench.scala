@@ -35,8 +35,6 @@ object PhaseBench {
     t("decode")(noop(decoded))
     val valued = SessionEngine.runBatch(decoded).persist()
     t("cep")(valued.count())
-    // A/B: the declarative window-chain formulation of the same semantics
-    t("cepdecl")(noop(graft.operators.SpadlOps.normalizeAndLabel(decoded)))
     t("xtfit")(XThreat.fit(valued))
     val model = XThreat.fit(valued)
     val states = GameStates.withStates(graft.vaep.Features.withGoalscore(valued), 3)

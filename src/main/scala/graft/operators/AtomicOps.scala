@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Act
 import graft.core.Spadl._
 
 /** Atomic-SPADL converter (reference `socceraction/atomic/spadl/base.py`).
@@ -47,38 +48,27 @@ object AtomicOps {
     "team_id", "player_id", "start_x", "start_y", "end_x", "end_y",
     "type_id", "result_id", "bodypart_id", "seq")
 
-  /** The current row as an interleave struct (aid_frac = action_id). */
-  private def baseStruct: Column = struct(
+  /** A row synthesized after the current one, at the current row's end:
+    * (period, action_id + 0.1), result -1. */
+  private def extraStruct(typeId: Column, time: Column = col("time_seconds"),
+                          team: Column = col("team_id"), player: Column = col("player_id"),
+                          bodypart: Column = col("bodypart_id")): Column = struct(
     col("period_id"),
-    col("action_id").cast("double").as("aid_frac"),
-    col("time_seconds"), col("team_id"), col("player_id"),
-    col("start_x"), col("start_y"), col("end_x"), col("end_y"),
-    col("type_id"), col("result_id"), col("bodypart_id"), col("seq"))
+    (col("action_id").cast("double") + 0.1).as("aid_frac"),
+    time.as("time_seconds"), team.as("team_id"), player.as("player_id"),
+    col("end_x").as("start_x"), col("end_y").as("start_y"),
+    col("end_x").as("end_x"), col("end_y").as("end_y"),
+    typeId.as("type_id"), lit(-1).as("result_id"), bodypart.as("bodypart_id"), col("seq"))
 
-  /** One insertion stage: per row emit [base] or [base, extra], explode,
-    * renumber per game in (period, aid_frac) order. The synthesized-row
-    * multiset and the resequencing key are identical to the reference's
-    * append-sort-renumber, so results match row for row. */
-  private def explodeInterleave(withNx: DataFrame, cond: Column, extra: Column): DataFrame = {
-    val exploded = withNx
-      .select(col("game_id"),
-        explode(when(cond, array(baseStruct, extra)).otherwise(array(baseStruct))).as("r"))
-      .select(col("game_id"), col("r.*"))
-    val w = Window.partitionBy("game_id").orderBy("period_id", "aid_frac")
-    exploded
-      .withColumn("action_id", row_number().over(w).cast("long") - 1)
-      .select(outCols.map(col): _*)
-  }
+  /** [[SpadlOps.interleave]] in the atomic column order. */
+  private def explodeInterleave(withNx: DataFrame, cond: Column, extra: Column): DataFrame =
+    SpadlOps.interleave(withNx, cond, extra).select(outCols.map(col): _*)
 
   /** N16 — synthesize receival / interception / out / offside rows after
     * pass-like actions (`atomic/spadl/base.py:39-113`). */
   def extraFromPasses(actions: DataFrame): DataFrame = {
-    val nx = actions
-      .withColumn("nx_team_id", lead("team_id", 1).over(Wa))
-      .withColumn("nx_player_id", lead("player_id", 1).over(Wa))
-      .withColumn("nx_period_id", lead("period_id", 1).over(Wa))
-      .withColumn("nx_time_seconds", lead("time_seconds", 1).over(Wa))
-      .withColumn("nx_type_id", lead("type_id", 1).over(Wa))
+    val nx = SpadlOps.withNext(actions, Wa, "team_id", "player_id", "period_id", "time_seconds",
+      "type_id")
     val samePeriod = col("nx_period_id") === col("period_id") // lead null ⇒ false ≡ samegame&sameperiod
     val extraIdx = col("type_id").isin(PasslikeIds: _*) && samePeriod &&
       !col("nx_type_id").isin(InterceptionlikeIds: _*)
@@ -91,26 +81,17 @@ object AtomicOps {
       .when(out, TypeOut)
       .when(!sameTeam, TypeInterception)
       .otherwise(TypeReceival)
-    val extra = struct(
-      col("period_id"),
-      (col("action_id").cast("double") + 0.1).as("aid_frac"),
-      ((col("time_seconds") + col("nx_time_seconds")) / 2).as("time_seconds"),
-      when(typeId === TypeInterception, col("nx_team_id")).otherwise(col("team_id")).as("team_id"),
-      when(out || offside, col("player_id")).otherwise(col("nx_player_id")).as("player_id"),
-      col("end_x").as("start_x"), col("end_y").as("start_y"),
-      col("end_x").as("end_x"), col("end_y").as("end_y"),
-      typeId.as("type_id"),
-      lit(-1).as("result_id"),
-      lit(BodypartFoot).as("bodypart_id"),
-      col("seq"))
+    val extra = extraStruct(typeId,
+      time = (col("time_seconds") + col("nx_time_seconds")) / 2,
+      team = when(typeId === TypeInterception, col("nx_team_id")).otherwise(col("team_id")),
+      player = when(out || offside, col("player_id")).otherwise(col("nx_player_id")),
+      bodypart = lit(BodypartFoot))
     explodeInterleave(nx, extraIdx, extra)
   }
 
   /** N17 — goal / owngoal / out rows after shots (`atomic/spadl/base.py:116-166`). */
   def extraFromShots(actions: DataFrame): DataFrame = {
-    val nx = actions
-      .withColumn("nx_period_id", lead("period_id", 1).over(Wa))
-      .withColumn("nx_type_id", lead("type_id", 1).over(Wa))
+    val nx = SpadlOps.withNext(actions, Wa, "period_id", "type_id")
     val samePeriod = col("nx_period_id") === col("period_id")
     val shot = col("type_id").isin(ShotlikeIds: _*)
     val goal = shot && col("result_id") === ResultSuccess
@@ -119,73 +100,22 @@ object AtomicOps {
       samePeriod
     // mask order (`base.py:157-161`): out < goal < owngoal
     val typeId = when(owngoal, TypeOwngoal).when(goal, TypeGoal).otherwise(TypeOut)
-    val extra = struct(
-      col("period_id"),
-      (col("action_id").cast("double") + 0.1).as("aid_frac"),
-      col("time_seconds"), col("team_id"), col("player_id"),
-      col("end_x").as("start_x"), col("end_y").as("start_y"),
-      col("end_x").as("end_x"), col("end_y").as("end_y"),
-      typeId.as("type_id"),
-      lit(-1).as("result_id"),
-      col("bodypart_id"),
-      col("seq"))
-    explodeInterleave(nx, goal || owngoal || out, extra)
+    explodeInterleave(nx, goal || owngoal || out, extraStruct(typeId))
   }
 
   /** N18 — yellow/red-card rows (`atomic/spadl/base.py:169-197`). */
   def extraFromFouls(actions: DataFrame): DataFrame = {
     val yellow = col("result_id") === ResultYellow
     val red = col("result_id") === ResultRed
-    val extra = struct(
-      col("period_id"),
-      (col("action_id").cast("double") + 0.1).as("aid_frac"),
-      col("time_seconds"), col("team_id"), col("player_id"),
-      col("end_x").as("start_x"), col("end_y").as("start_y"),
-      col("end_x").as("end_x"), col("end_y").as("end_y"),
-      when(red, TypeRedCard).otherwise(TypeYellowCard).as("type_id"),
-      lit(-1).as("result_id"),
-      col("bodypart_id"),
-      col("seq"))
-    explodeInterleave(actions, yellow || red, extra)
+    explodeInterleave(actions, yellow || red,
+      extraStruct(when(red, TypeRedCard).otherwise(TypeYellowCard)))
   }
 
   /** `_add_dribbles` re-run inside the atomic chain operates on the
     * action_id-resequenced frame, so the neighbor order is (period,
     * action_id) (`atomic/spadl/base.py:31`). */
-  def addDribblesById(actions: DataFrame): DataFrame = {
-    val nx = actions
-      .withColumn("nx_team_id", lead("team_id", 1).over(Wa))
-      .withColumn("nx_player_id", lead("player_id", 1).over(Wa))
-      .withColumn("nx_period_id", lead("period_id", 1).over(Wa))
-      .withColumn("nx_time_seconds", lead("time_seconds", 1).over(Wa))
-      .withColumn("nx_start_x", lead("start_x", 1).over(Wa))
-      .withColumn("nx_start_y", lead("start_y", 1).over(Wa))
-      .withColumn("nx_type_id", lead("type_id", 1).over(Wa))
-      .withColumn("nx_bodypart_id", lead("bodypart_id", 1).over(Wa))
-    val dxc = col("end_x") - col("nx_start_x")
-    val dyc = col("end_y") - col("nx_start_y")
-    val d2 = dxc * dxc + dyc * dyc
-    val cond = (col("team_id") === col("nx_team_id")) &&
-      (col("nx_type_id") =!= TypeFoul) &&
-      (col("nx_type_id") =!= TypeShot) && (col("nx_bodypart_id") =!= BodypartHead) &&
-      (d2 >= SpadlOps.MinDribbleLength * SpadlOps.MinDribbleLength) &&
-      (d2 <= SpadlOps.MaxDribbleLength * SpadlOps.MaxDribbleLength) &&
-      (col("nx_time_seconds") - col("time_seconds") < SpadlOps.MaxDribbleDuration) &&
-      (col("period_id") === col("nx_period_id"))
-    val extra = struct(
-      col("nx_period_id").cast("int").as("period_id"),
-      (col("action_id").cast("double") + 0.1).as("aid_frac"),
-      ((col("time_seconds") + col("nx_time_seconds")) / 2).as("time_seconds"),
-      col("nx_team_id").as("team_id"),
-      col("nx_player_id").as("player_id"),
-      col("end_x").as("start_x"), col("end_y").as("start_y"),
-      col("nx_start_x").as("end_x"), col("nx_start_y").as("end_y"),
-      lit(TypeDribble).as("type_id"),
-      lit(ResultSuccess).as("result_id"),
-      lit(BodypartFoot).as("bodypart_id"),
-      col("seq"))
-    explodeInterleave(nx, cond, extra)
-  }
+  def addDribblesById(actions: DataFrame): DataFrame =
+    SpadlOps.addDribbles(actions, Wa).select(outCols.map(col): _*)
 
   /** P19 + P18 — project to (x, y, dx, dy) and remap corner/freekick types
     * (`atomic/spadl/base.py:200-236`). */
@@ -208,140 +138,76 @@ object AtomicOps {
     convertColumns(
       extraFromFouls(extraFromShots(addDribblesById(extraFromPasses(actions)))))
 
-  // ---- typed per-game scan (the SessionEngine.runBatch pattern) -----------
-
-  import graft.streaming.SessionEngine.ActionRow
-
-  private def renumber(rows: IndexedSeq[ActionRow]): IndexedSeq[ActionRow] =
-    rows.zipWithIndex.map { case (a, i) => a.copy(action_id = i.toLong) }
-
   private val PasslikeSet = PasslikeIds.toSet
   private val InterceptionlikeSet = InterceptionlikeIds.toSet
   private val ShotlikeSet = ShotlikeIds.toSet
 
-  /** One insertion stage over the in-memory game: emit each row, then the
-    * conditional synthesized row immediately after it. Inserting after the
-    * base IS the (period_id, aid_frac) sort position the declarative
-    * `explodeInterleave` renumbers by: the input is (period, action_id)
-    * sorted and every extra carries (base period, base id + 0.1) — or, for
-    * dribbles, the next row's period under a same-period guard — so
-    * (p_base, id+0.1) always falls strictly between its base and the next
-    * row. AtomicOpsSpec asserts whole-frame equality with the declarative
-    * chain. */
-  private def stage(cur: IndexedSeq[ActionRow])(
-      extra: (ActionRow, Option[ActionRow]) => Option[ActionRow]): IndexedSeq[ActionRow] = {
-    val out = IndexedSeq.newBuilder[ActionRow]
-    var i = 0
-    val n = cur.length
-    while (i < n) {
-      val a = cur(i)
-      out += a
-      extra(a, if (i + 1 < n) Some(cur(i + 1)) else None).foreach(out += _)
-      i += 1
-    }
-    renumber(out.result())
-  }
+  /** The four insertion stages of the chain as one per-game kernel: each
+    * stage emits a row, then its conditional synthesized row right after it.
+    * That IS the (period_id, aid_frac) position `explodeInterleave`
+    * renumbers by: the input is (period, action_id) sorted and every extra
+    * carries (base period, base id + 0.1) — or, for dribbles, the next row's
+    * period under a same-period guard. Conditions and fields cite the same
+    * reference lines as the window stages above; AtomicOpsSpec asserts
+    * whole-frame equality with [[convertToAtomicDeclarative]]. */
+  case object AtomicKernel extends GameKernel {
+    val reads: Seq[Int] = Act.ActionId to Act.SeqNo
+    val order: Seq[Int] = Seq(Act.PeriodId, Act.ActionId)
+    def labels: Boolean = false
 
-  /** The four insertion stages of the atomic chain as ONE ordered in-memory
-    * pass per game — semantics identical term for term to the declarative
-    * window/explode stages above (each condition and synthesized field cites
-    * the same reference lines; equality is spec-asserted and the
-    * `atomic_convert_full` oracle hashes the composition end to end). */
-  def processAtomicGame(rows: Iterable[ActionRow]): IndexedSeq[ActionRow] = {
-    val sorted = rows.toIndexedSeq.sortBy(a => (a.period_id, a.action_id))
-    // N16 — extraFromPasses (`atomic/spadl/base.py:39-113`)
-    val afterPasses = stage(sorted) { (a, nxOpt) =>
-      nxOpt.flatMap { nx =>
-        if (PasslikeSet(a.type_id) && nx.period_id == a.period_id &&
-            !InterceptionlikeSet(nx.type_id)) {
-          val sameTeam = a.team_id == nx.team_id
-          val offside = a.result_id == ResultOffside
-          val outOfPlay = (nx.type_id == TypeGoalkick && !sameTeam) ||
-            nx.type_id == 2 // throw_in
+    /** [[extraStruct]]'s row after `a`. */
+    private def extra(a: Act)(typeId: Int, time: Double = a.time, team: Long = a.teamId,
+                              player: Long = a.playerId, bodypart: Int = a.bodypartId): Act =
+      new Act(a.actionId, a.periodId, time, team, player, a.endX, a.endY, a.endX, a.endY,
+        typeId, -1, bodypart, a.seq)
+
+    def run(game: Array[Act]): Array[Act] = {
+      require(game.forall(_.nulls == 0), "the atomic conversion needs actions without nulls")
+      // N16 — extraFromPasses (`atomic/spadl/base.py:39-113`)
+      val afterPasses = GameKernel.insertAfter(game) { (a, nx) =>
+        if (nx != null && PasslikeSet(a.typeId) && nx.periodId == a.periodId &&
+            !InterceptionlikeSet(nx.typeId)) {
+          val sameTeam = a.teamId == nx.teamId
+          val offside = a.resultId == ResultOffside
+          val outOfPlay = (nx.typeId == TypeGoalkick && !sameTeam) || nx.typeId == 2 // throw_in
           // mask order (`base.py:98-104`): receival < interception < out < offside
           val typeId =
             if (offside) TypeOffside
             else if (outOfPlay) TypeOut
             else if (!sameTeam) TypeInterception
             else TypeReceival
-          Some(ActionRow(a.game_id, a.action_id, a.period_id,
-            (a.time_seconds + nx.time_seconds) / 2,
-            if (typeId == TypeInterception) nx.team_id else a.team_id,
-            if (outOfPlay || offside) a.player_id else nx.player_id,
-            a.end_x, a.end_y, a.end_x, a.end_y,
-            typeId, -1, BodypartFoot, a.seq))
-        } else None
+          extra(a)(typeId, (a.time + nx.time) / 2,
+            if (typeId == TypeInterception) nx.teamId else a.teamId,
+            if (outOfPlay || offside) a.playerId else nx.playerId, BodypartFoot)
+        } else null
       }
-    }
-    // N2 rerun by id — addDribblesById (`atomic/spadl/base.py:31`)
-    val afterDribbles = stage(afterPasses) { (a, nxOpt) =>
-      nxOpt.flatMap { nx =>
-        val dx = a.end_x - nx.start_x
-        val dy = a.end_y - nx.start_y
-        val d2 = dx * dx + dy * dy
-        val cond = a.team_id == nx.team_id &&
-          nx.type_id != TypeFoul &&
-          nx.type_id != TypeShot && nx.bodypart_id != BodypartHead &&
-          d2 >= SpadlOps.MinDribbleLength * SpadlOps.MinDribbleLength &&
-          d2 <= SpadlOps.MaxDribbleLength * SpadlOps.MaxDribbleLength &&
-          nx.time_seconds - a.time_seconds < SpadlOps.MaxDribbleDuration &&
-          a.period_id == nx.period_id
-        if (cond)
-          Some(ActionRow(a.game_id, a.action_id, nx.period_id,
-            (a.time_seconds + nx.time_seconds) / 2, nx.team_id, nx.player_id,
-            a.end_x, a.end_y, nx.start_x, nx.start_y,
-            TypeDribble, ResultSuccess, BodypartFoot, a.seq))
-        else None
-      }
-    }
-    // N17 — extraFromShots (`atomic/spadl/base.py:116-166`)
-    val afterShots = stage(afterDribbles) { (a, nxOpt) =>
-      val shot = ShotlikeSet(a.type_id)
-      val goal = shot && a.result_id == ResultSuccess
-      val owngoal = a.result_id == ResultOwngoal
-      val outOfPlay = shot && nxOpt.exists(nx =>
-        (nx.type_id == TypeCornerCrossed || nx.type_id == TypeCornerShort ||
-          nx.type_id == TypeGoalkick) && nx.period_id == a.period_id)
-      if (goal || owngoal || outOfPlay) {
+      // N2 rerun by id — addDribblesById (`atomic/spadl/base.py:31`)
+      val afterDribbles = GameKernel.insertAfter(afterPasses)(SpadlOps.dribble)
+      // N17 — extraFromShots (`atomic/spadl/base.py:116-166`)
+      val afterShots = GameKernel.insertAfter(afterDribbles) { (a, nx) =>
+        val shot = ShotlikeSet(a.typeId)
+        val goal = shot && a.resultId == ResultSuccess
+        val owngoal = a.resultId == ResultOwngoal
+        val outOfPlay = shot && nx != null && nx.periodId == a.periodId &&
+          (nx.typeId == TypeCornerCrossed || nx.typeId == TypeCornerShort || nx.typeId == TypeGoalkick)
         // mask order (`base.py:157-161`): out < goal < owngoal
-        val typeId = if (owngoal) TypeOwngoal else if (goal) TypeGoal else TypeOut
-        Some(ActionRow(a.game_id, a.action_id, a.period_id, a.time_seconds,
-          a.team_id, a.player_id, a.end_x, a.end_y, a.end_x, a.end_y,
-          typeId, -1, a.bodypart_id, a.seq))
-      } else None
-    }
-    // N18 — extraFromFouls (`atomic/spadl/base.py:169-197`)
-    stage(afterShots) { (a, _) =>
-      val yellow = a.result_id == ResultYellow
-      val red = a.result_id == ResultRed
-      if (yellow || red)
-        Some(ActionRow(a.game_id, a.action_id, a.period_id, a.time_seconds,
-          a.team_id, a.player_id, a.end_x, a.end_y, a.end_x, a.end_y,
-          if (red) TypeRedCard else TypeYellowCard, -1, a.bodypart_id, a.seq))
-      else None
+        if (goal || owngoal || outOfPlay)
+          extra(a)(if (owngoal) TypeOwngoal else if (goal) TypeGoal else TypeOut)
+        else null
+      }
+      // N18 — extraFromFouls (`atomic/spadl/base.py:169-197`)
+      GameKernel.insertAfter(afterShots) { (a, _) =>
+        if (a.resultId == ResultYellow || a.resultId == ResultRed)
+          extra(a)(if (a.resultId == ResultRed) TypeRedCard else TypeYellowCard)
+        else null
+      }
     }
   }
 
-  /** Full SPADL → Atomic-SPADL conversion: the typed per-game scan (one
-    * co-locating shuffle + one linear in-memory pass — the
-    * SessionEngine.runBatch pattern, which A/B-measured ~2× faster than the
-    * window-chain form at 20× replication) followed by the map-only column
-    * conversion. Value-identical to [[convertToAtomicDeclarative]]
-    * (spec-asserted; `atomic_convert_full` and every downstream atomic
-    * oracle hash the composition). */
-  def convertToAtomic(actions: DataFrame): DataFrame = {
-    val spark = actions.sparkSession
-    import spark.implicits._
-    val atomic = actions
-      .select(col("game_id"), col("action_id"), col("period_id"),
-        col("time_seconds"), col("team_id"), col("player_id"), col("start_x"),
-        col("start_y"), col("end_x"), col("end_y"), col("type_id"),
-        col("result_id"), col("bodypart_id"), col("seq"))
-      .as[ActionRow]
-      .groupByKey(_.game_id)
-      .flatMapGroups((_: Long, it: Iterator[ActionRow]) =>
-        processAtomicGame(it.toIndexedSeq).iterator)
-      .toDF()
-    convertColumns(atomic)
-  }
+  /** Full SPADL → Atomic-SPADL conversion: [[AtomicKernel]] as one
+    * [[PerGameScan]], then the map-only column conversion. Value-identical
+    * to [[convertToAtomicDeclarative]] (spec-asserted; `atomic_convert_full`
+    * and every downstream atomic oracle hash the composition). */
+  def convertToAtomic(actions: DataFrame): DataFrame =
+    convertColumns(PerGameScan(actions, AtomicKernel))
 }

@@ -1,11 +1,16 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
+import graft.core.Act
+import graft.core.Act._
 import graft.core.Spadl._
 import graft.core.SynActions.{W, Wg}
+import graft.vaep.Labels
 
 /** Batch (window-function) formulation of the SPADL normalizer operators.
   *
@@ -13,9 +18,9 @@ import graft.core.SynActions.{W, Wg}
   * assignment over one in-memory game (`socceraction/spadl/base.py`). Here
   * each is a declarative per-game window transform: Catalyst plans ONE
   * exchange on `game_id` (all window specs share the partitioning) and the
-  * stencils run inside whole-stage codegen. The streaming engine
-  * (graft.streaming.SessionEngine) reuses the same semantics in a single
-  * ordered per-game pass.
+  * stencils run inside whole-stage codegen. These window forms are the
+  * reference the `spadl_*` oracles gate; the converters' shared tail runs
+  * them as ONE ordered per-game pass instead ([[normalize]]).
   */
 object SpadlOps {
 
@@ -33,11 +38,9 @@ object SpadlOps {
     * left-to-right. Reference `socceraction/spadl/base.py:23-30`. */
   def fixDirectionOfPlay(actions: DataFrame, homeTeamId: Column): DataFrame = {
     val away = col("team_id") =!= homeTeamId
-    actions
-      .withColumn("start_x", when(away, lit(FieldLength) - col("start_x")).otherwise(col("start_x")))
-      .withColumn("end_x", when(away, lit(FieldLength) - col("end_x")).otherwise(col("end_x")))
-      .withColumn("start_y", when(away, lit(FieldWidth) - col("start_y")).otherwise(col("start_y")))
-      .withColumn("end_y", when(away, lit(FieldWidth) - col("end_y")).otherwise(col("end_y")))
+    def mirror(c: String, size: Double) = c -> when(away, lit(size) - col(c)).otherwise(col(c))
+    actions.withColumns(ListMap(mirror("start_x", FieldLength), mirror("end_x", FieldLength),
+      mirror("start_y", FieldWidth), mirror("end_y", FieldWidth)))
   }
 
   /** P17/J1 — denormalize type/result/bodypart names via the three dimension
@@ -64,26 +67,16 @@ object SpadlOps {
     * `base.py:46-48`); then resort and resequence `action_id`.
     * Reference `socceraction/spadl/base.py:38-91`.
     *
-    * Formulated as: project each row plus its lead-1 neighbor, emit the
-    * conditional dribble rows, union with the base rows, and resequence with
-    * `row_number` over (period_id, fractional action_id) — the explicit
-    * tiebreaker replaces the reference's interleave-by-`action_id + 0.1`
-    * sort. One window pass + one union; no extra shuffle (both sides keep
-    * the game_id partitioning under AQE).
+    * Formulated as one lead-window projection and one [[interleave]]
+    * stage, with no extra shuffle. `w` orders each game's neighbours; the
+    * atomic chain re-runs this by (period, action_id).
     */
-  def addDribbles(actions: DataFrame): DataFrame = {
+  def addDribbles(actions: DataFrame, w: WindowSpec = Wg): DataFrame = {
     // pandas shift(-1, fill_value=0) gives the last row an all-zero neighbor;
     // period_id 0 never matches a real period so the last row emits nothing —
     // a null lead here is equivalent (all conditions null-safe false).
-    val nx = actions
-      .withColumn("nx_team_id", lead("team_id", 1).over(Wg))
-      .withColumn("nx_player_id", lead("player_id", 1).over(Wg))
-      .withColumn("nx_period_id", lead("period_id", 1).over(Wg))
-      .withColumn("nx_time_seconds", lead("time_seconds", 1).over(Wg))
-      .withColumn("nx_start_x", lead("start_x", 1).over(Wg))
-      .withColumn("nx_start_y", lead("start_y", 1).over(Wg))
-      .withColumn("nx_type_id", lead("type_id", 1).over(Wg))
-      .withColumn("nx_bodypart_id", lead("bodypart_id", 1).over(Wg))
+    val nx = withNext(actions, w, "team_id", "player_id", "period_id", "time_seconds",
+      "start_x", "start_y", "type_id", "bodypart_id")
     val dxc = col("end_x") - col("nx_start_x")
     val dyc = col("end_y") - col("nx_start_y")
     val d2 = dxc * dxc + dyc * dyc
@@ -94,19 +87,6 @@ object SpadlOps {
       (d2 <= MaxDribbleLength * MaxDribbleLength) &&
       (col("nx_time_seconds") - col("time_seconds") < MaxDribbleDuration) &&
       (col("period_id") === col("nx_period_id"))
-    // PLAN SHAPE: emit base-plus-conditional-dribble as a 1-or-2 element
-    // array and explode — ONE pass over one lineage. The union formulation
-    // (base ∪ extras, both derived from `actions`) evaluates the upstream
-    // chain TWICE per insertion stage; chained stages double per stage
-    // (the atomic chain hit 16 scans). Values are identical: same row
-    // multiset, and the (period_id, aid_frac) resequencing key is a total
-    // order (unique action_id per game), so row_number assigns identically.
-    val base = struct(
-      col("period_id"),
-      col("action_id").cast("double").as("aid_frac"),
-      col("time_seconds"), col("team_id"), col("player_id"),
-      col("start_x"), col("start_y"), col("end_x"), col("end_y"),
-      col("type_id"), col("result_id"), col("bodypart_id"), col("seq"))
     val dribble = struct(
       col("nx_period_id").cast("int").as("period_id"),
       (col("action_id").cast("double") + 0.1).as("aid_frac"),
@@ -119,17 +99,40 @@ object SpadlOps {
       lit(ResultSuccess).as("result_id"),
       lit(BodypartFoot).as("bodypart_id"),
       col("seq"))
-    val exploded = nx
-      .select(col("game_id"),
-        explode(when(cond, array(base, dribble)).otherwise(array(base))).as("r"))
-      .select(col("game_id"), col("r.*"))
+    interleave(nx, cond, dribble)
+  }
+
+  /** `actions` plus `nx_<c>` := lead(c, 1) over `w` for each of `cols`, in
+    * one projection. */
+  private[operators] def withNext(actions: DataFrame, w: WindowSpec, cols: String*): DataFrame =
+    actions.withColumns(ListMap(cols.map(c => s"nx_$c" -> lead(c, 1).over(w)): _*))
+
+  /** One insertion stage: per row emit [base] or [base, extra] (`extra` an
+    * interleave struct with aid_frac = action_id + 0.1), explode, renumber
+    * per game in (period, aid_frac) order: the reference's "append with
+    * action_id + 0.1, stable sort, renumber". Output: `game_id` and the
+    * [[Act]] columns.
+    *
+    * PLAN SHAPE: the 1-or-2 element array is ONE pass over one lineage.
+    * The union formulation (base ∪ extras, both derived from the input)
+    * evaluates the upstream chain TWICE per insertion stage; chained stages
+    * double per stage (the atomic chain hit 16 scans). Values are
+    * identical: same row multiset, and the (period_id, aid_frac)
+    * resequencing key is a total order (unique action_id per game), so
+    * row_number assigns identically. */
+  private[operators] def interleave(withNx: DataFrame, cond: Column, extra: Column): DataFrame = {
+    val base = struct(
+      col("period_id"),
+      col("action_id").cast("double").as("aid_frac"),
+      col("time_seconds"), col("team_id"), col("player_id"),
+      col("start_x"), col("start_y"), col("end_x"), col("end_y"),
+      col("type_id"), col("result_id"), col("bodypart_id"), col("seq"))
     val wReseq = Window.partitionBy("game_id").orderBy("period_id", "aid_frac")
-    exploded
+    withNx
+      .select(col("game_id"), explode(when(cond, array(base, extra)).otherwise(array(base))).as("r"))
+      .select(col("game_id"), col("r.*"))
       .withColumn("action_id", row_number().over(wReseq).cast("long") - 1)
-      .drop("aid_frac")
-      .select("game_id", "action_id", "period_id", "time_seconds", "team_id",
-        "player_id", "start_x", "start_y", "end_x", "end_y", "type_id",
-        "result_id", "bodypart_id", "seq")
+      .select(("game_id" +: Act.Fields.map(_._1)).map(col): _*)
   }
 
   /** N6 (Opta) — an interception NOT followed by a same-team action is
@@ -183,17 +186,63 @@ object SpadlOps {
   def resequence(actions: DataFrame): DataFrame =
     actions.withColumn("action_id", row_number().over(Wg).cast("long") - 1)
 
-  /** The batch normalizer+labeler: clearance repair → resequence → dribble
-    * synthesis → k=10 lookahead labels, as ONE declarative window chain.
-    * Semantically identical to the stateful scan
-    * (graft.streaming.SessionEngine.processGame — cross-checked by the
-    * stream_cep_batch oracle), but runs entirely in Tungsten rows and
-    * whole-stage codegen: no per-row JVM objects, so it scales with memory
-    * bandwidth instead of allocator throughput. All window specs share the
-    * game_id partitioning — Catalyst plans one exchange. */
-  def normalizeAndLabel(actions: DataFrame, nrActions: Int = 10): DataFrame = {
-    import graft.vaep.Labels
-    Labels.concedes(Labels.scores(
-      addDribbles(resequence(fixClearances(actions))), nrActions), nrActions)
+  private val DribbleFrom = bits(TeamId, EndX, EndY, Time, PeriodId)
+  private val DribbleTo = bits(TeamId, TypeId, BodypartId, StartX, StartY, Time, PeriodId)
+
+  /** N2 — the dribble [[addDribbles]] synthesizes between `a` and its
+    * successor `nx` (null: none), or null. Any null operand makes the
+    * window form's condition null, so it emits no dribble either. */
+  def dribble(a: Act, nx: Act): Act = {
+    if (nx == null || !a.has(DribbleFrom) || !nx.has(DribbleTo)) return null
+    val dx = a.endX - nx.startX
+    val dy = a.endY - nx.startY
+    val d2 = dx * dx + dy * dy
+    if (a.teamId == nx.teamId && nx.typeId != TypeFoul && nx.typeId != TypeShot &&
+        nx.bodypartId != BodypartHead &&
+        d2 >= MinDribbleLength * MinDribbleLength && d2 <= MaxDribbleLength * MaxDribbleLength &&
+        nx.time - a.time < MaxDribbleDuration && a.periodId == nx.periodId)
+      new Act(a.actionId, nx.periodId, (a.time + nx.time) / 2, nx.teamId, nx.playerId,
+        a.endX, a.endY, nx.startX, nx.startY, TypeDribble, ResultSuccess, BodypartFoot, a.seq,
+        (nx.nulls & (1 << PlayerId)) | (a.nulls & (1 << SeqNo)))
+    else null
   }
+
+  /** The per-game form of [[fixClearances]] → [[fixInterceptions]] (Opta
+    * only) → [[resequence]] → [[addDribbles]], then, when `nrActions > 0`,
+    * the `Labels.scores`/`Labels.concedes` lookahead over `nrActions`.
+    * Every step keeps the window forms' null semantics. */
+  final case class NormalizeKernel(interceptions: Boolean, nrActions: Int) extends GameKernel {
+    val reads: Seq[Int] = PeriodId to SeqNo
+    val order: Seq[Int] = Seq(PeriodId, Time, SeqNo)
+    def labels: Boolean = nrActions > 0
+
+    def run(game: Array[Act]): Array[Act] = {
+      var i = 0
+      while (i < game.length) {
+        val a = game(i)
+        val nx = if (i + 1 < game.length) game(i + 1) else null
+        val known = a.has(1 << TypeId)
+        // N1 — end := coalesce(lead(start), end)
+        if (known && a.typeId == TypeClearance && nx != null) {
+          if (nx.has(1 << StartX)) { a.endX = nx.startX; a.nulls &= ~(1 << EndX) }
+          if (nx.has(1 << StartY)) { a.endY = nx.startY; a.nulls &= ~(1 << EndY) }
+        }
+        // N6 — reads team ids only, which N1 leaves alone
+        if (interceptions && known && a.typeId == TypeInterception && !a.sameTeam(nx)) {
+          a.resultId = ResultFail
+          a.nulls &= ~(1 << ResultId)
+        }
+        i += 1
+      }
+      val out = GameKernel.insertAfter(game)(dribble)
+      if (labels) Labels.scan(out, nrActions)
+      out
+    }
+  }
+
+  /** The converters' shared normalizer tail as one [[PerGameScan]]:
+    * [[fixClearances]] → [[fixInterceptions]] (when `interceptions`) →
+    * [[resequence]] → [[addDribbles]]. */
+  def normalize(actions: DataFrame, interceptions: Boolean = false): DataFrame =
+    PerGameScan(actions, NormalizeKernel(interceptions, nrActions = 0))
 }

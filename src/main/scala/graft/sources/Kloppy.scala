@@ -144,6 +144,6 @@ object Kloppy {
       col("arb").getField("bodypart_id").as("bodypart_id"),
       col("seq"))
       .filter(col("type_id") =!= TypeNonAction)
-    SpadlOps.addDribbles(SpadlOps.resequence(SpadlOps.fixClearances(actions)))
+    SpadlOps.normalize(actions)
   }
 }

@@ -160,9 +160,6 @@ object Opta {
       .drop("new_end_x", "new_end_y")
       .withColumn("type_id", when(owngoal, TypeBadTouch).otherwise(col("type_id")))
 
-    val directed = SpadlOps.fixDirectionOfPlay(owngoals, homeTeamId)
-    val cleared = SpadlOps.fixClearances(directed)
-    val intercepted = SpadlOps.fixInterceptions(cleared)
-    SpadlOps.addDribbles(SpadlOps.resequence(intercepted))
+    SpadlOps.normalize(SpadlOps.fixDirectionOfPlay(owngoals, homeTeamId), interceptions = true)
   }
 }

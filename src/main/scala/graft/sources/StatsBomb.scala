@@ -253,8 +253,9 @@ object StatsBomb {
   /** Full conversion: interception split → extra-bag parse → dispatch →
     * coordinates/time → non_action filter → direction fix → clearance fix →
     * resequence → dribble synthesis (`statsbomb.py:17-120`). One shuffle
-    * total: the dispatch and coordinate math are map-only; every window in
-    * the normalizer chain shares the game_id partitioning. */
+    * total: the dispatch and coordinate math are map-only; the fidelity
+    * window and the per-game normalizer scan share the game_id
+    * partitioning. */
   def convertToActions(rawEvents: DataFrame, homeTeamId: Column): DataFrame = {
     val withSplit = insertInterceptionPasses(rawEvents, from_json(col("extra"), extraSchema))
     // parse the extra bag ONCE into a materialized struct column: the
@@ -301,8 +302,6 @@ object StatsBomb {
       col("seq"))
       .filter(col("type_id") =!= TypeNonAction)
 
-    val directed = SpadlOps.fixDirectionOfPlay(actions, homeTeamId)
-    val repaired = SpadlOps.fixClearances(directed)
-    SpadlOps.addDribbles(SpadlOps.resequence(repaired))
+    SpadlOps.normalize(SpadlOps.fixDirectionOfPlay(actions, homeTeamId))
   }
 }

@@ -21,9 +21,10 @@ import graft.operators.SpadlOps
   * (re-sort) → offside attach → touch conversion → simulation conversion →
   * type/result/bodypart dispatch → non-action removal → coordinate fix-ups
   * (goalkick/foul/keeper-save, keeper-after-goal removal) → direction fix →
-  * clearance fix → dribble synthesis. Every step is a per-game window pass
-  * or filter; the two orderings used are raw `seq` (pre-insertion) and
-  * `(period, ms, seq2)` (post-insertion).
+  * clearance fix → dribble synthesis. Every step up to the per-game
+  * normalizer scan is a per-game window pass or filter; the two orderings
+  * used are raw `seq` (pre-insertion) and `(period, ms, seq2)`
+  * (post-insertion).
   */
 object Wyscout {
 
@@ -297,8 +298,6 @@ object Wyscout {
       .drop("dropSave")
 
     // ---- step 9: shared normalizer tail ---------------------------------
-    val directed = SpadlOps.fixDirectionOfPlay(cleaned, homeTeamId)
-    val cleared = SpadlOps.fixClearances(directed)
-    SpadlOps.addDribbles(SpadlOps.resequence(cleared))
+    SpadlOps.normalize(SpadlOps.fixDirectionOfPlay(cleaned, homeTeamId))
   }
 }

@@ -1,22 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.Spadl
+import graft.core.Act
+import graft.operators.PerGameScan
+import graft.operators.SpadlOps.NormalizeKernel
 
-/** The per-match CEP core: one ordered in-memory pass per game implementing
-  * the SPADL normalizer chain + k-lookahead labels (SURVEY.md §3.1/§2.12).
+/** The per-match CEP core: one ordered pass per game implementing the
+  * SPADL normalizer chain + k-lookahead labels (SURVEY.md §3.1/§2.12),
+  * `SpadlOps.NormalizeKernel`.
   *
-  * The SAME scan (`processGame`) backs two execution modes:
-  *   - batch: `groupByKey(gameId).flatMapGroups` — one shuffle to co-locate
-  *     each game, then a linear scan (the window formulation in SpadlOps is
-  *     the declarative equivalent; StreamingQueries cross-checks both
-  *     against the DuckDB oracle);
+  * The SAME kernel backs two execution modes:
+  *   - batch: a [[PerGameScan]] — one shuffle to co-locate each game, then
+  *     the kernel over `InternalRow`s (the window forms in SpadlOps and
+  *     Labels are the declarative equivalent; the stream_cep_batch oracle
+  *     checks the result against DuckDB);
   *   - streaming: `flatMapGroupsWithState` with per-game buffered state and
-  *     timeout-driven session close (gap = match end). Identical input
-  *     stream + watermark ⇒ identical output, resumable from checkpoint.
+  *     timeout-driven session close (gap = match end), calling the kernel
+  *     through `processGame`. Identical input stream + watermark ⇒
+  *     identical output, resumable from checkpoint.
   *
   * Scale notes: state is bounded per game (~3k actions ≈ 300 KB); keys are
   * (game_id). For long-match skew, [[SaltedSession.runBatch]] shards the
@@ -39,95 +42,33 @@ object SessionEngine {
 
   final case class GameBuffer(actions: List[ActionRow], maxEventMs: Long)
 
-  /** Ordered per-game pass: stable sort → clearance repair → resequence →
-    * dribble synthesis (fractional interleave) → resequence → k=10
-    * lookahead labels. Mirrors SpadlOps/Labels exactly. */
+  /** One game's ordered pass, in memory: the streaming modes' call into the
+    * kernel [[runBatch]] runs — sort → clearance repair → resequence →
+    * dribble synthesis → k = `nrActions` lookahead labels. */
   def processGame(rows: Iterable[ActionRow], nrActions: Int = 10): IndexedSeq[ValuedAction] = {
-    val sorted = rows.toIndexedSeq.sortBy(a => (a.period_id, a.time_seconds, a.seq))
-    if (sorted.isEmpty) return IndexedSeq.empty
-
-    // N1 — clearance end := next start (last row keeps own)
-    val cleared = sorted.zipWithIndex.map { case (a, i) =>
-      if (a.type_id == Spadl.TypeClearance && i + 1 < sorted.length)
-        a.copy(end_x = sorted(i + 1).start_x, end_y = sorted(i + 1).start_y)
-      else a
-    }
-    // O2 — dense ids
-    val reseq = cleared.zipWithIndex.map { case (a, i) => a.copy(action_id = i.toLong) }
-
-    // N2 — dribble synthesis between qualifying neighbors
-    val withDribbles = reseq.zipWithIndex.flatMap { case (a, i) =>
-      val frac = (a, a.action_id.toDouble)
-      if (i + 1 >= reseq.length) Seq(frac)
-      else {
-        val nx = reseq(i + 1)
-        val dx = a.end_x - nx.start_x
-        val dy = a.end_y - nx.start_y
-        val d2 = dx * dx + dy * dy
-        val cond = a.team_id == nx.team_id &&
-          nx.type_id != Spadl.TypeFoul &&
-          nx.type_id != Spadl.TypeShot && nx.bodypart_id != Spadl.BodypartHead &&
-          d2 >= 9.0 && d2 <= 3600.0 &&
-          nx.time_seconds - a.time_seconds < 10.0 &&
-          a.period_id == nx.period_id
-        if (!cond) Seq(frac)
-        else Seq(frac, (ActionRow(a.game_id, a.action_id, nx.period_id,
-          (a.time_seconds + nx.time_seconds) / 2, nx.team_id, nx.player_id,
-          a.end_x, a.end_y, nx.start_x, nx.start_y, Spadl.TypeDribble,
-          Spadl.ResultSuccess, Spadl.BodypartFoot, a.seq), a.action_id + 0.1))
-      }
-    }
-    val resorted = withDribbles.sortBy { case (a, f) => (a.period_id, f) }
-      .zipWithIndex.map { case ((a, _), i) => a.copy(action_id = i.toLong) }
-
-    // A2 — truncated-window lookahead labels (≡ the reference's
-    // replicate-last-row clamping, socceraction/vaep/labels.py:38-50)
-    def goalish(a: ActionRow) =
-      a.type_id == Spadl.TypeShot || a.type_id == Spadl.TypeShotPenalty ||
-        a.type_id == Spadl.TypeShotFreekick
-    // index-based lookahead with early exit — no per-row window slice
-    // allocation (this scan is the hot loop of the headline valuation
-    // pipeline); same truncated-window exists() semantics as before
-    resorted.zipWithIndex.map { case (a, i) =>
-      var scores = false
-      var concedes = false
-      val end = math.min(i + nrActions, resorted.length)
-      var j = i
-      while (j < end && !(scores && concedes)) {
-        val b = resorted(j)
-        if (goalish(b)) {
-          if (b.result_id == Spadl.ResultSuccess) {
-            if (b.team_id == a.team_id) scores = true else concedes = true
-          } else if (b.result_id == Spadl.ResultOwngoal) {
-            if (b.team_id == a.team_id) concedes = true else scores = true
-          }
-        }
-        j += 1
-      }
-      ValuedAction(a.game_id, a.action_id, a.period_id, a.time_seconds,
-        a.team_id, a.player_id, a.start_x, a.start_y, a.end_x, a.end_y,
-        a.type_id, a.result_id, a.bodypart_id, a.seq, scores, concedes)
-    }
+    // PerGameScanExec's input order; `+ 0.0` makes -0.0 equal 0.0, as in Spark
+    val game = rows.toArray.sortBy(r => (r.period_id, r.time_seconds + 0.0, r.seq)).map(r =>
+      new Act(r.action_id, r.period_id, r.time_seconds, r.team_id, r.player_id, r.start_x,
+        r.start_y, r.end_x, r.end_y, r.type_id, r.result_id, r.bodypart_id, r.seq))
+    NormalizeKernel(interceptions = false, nrActions).run(game).toIndexedSeq.map(a =>
+      ValuedAction(rows.head.game_id, a.actionId, a.periodId, a.time, a.teamId, a.playerId,
+        a.startX, a.startY, a.endX, a.endY, a.typeId, a.resultId, a.bodypartId, a.seq,
+        a.scores, a.concedes))
   }
 
-  /** Batch mode: one co-locating shuffle, then the linear scan per game. */
-  def runBatch(actions: DataFrame): DataFrame = {
-    val spark = actions.sparkSession
-    import spark.implicits._
-    actions
-      .select(col("game_id"), col("action_id"), col("period_id"),
-        col("time_seconds"), col("team_id"), col("player_id"), col("start_x"),
-        col("start_y"), col("end_x"), col("end_y"), col("type_id"),
-        col("result_id"), col("bodypart_id"), col("seq"))
-      .as[ActionRow]
-      .groupByKey(_.game_id)
-      // toIndexedSeq: one materialization (processGame indexes it), not the
-      // List-then-Vector double copy of toSeq
-      .flatMapGroups((_: Long, it: Iterator[ActionRow]) => processGame(it.toIndexedSeq).iterator)
-      .toDF()
-  }
+  /** Batch mode: the kernel as one [[PerGameScan]] — one exchange on
+    * `game_id` and one sort, and the output keeps that partitioning. */
+  def runBatch(actions: DataFrame): DataFrame =
+    PerGameScan(actions, NormalizeKernel(interceptions = false, nrActions = 10))
 
   val SessionGapMs: Long = 30 * 60 * 1000L
+
+  /** A closed session: the game's whole output, once; the state is dropped. */
+  private def close(state: GroupState[GameBuffer]): Iterator[ValuedAction] = {
+    val out = state.getOption.map(b => processGame(b.actions)).getOrElse(IndexedSeq.empty)
+    state.remove()
+    out.iterator
+  }
 
   final case class TimedAction(eventTime: java.sql.Timestamp, action: ActionRow)
 
@@ -147,11 +88,8 @@ object SessionEngine {
       .flatMapGroupsWithState[GameBuffer, ValuedAction](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (gameId: Long, rows: Iterator[TimedAction], state: GroupState[GameBuffer]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(b => processGame(b.actions)).getOrElse(IndexedSeq.empty)
-            state.remove()
-            out.iterator
-          } else {
+          if (state.hasTimedOut) close(state)
+          else {
             val batch = rows.toList
             val prev = state.getOption.getOrElse(GameBuffer(Nil, 0L))
             val maxMs = (prev.maxEventMs +: batch.map(_.eventTime.getTime)).max
@@ -176,14 +114,10 @@ object SessionEngine {
       .flatMapGroupsWithState[GameBuffer, ValuedAction](
         OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
         (gameId: Long, rows: Iterator[ActionRow], state: GroupState[GameBuffer]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(b => processGame(b.actions)).getOrElse(IndexedSeq.empty)
-            state.remove()
-            out.iterator
-          } else {
+          if (state.hasTimedOut) close(state)
+          else {
             val prev = state.getOption.getOrElse(GameBuffer(Nil, 0L))
-            val buf = GameBuffer(prev.actions ++ rows.toList, prev.maxEventMs)
-            state.update(buf)
+            state.update(GameBuffer(prev.actions ++ rows.toList, prev.maxEventMs))
             state.setTimeoutDuration(gapMs)
             Iterator.empty
           }

@@ -3,6 +3,9 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Emulated Iceberg-style table: immutable parquet data files + an atomic,
@@ -59,9 +62,11 @@ final class SnapshotTable(val root: String) {
     df.write.mode("overwrite").parquet(batchDir.toString)
     val files = Files.list(batchDir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-    val spark = df.sparkSession
+    // row counts from the Parquet footers: no Spark job per file
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val counts = files.map { f =>
-      f.toString -> spark.read.parquet(f.toString).count()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HadoopPath(f.toUri), conf))
+      try f.toString -> reader.getRecordCount finally reader.close()
     }
     val v = currentVersion.getOrElse(-1L) + 1
     val manifest =

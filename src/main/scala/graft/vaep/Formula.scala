@@ -1,5 +1,7 @@
 package graft.vaep
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -44,9 +46,9 @@ object Formula {
       .when(tooLong, 0.0)
       .otherwise(when(sameTeam, prev(pc)).otherwise(prev(ps)))
 
-    actions
-      .withColumn("offensive_value", ps - prevScores)
-      .withColumn("defensive_value", -(pc - prevConcedes))
-      .withColumn("vaep_value", col("offensive_value") + col("defensive_value"))
+    val offensive = ps - prevScores
+    val defensive = -(pc - prevConcedes)
+    actions.withColumns(ListMap("offensive_value" -> offensive, "defensive_value" -> defensive,
+      "vaep_value" -> (offensive + defensive)))
   }
 }

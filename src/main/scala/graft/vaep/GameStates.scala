@@ -1,5 +1,7 @@
 package graft.vaep
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,11 +31,9 @@ object GameStates {
 
   def withStates(actions: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "the game state should include at least one preceding action")
-    (1 until k).foldLeft(actions) { (df, i) =>
-      StateFields.foldLeft(df) { (d, f) =>
-        d.withColumn(st(f, i), coalesce(lag(f, i).over(W), first(f).over(W)))
-      }
-    }
+    // one projection: each chained withColumn would re-analyse the whole plan
+    actions.withColumns(ListMap((for (i <- 1 until k; f <- StateFields)
+      yield st(f, i) -> coalesce(lag(f, i).over(W), first(f).over(W))): _*))
   }
 
   /** P16 — mirror all state actions' coordinates when the *acting* (a0)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Spadl
+import graft.core.{Act, Spadl}
 
 /** A2 — VAEP lookahead labels.
   *
@@ -56,6 +56,31 @@ object Labels {
     actions.withColumn("concedes",
       (max(ogI).over(wTeam) > 0) ||
         (sum(goalI).over(wGame) - sum(goalI).over(wTeam) > 0))
+  }
+
+  /** [[scores]] and [[concedes]] over one game's actions in action_id
+    * order (`SpadlOps.NormalizeKernel`'s last step): `scores` (`concedes`)
+    * is set when the action or one of its `nrActions − 1` successors is a
+    * goal (an own goal) by the acting team or an own goal (a goal) by
+    * another. Team equality is null-safe, as the (game_id, team_id) window
+    * partitions are. Index-based with an early exit: this is the hot loop
+    * of the headline valuation job. */
+  def scan(game: Array[Act], nrActions: Int): Unit = {
+    val typed = Act.bits(Act.TypeId, Act.ResultId)
+    for (i <- game.indices) {
+      val a = game(i)
+      var j = i
+      while (j < math.min(i + nrActions, game.length) && !(a.scores && a.concedes)) {
+        val b = game(j)
+        if (b.has(typed) && (b.typeId == Spadl.TypeShot || b.typeId == Spadl.TypeShotPenalty ||
+            b.typeId == Spadl.TypeShotFreekick)) {
+          val own = a.sameTeam(b)
+          if (b.resultId == Spadl.ResultSuccess) { if (own) a.scores = true else a.concedes = true }
+          else if (b.resultId == Spadl.ResultOwngoal) { if (own) a.concedes = true else a.scores = true }
+        }
+        j += 1
+      }
+    }
   }
 
   /** xG target — the action itself is a scored goal.

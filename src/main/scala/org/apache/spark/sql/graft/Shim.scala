@@ -1,16 +1,26 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 
 /** Bridge between graft's custom Catalyst expressions and the public
   * `Column` API. Spark 4 made `Column` a ColumnNode wrapper and scoped the
   * Expression↔Column converters `private[sql]`; this object lives inside
-  * `org.apache.spark.sql` to re-export exactly the two conversions the
-  * library needs (the standard extension-library pattern).
+  * `org.apache.spark.sql` to re-export exactly the conversions the
+  * library needs (the standard extension-library pattern), plus the
+  * `Dataset.ofRows` factory that wraps a custom logical node as a
+  * DataFrame.
   */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The analyzed logical plan of `df`. */
+  def plan(df: DataFrame): LogicalPlan = df.asInstanceOf[Dataset[_]].logicalPlan
+
+  /** `plan` as a DataFrame of `like`'s session. */
+  def ofRows(like: DataFrame, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(like.sparkSession.asInstanceOf[SparkSession], plan)
 }

@@ -80,10 +80,9 @@ class SessionEngineSpec extends SparkSpec {
     import spark.implicits._
     val rows = (0 until 50).map(i => a(i, i * 3.0, (i % 3).toLong, i % 23, i % 6,
       i % 7 * 15.0, i % 5 * 13.0, i % 11 * 9.0, i % 6 * 11.0))
-    val viaSpark = SessionEngine.runBatch(rows.toDF())
-      .orderBy("action_id").collect().map(_.toString).toSeq
-    val direct = SessionEngine.processGame(rows)
-      .sortBy(_.action_id)
+    val viaSpark = SessionEngine.runBatch(rows.toDF()).orderBy("action_id").collect().toSeq
+    val direct = SessionEngine.processGame(rows).sortBy(_.action_id).toDF().collect().toSeq
     assert(viaSpark.size == direct.size)
+    assert(viaSpark == direct)
   }
 }

@@ -192,6 +192,14 @@ class StreamingSpec extends SparkSpec {
     // per-partition lineage recorded
     val lin = table.lineage(table.currentVersion.get)
     assert(lin.nonEmpty && lin.map(_._2).sum == 5L)
+
+    // a multi-file commit: one lineage entry per data file, each with the
+    // file's own row count
+    assert(table.commit((1 to 40).toDF("v").repartition(4), epochId = 2L))
+    val files = table.lineage(table.currentVersion.get)
+    assert(files.length == 4 && files.map(_._2).sum == 40L)
+    files.foreach { case (f, n) => assert(spark.read.parquet(f).count() == n, f) }
+    assert(table.totalRows == 55L && table.read(spark).count() == 55L)
   }
 
   test("checkpoint resume: restart continues without duplicating output") {
