@@ -16,9 +16,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.ScalingBench [sfDir] [nSmall] [rounds] [k]
   *        [kCorpus] [kBenchDecontam] [kCorpusDecontam]
-  * (kCorpus defaults to k·15; the decontam pair defaults to 45/20 —
-  * overhead-dominated next to the dedicated DecontamScalingBench probe,
-  * whose 150/60 sizing is the recorded §2c number.)
+  * (kCorpus defaults to k·15; the decontam pair defaults to 45/20, which
+  * is overhead-dominated — the recorded §2c number passes 150 60.)
   */
 object ScalingBench {
 
@@ -179,17 +178,16 @@ object ScalingBench {
 
   /** The one shared two-size report line (min-of-rounds throughput at each
     * size + efficiency vs ideal and vs the same-session spin ceiling) —
-    * every scaling probe, including [[DecontamScalingBench]], must emit
-    * through here so the published methodology can never diverge. */
+    * every scaling probe must emit through here so the published
+    * methodology can never diverge. */
   def reportLine(name: String, sfDir: String, n: Long, nSmall: Int, nLarge: Int,
-      ceiling: Double, small: Seq[Double], large: Seq[Double],
-      extraFields: String = ""): Unit = {
+      ceiling: Double, small: Seq[Double], large: Seq[Double]): Unit = {
     val secS = small.min
     val secL = large.min
     val thrS = n / secS
     val thrL = n / secL
     println(
-      s"""{"metric":"scaling_$name","sf":"$sfDir","rows":$n$extraFields,"cores_small":$nSmall,"sec_small":$secS,"rows_per_sec_small":$thrS,"cores_large":$nLarge,"sec_large":$secL,"rows_per_sec_large":$thrL,"speedup":${thrL / thrS},"scaling_efficiency":${(thrL / thrS) / 4.0},"cpu_spin_ceiling_speedup":$ceiling,"efficiency_vs_ceiling":${(thrL / thrS) / ceiling},"times_small":[${small.mkString(",")}],"times_large":[${large.mkString(",")}]}""")
+      s"""{"metric":"scaling_$name","sf":"$sfDir","rows":$n,"cores_small":$nSmall,"sec_small":$secS,"rows_per_sec_small":$thrS,"cores_large":$nLarge,"sec_large":$secL,"rows_per_sec_large":$thrL,"speedup":${thrL / thrS},"scaling_efficiency":${(thrL / thrS) / 4.0},"cpu_spin_ceiling_speedup":$ceiling,"efficiency_vs_ceiling":${(thrL / thrS) / ceiling},"times_small":[${small.mkString(",")}],"times_large":[${large.mkString(",")}]}""")
   }
 
   /** Raw CPU scaling ceiling: spin-loop throughput ratio at 4N vs N threads. */

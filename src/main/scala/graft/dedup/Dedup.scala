@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.text.TextOps
 
@@ -340,6 +341,10 @@ object Dedup {
     * long-running curation services should set — rounds+2 checkpoints of
     * ≤ |E|+|V| rows per invocation otherwise accumulate).
     *
+    * Ids that are not integral (strings, say) are first mapped to their
+    * rank among all ids, so propagation runs on longs and the minimum rank
+    * is the minimum id; the labels are mapped back at the end.
+    *
     * Returns (id, comp) for every vertex that appears in `edges`.
     */
   def connectedComponents(edges: DataFrame, a: String = "doc_a", b: String = "doc_b",
@@ -347,6 +352,26 @@ object Dedup {
     val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
     def persist(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
+    edges.schema(a).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => propagate(edges, a, b, maxIter, persist)
+      case idType =>
+        val ids = edges.select(col(a).as("v")).union(edges.select(col(b).as("v")))
+          .distinct().orderBy("v")
+        val ranks = persist(edges.sparkSession.createDataFrame(
+          ids.rdd.zipWithIndex.map { case (r, i) => Row(r.get(0), i) },
+          StructType(Seq(StructField("v", idType), StructField("n", LongType)))))
+        def rank(c: String, as: String) =
+          ranks.select(col("v").as(c), col("n").as(as))
+        val ranked = edges.select(col(a).as("__a"), col(b).as("__b"))
+          .join(rank("__a", "src"), "__a").join(rank("__b", "dst"), "__b")
+        propagate(ranked, "src", "dst", maxIter, persist)
+          .join(rank("id_v", "id"), "id").join(rank("comp_v", "comp"), "comp")
+          .select(col("id_v").as("id"), col("comp_v").as("comp"))
+    }
+  }
+
+  private def propagate(edges: DataFrame, a: String, b: String, maxIter: Int,
+      persist: DataFrame => DataFrame): DataFrame = {
     // materialize the symmetric edge list once — every propagation round
     // joins against it, and without this the (possibly expensive) edge
     // derivation upstream would recompute per round
@@ -363,8 +388,12 @@ object Dedup {
     // substitutes comp(comp(v)) ≤ comp(v)), so Σcomp is a strictly
     // decreasing integer potential and "Σ unchanged" ⟺ "no label moved" —
     // one tiny aggregate per round instead of the old join+isEmpty probe
-    def potential(df: DataFrame): Option[java.math.BigDecimal] =
-      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0))
+    def potential(df: DataFrame): java.math.BigDecimal = {
+      val r = df.agg(sum(col("comp").cast("decimal(38,0)")), count(lit(1))).head
+      require(!r.isNullAt(0) || r.getLong(1) == 0,
+        "connectedComponents: null label potential; convergence cannot be decided")
+      r.getDecimal(0)
+    }
     var prevPot = potential(labels)
     var converged = false
     var i = 0

@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   * not (ties would otherwise resolve by sort position, not a defined rule).
   * Skew note: one pathological key still serializes one partition in
   * [[backward]]; [[backwardBucketed]] is the hot-key path — range-bucketed
-  * ts within each key plus a tiny boundary-stitching pass (the same
-  * stitching the salted session engine does — streaming/SaltedSession
-  * .scala).
+  * ts within each key plus a tiny boundary-stitching pass that carries
+  * each bucket's last right row into the next.
   */
 object AsofJoin {
 

@@ -22,9 +22,9 @@ import graft.operators.SpadlOps.NormalizeKernel
   *     identical output, resumable from checkpoint.
   *
   * Scale notes: state is bounded per game (~3k actions ≈ 300 KB); keys are
-  * (game_id). For long-match skew, [[SaltedSession.runBatch]] shards the
-  * same semantics over (game_id, period_id) and stitches the period
-  * boundaries from O(k·periods) fragments (bit-equal, SaltedSessionSpec).
+  * (game_id). A long game runs as one task of the same scan: a 2M-action
+  * game took 5.6–7.1 s on 4 cores, where a (game_id, period)-salted scan
+  * with boundary stitching took 14.0–15.6 s and was removed (CHANGES.md).
   */
 object SessionEngine {
 

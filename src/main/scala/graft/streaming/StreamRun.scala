@@ -29,6 +29,14 @@ object StreamRun {
   def tempDir(prefix: String): String =
     Files.createTempDirectory(root, prefix).toString
 
+  /** Bytes under `inputDir` (a plain path or any Hadoop filesystem URI),
+    * or None when the path cannot be read. */
+  private[graft] def inputBytes(spark: org.apache.spark.sql.SparkSession,
+      inputDir: String): Option[Long] = scala.util.Try {
+    val path = new org.apache.hadoop.fs.Path(inputDir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(path).getLength
+  }.toOption
+
   /** Scale-adaptive shuffle/state parallelism for a run-to-completion
     * streaming query over a file source rooted at `inputDir`: every
     * stateful operator materializes one state-store instance (and the
@@ -37,17 +45,16 @@ object StreamRun {
     * ~32× the state/checkpoint/sink I/O their volume warrants. Target one
     * partition per 64 MB of resting input, clamped to [1, session shuffle
     * partitions] — a 100 TB stream keeps full parallelism, a small one
-    * collapses to few stores. The session conf is restored afterwards, so
-    * surrounding batch queries are untouched. */
+    * collapses to few stores. The input is sized through its Hadoop
+    * filesystem; when that fails, the session value stands. The session
+    * conf is restored afterwards, so surrounding batch queries are
+    * untouched. */
   def withAdaptiveStateParallelism[A](spark: org.apache.spark.sql.SparkSession,
       inputDir: String)(body: => A): A = {
-    def sizeOf(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-      else f.length()
-    val bytes = sizeOf(new java.io.File(inputDir))
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    val target = math.max(1L, bytes / (64L << 20)).min(prev.toLong.max(1L)).toInt
+    val target = inputBytes(spark, inputDir).fold(prev.toLong)(bytes =>
+      math.max(1L, bytes / (64L << 20)).min(prev.toLong.max(1L)))
     spark.conf.set(key, target.toString)
     try body finally spark.conf.set(key, prev)
   }

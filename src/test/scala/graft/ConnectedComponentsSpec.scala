@@ -98,4 +98,19 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(out == Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L),
       (7L, 7L, 2L), (8L, 7L, 2L)))
   }
+
+  test("string ids: a 32-node path graph is one component, ANSI on and off") {
+    // lexical order differs from numeric here: the min id is "v0", and
+    // "v10" < "v2"
+    val edges = (0 until 31).map(i => (s"v$i", s"v${i + 1}")).toDF("doc_a", "doc_b")
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    try {
+      for (ansi <- Seq("true", "false")) {
+        spark.conf.set(key, ansi)
+        val cc = Dedup.connectedComponents(edges).as[(String, String)].collect().toMap
+        assert(cc.size == 32 && cc.values.toSet == Set("v0"), s"ansi=$ansi")
+      }
+    } finally spark.conf.set(key, prev)
+  }
 }

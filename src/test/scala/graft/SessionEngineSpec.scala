@@ -76,13 +76,46 @@ class SessionEngineSpec extends SparkSpec {
     }
   }
 
-  test("batch mode equals direct scan") {
+  /** Period 1 ends with a clearance whose end snaps to period 2's first
+    * start, and period 2 opens with a goal inside period 1's label windows. */
+  private val boundaryGame = Seq(
+    a(0, 0.0, 0, Spadl.TypePass, 1, 10, 10, 20, 20),
+    a(1, 5.0, 0, Spadl.TypePass, 1, 30, 20, 40, 20),
+    a(2, 9.0, 1, Spadl.TypeClearance, 1, 60, 40, 70, 40),
+    a(3, 0.0, 0, Spadl.TypePass, 1, 80, 30, 85, 30, period = 2),
+    a(4, 3.0, 0, Spadl.TypeShot, Spadl.ResultSuccess, 90, 34, 105, 34, period = 2),
+    a(5, 8.0, 1, Spadl.TypePass, 1, 50, 30, 55, 30, period = 2))
+
+  private def assertBatchEqualsDirect(rows: Seq[ActionRow]): Unit = {
     import spark.implicits._
-    val rows = (0 until 50).map(i => a(i, i * 3.0, (i % 3).toLong, i % 23, i % 6,
-      i % 7 * 15.0, i % 5 * 13.0, i % 11 * 9.0, i % 6 * 11.0))
     val viaSpark = SessionEngine.runBatch(rows.toDF()).orderBy("action_id").collect().toSeq
     val direct = SessionEngine.processGame(rows).sortBy(_.action_id).toDF().collect().toSeq
     assert(viaSpark.size == direct.size)
     assert(viaSpark == direct)
+  }
+
+  test("batch mode equals direct scan") {
+    val mixed = (0 until 50).map(i => a(i, i * 3.0, (i % 3).toLong, i % 23, i % 6,
+      i % 7 * 15.0, i % 5 * 13.0, i % 11 * 9.0, i % 6 * 11.0))
+    for (rows <- Seq(mixed, boundaryGame)) assertBatchEqualsDirect(rows)
+  }
+
+  test("skewed game: one long game of four periods equals direct scan") {
+    // 4 periods × 100 actions in a single game
+    val fourPeriods = (0 until 400).map(i => a(i, (i % 100) * 3.0, (i % 3).toLong, i % 23,
+      i % 6, i % 7 * 15.0, i % 5 * 13.0, i % 11 * 9.0, i % 6 * 11.0, period = 1 + i / 100,
+      bp = i % 3).copy(game_id = 7L, player_id = i % 11L))
+    assertBatchEqualsDirect(fourPeriods)
+  }
+
+  test("batch mode across a period boundary: clearance end and labels") {
+    import spark.implicits._
+    val out = SessionEngine.runBatch(boundaryGame.toDF()).collect()
+    val clearance = out.find(_.getAs[Int]("type_id") == Spadl.TypeClearance).get
+    assert(clearance.getAs[Double]("end_x") == 80.0) // period 2's first start
+    def period1(team: Long) = out.filter(r =>
+      r.getAs[Int]("period_id") == 1 && r.getAs[Long]("team_id") == team)
+    assert(period1(0L).nonEmpty && period1(0L).forall(_.getAs[Boolean]("scores")))
+    assert(period1(1L).nonEmpty && period1(1L).forall(_.getAs[Boolean]("concedes")))
   }
 }
