@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.MlQueries
 import graft.vaep.{FrozenGbt, VaepModel}
 
@@ -39,13 +37,7 @@ object FreezeGbt {
       else "src/main/resources/graft/vaep_gbt_frozen.txt"
     val outXg = if (args.length > 1) args(1)
       else "src/main/resources/graft/xg_gbt_frozen.txt"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Profile.session(8)
     val data = MlQueries.assembled(spark, "/root/testdata/sf0.001").cache()
     val m = VaepModel.fit(data, FeatureCols, maxIter = 5, maxDepth = 3, seed = 42L)
     val text =

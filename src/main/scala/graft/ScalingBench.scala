@@ -42,6 +42,39 @@ object ScalingBench {
     SynActions.fromEvents(rep, numGames = SynActions.NumGames * k)
   }
 
+  /** The valuation job's ten phases on `k`× replicated actions, as named
+    * actions in run order: `cep` persists the CEP output, the later phases
+    * read it and the last one drops it. */
+  def valuationPhases(spark: SparkSession, sfDir: String, k: Int): Seq[(String, () => Any)] = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.col
+    import graft.core.TokenCodec
+    import graft.vaep.Features._
+    import graft.xt.XThreat
+    import Profile.noop
+    val actions = replicatedActions(spark, sfDir, k)
+    val enc = TokenCodec.encode(actions)
+    val decoded = TokenCodec.decode(enc).withColumn("seq", col("action_id"))
+    lazy val valued = graft.streaming.SessionEngine.runBatch(decoded).persist()
+    lazy val model = XThreat.fit(valued)
+    lazy val states = graft.vaep.GameStates.withStates(withGoalscore(valued), 3)
+    def project(cs: Seq[Column]) = noop(states.select(cs: _*))
+    val (a, b) = (0 until 3, 1 until 3)
+    Seq("actions" -> (() => noop(actions)), "encode" -> (() => noop(enc)),
+      "decode" -> (() => noop(decoded)), "cep" -> (() => valued.count()),
+      "xtfit" -> (() => model), "states" -> (() => noop(states)),
+      "features" -> (() => project(Seq(col("game_id"), col("action_id"), col("scores"),
+        col("concedes"), XThreat.rateColumn(model).as("xt_value")) ++ defaultFeaturesPostGoalscore(3))),
+      "onehots" -> (() => project(a.flatMap(i =>
+        actiontypeOnehot(i) ++ resultOnehot(i) ++ bodypartOnehot(i)))),
+      "atr" -> (() => project(a.flatMap(actiontypeResultOnehot))),
+      "numeric" -> { () =>
+        project(a.flatMap(i => time(i) ++ startlocation(i) ++ endlocation(i) ++ startpolar(i) ++
+          endpolar(i) ++ movement(i)) ++ b.flatMap(i => team(i) ++ timeDelta(i) ++ spaceDelta(i)) ++ goalscore)
+        valued.unpersist(blocking = false)
+      })
+  }
+
   /** Compute-bound corpus job: MinHash signatures + SimHash values +
     * fingerprints over a k×-replicated documents table (texts perturbed per
     * replica so hashes differ). Pure hash compute + one aggregation shuffle
@@ -58,11 +91,9 @@ object ScalingBench {
       .select(explode(sequence(lit(0L), lit(k - 1L))).as("r"), col("doc_id"), col("text"))
       .select((col("doc_id") * k + col("r")).as("doc_id"),
         concat(col("text"), lit(" v"), col("r")).as("text"))
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    noop(Dedup.minhashSignatures(docs))
-    noop(Dedup.simhashValues(docs))
-    noop(docs.select(col("doc_id"), TextOps.polyHash(col("text")).as("ph"),
+    Profile.noop(Dedup.minhashSignatures(docs))
+    Profile.noop(Dedup.simhashValues(docs))
+    Profile.noop(docs.select(col("doc_id"), TextOps.polyHash(col("text")).as("ph"),
       TextOps.fingerprint(col("text")).as("fp")))
     val rows = docs.count()
     (rows, (System.nanoTime() - t0) / 1e9)
@@ -90,8 +121,7 @@ object ScalingBench {
         // window partition specs and change the measured plan shape
         format_string("s%d", col("doc_id") % 1).as("source"))
     val tokens = TokenPipeline.fromDocuments(docs)
-    TokenPipeline.packChunks(tokens, chunkSize = 128)
-      .write.mode("overwrite").format("noop").save()
+    Profile.noop(TokenPipeline.packChunks(tokens, chunkSize = 128))
     val rows = docs.count()
     (rows, (System.nanoTime() - t0) / 1e9)
   }
@@ -139,8 +169,7 @@ object ScalingBench {
     // prefilter was tried first and REJECTED for this regime: a
     // 10-bit/item filter over 3.5e7 hashes is a ~45 MB literal serialized
     // into every task binary — 32 concurrent tasks OOM'd a 4 GB heap.)
-    TokenPipeline.contaminatedDocs(corpus, bench, w = 8, shuffleHashJoin = true)
-      .write.mode("overwrite").format("noop").save()
+    Profile.noop(TokenPipeline.contaminatedDocs(corpus, bench, w = 8, shuffleHashJoin = true))
     val rows = corpus.count()
     (rows, (System.nanoTime() - t0) / 1e9)
   }
@@ -153,14 +182,7 @@ object ScalingBench {
   def runOnce(cores: Int, sfDir: String, k: Int, kCorpus: Int,
               kBenchDecontam: Int, kCorpusDecontam: Int)
       : (Long, Double, Long, Double, Double, Long, Double, Long, Double) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.codegen.maxFields", "1200")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Profile.session(cores)
     Bench.valuationPipeline(spark, "/root/testdata/sf0.001") // JIT/codegen warmup
     corpusJob(spark, "/root/testdata/sf0.001", 2)
     packJob(spark, "/root/testdata/sf0.001", 2)
@@ -227,10 +249,6 @@ object ScalingBench {
     val kBenchDecontam = args.lift(5).map(_.toInt).getOrElse(45)
     val kCorpusDecontam = args.lift(6).map(_.toInt).getOrElse(20)
 
-    var rows = 0L
-    var corpusRows = 0L
-    var packRows = 0L
-    var decoRows = 0L
     val results = (1 to rounds).map { r =>
       val (rs, ts, cs, tcs, tps, ps, tpk, ds, tds) =
         runOnce(nSmall, sfDir, k, kCorpus, kBenchDecontam, kCorpusDecontam)
@@ -238,14 +256,11 @@ object ScalingBench {
         runOnce(nLarge, sfDir, k, kCorpus, kBenchDecontam, kCorpusDecontam)
       require(rs == rl && cs == cl && ps == pl && ds == dl,
         s"row counts differ: $rs/$rl $cs/$cl $ps/$pl $ds/$dl")
-      rows = rs
-      corpusRows = cs
-      packRows = ps
-      decoRows = ds
       System.err.println(
         f"round $r: valuation small=$ts%.1fs large=$tl%.1fs | packed small=$tps%.1fs large=$tpl%.1fs | corpus small=$tcs%.1fs large=$tcl%.1fs | pack1src small=$tpk%.1fs large=$tpkl%.1fs | decontam small=$tds%.1fs large=$tdl%.1fs")
-      (ts, tl, tcs, tcl, tps, tpl, tpk, tpkl, tds, tdl)
+      (ts, tl, tcs, tcl, tps, tpl, tpk, tpkl, tds, tdl, (rs, cs, ps, ds))
     }
+    val (rows, corpusRows, packRows, decoRows) = results.last._11
 
     def report(name: String, n: Long, small: Seq[Double], large: Seq[Double]): Unit =
       reportLine(name, sfDir, n, nSmall, nLarge, ceiling, small, large)

@@ -238,8 +238,6 @@ object TokenPipeline {
     * join, and only HIT rows reach the per-doc aggregation — the corpus
     * itself is never shuffled. */
   def contaminatedDocs(corpus: DataFrame, benchmark: DataFrame, w: Int = 8,
-                       bloomPrefilter: Boolean = false,
-                       bloomExpectedItems: Long = 4000000L,
                        shuffleHashJoin: Boolean = false): DataFrame = {
     def wins(df: DataFrame) = df.filter(col("n_tok") >= w)
       .select(col("doc_id"),
@@ -250,43 +248,15 @@ object TokenPipeline {
     // set exceeds the broadcast budget the planner falls back to a
     // sort-merge join, and the measured scaling gap (round-5 §2c probe:
     // 0.74 of the session ceiling) was the two corpus-sized SORTS feeding
-    // it on single-box disk bandwidth. Two opt-in levers, both
-    // result-identical:
-    //  - `shuffleHashJoin`: hint the bench side SHUFFLE_HASH — both sides
-    //    still shuffle, but neither sorts (the bench side builds a
-    //    per-partition hash map; fine whenever bench/partitions fits in
-    //    memory). This is the lever for the truly-large bench regime.
-    //  - `bloomPrefilter`: drop definitely-non-matching corpus windows
-    //    MAP-SIDE before the shuffle via `bloom_filter_agg` over the bench
-    //    hashes, riding as a lazy scalar subquery. False positives only
-    //    cost extra shuffle; no false negatives. Sized at ~10 bits/item
-    //    (≈1% fpp); note the filter literal is serialized into every task
-    //    binary, so it is only sane for mid-size bench sets (≤ ~10^7
-    //    items — callers must also raise
-    //    spark.sql.optimizer.runtime.bloomFilter.maxNumBits past 64M bits
-    //    for >6.7e6 items). Both default OFF: in the broadcast regime
-    //    (eval suites of thousands of docs) the plain stats-driven
-    //    broadcast join is already optimal.
-    val corpusWins =
-      if (!bloomPrefilter) wins(corpus)
-      else {
-        // bloom_filter_agg / might_contain are optimizer-internal (not in
-        // the public function registry) — build the Catalyst expressions
-        // directly. might_contain requires its filter side to be a scalar
-        // subquery or constant; Spark 4's Dataset.scalar() keeps it lazy.
-        import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-        import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-        import org.apache.spark.sql.graft.Shim
-        val bfAgg = Shim.column(new BloomFilterAggregate(
-          Shim.expression(xxhash64(col("win_hash"))),
-          Literal(bloomExpectedItems), Literal(bloomExpectedItems * 10))
-          .toAggregateExpression())
-        val bf = benchHashes.agg(bfAgg.as("__bf")).scalar()
-        wins(corpus).filter(Shim.column(BloomFilterMightContain(
-          Shim.expression(bf), Shim.expression(xxhash64(col("win_hash"))))))
-      }
+    // it on single-box disk bandwidth. The opt-in, result-identical lever
+    // `shuffleHashJoin` hints the bench side SHUFFLE_HASH — both sides
+    // still shuffle, but neither sorts (the bench side builds a
+    // per-partition hash map; fine whenever bench/partitions fits in
+    // memory). It defaults OFF: in the broadcast regime (eval suites of
+    // thousands of docs) the plain stats-driven broadcast join is already
+    // optimal.
     val joinBench = if (shuffleHashJoin) benchHashes.hint("shuffle_hash") else benchHashes
-    corpusWins.join(joinBench, "win_hash")
+    wins(corpus).join(joinBench, "win_hash")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_hit_windows"),
         countDistinct("win_hash").as("n_distinct_hits"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
   * `org.apache.spark.sql` to re-export exactly the conversions the
   * library needs (the standard extension-library pattern), plus the
   * `Dataset.ofRows` factory that wraps a custom logical node as a
-  * DataFrame.
+  * DataFrame, and a wait on the listener bus.
   */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -23,4 +23,9 @@ object Shim {
   /** `plan` as a DataFrame of `like`'s session. */
   def ofRows(like: DataFrame, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(like.sparkSession.asInstanceOf[SparkSession], plan)
+
+  /** Blocks until every event posted so far has reached the listeners
+    * (query-execution listeners are called asynchronously). */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

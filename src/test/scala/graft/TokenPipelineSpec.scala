@@ -149,24 +149,6 @@ class TokenPipelineSpec extends SparkSpec {
     assert(out.keySet == Set("b1", "c1"))
   }
 
-  test("contaminatedDocs: Bloom prefilter path is result-identical") {
-    // Bloom false positives only add rows to the pre-join stream that the
-    // exact hash join then drops — the output must be identical, window
-    // counts included (the §3.2 prefilter for the past-broadcast regime)
-    val corpus = TokenPipeline.fromDocuments(docs(
-      ("b1", "one two three four five six seven eight nine", "s"),
-      ("c1", "zzz one two three four five six seven eight yyy", "s"),
-      ("c2", "totally different words with no shared window here at all", "s"),
-      ("c3", "short text", "s")))
-    val bench = corpus.filter($"doc_id" === "b1")
-    val plain = TokenPipeline.contaminatedDocs(corpus, bench, w = 8)
-      .orderBy("doc_id").collect().toSeq
-    val bloomed = TokenPipeline.contaminatedDocs(corpus, bench, w = 8,
-      bloomPrefilter = true, bloomExpectedItems = 1000L)
-      .orderBy("doc_id").collect().toSeq
-    assert(bloomed == plain)
-  }
-
   test("packChunks: chunk crossing a doc boundary concatenates in doc_id order") {
     val t = TokenPipeline.fromDocuments(docs(
       ("01", "a b c", "s1"), ("02", "d e f", "s1")))
