@@ -236,8 +236,7 @@ object ScalingBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nSmall = args.lift(1).map(_.toInt).getOrElse(8)
     val rounds = args.lift(2).map(_.toInt).getOrElse(3)
     val k = args.lift(3).map(_.toInt).getOrElse(20)

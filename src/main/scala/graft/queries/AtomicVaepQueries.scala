@@ -7,7 +7,7 @@ import graft.Q
 import graft.core.{SynActions, Tables}
 import graft.core.SynActions.OracleCte
 import graft.operators.AtomicOps
-import graft.vaep.AtomicVaep
+import graft.vaep.{ActionKind, AtomicVaep, Features, Formula, GameStates, Labels}
 
 /** Atomic-VAEP operator family (SURVEY.md §2.7/§2.9/§2.11 atomic variants)
   * over the full SPADL→atomic chain, oracle-checked end to end. */
@@ -28,7 +28,7 @@ object AtomicVaepQueries {
          |  CASE WHEN team_id <> game_id % 4 THEN -dx ELSE dx END AS dx,
          |  CASE WHEN team_id <> game_id % 4 THEN -dy ELSE dy END AS dy
          |FROM atomic""".stripMargin) { (s, dir) =>
-      AtomicVaep.playLeftToRight(atomic(s, dir), 1, SynActions.homeTeamId)
+      GameStates.playLeftToRight(atomic(s, dir), 1, SynActions.homeTeamId, ActionKind.Atomic)
         .select("game_id", "action_id", "seq", "x", "y", "dx", "dy")
     },
 
@@ -87,8 +87,8 @@ object AtomicVaepQueries {
          |  CASE WHEN is_a THEN score_b ELSE score_a END AS goalscore_opponent,
          |  (CASE WHEN is_a THEN score_a ELSE score_b END) - (CASE WHEN is_a THEN score_b ELSE score_a END) AS goalscore_diff
          |FROM cum""".stripMargin) { (s, dir) =>
-      atomic(s, dir).select(
-        Seq(col("game_id"), col("action_id"), col("seq")) ++ AtomicVaep.goalscore: _*)
+      atomic(s, dir).select(Seq(col("game_id"), col("action_id"), col("seq")) ++
+        Features.goalscore(ActionKind.Atomic): _*)
     },
 
     Q("atomic_vaep_labels",
@@ -106,7 +106,8 @@ object AtomicVaepQueries {
          |              RANGE BETWEEN CURRENT ROW AND 9 FOLLOWING),
          |       wg AS (PARTITION BY game_id ORDER BY action_id
          |              RANGE BETWEEN CURRENT ROW AND 9 FOLLOWING)""".stripMargin) { (s, dir) =>
-      AtomicVaep.labels(atomic(s, dir))
+      Labels.concedes(Labels.scores(atomic(s, dir), kind = ActionKind.Atomic),
+        kind = ActionKind.Atomic)
         .select("game_id", "action_id", "seq", "scores", "concedes")
     },
 
@@ -138,7 +139,7 @@ object AtomicVaepQueries {
       val withP = atomic(s, dir)
         .withColumn("scores_p", (col("seq") * 17 % 1000) / lit(1000.0))
         .withColumn("concedes_p", (col("seq") * 29 % 1000) / lit(1000.0))
-      AtomicVaep.value(withP)
+      Formula.value(withP, kind = ActionKind.Atomic)
         .select("game_id", "action_id", "seq", "offensive_value",
           "defensive_value", "vaep_value")
     })

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Q
 import graft.core.{SynActions, Tables}
 import graft.operators.AtomicOps
-import graft.vaep.{AtomicVaep, Features, GameStates, Labels, VaepModel}
+import graft.vaep.{ActionKind, AtomicVaep, Features, Formula, GameStates, Labels, VaepModel}
 
 /** M1–M4 — the full VAEP ML chain: states → features → labels → seeded GBT
   * pair → probabilities → value formula → per-action ratings. Learned-model
@@ -56,13 +56,14 @@ object MlQueries {
     * the reference's AtomicVAEP fits on. */
   def atomicAssembled(s: SparkSession, dir: String): DataFrame = {
     val atomic = AtomicOps.convertToAtomic(SynActions.fromEvents(Tables.events(s, dir)))
-    val ltr = AtomicVaep.playLeftToRight(atomic, 1, SynActions.homeTeamId)
-    val feats = AtomicVaep.location(0) ++ AtomicVaep.polar(0) ++
-      AtomicVaep.movementPolar(0) ++ AtomicVaep.direction(0) ++ AtomicVaep.goalscore
+    val ltr = GameStates.playLeftToRight(atomic, 1, SynActions.homeTeamId, ActionKind.Atomic)
+    val feats = AtomicVaep.location(0) ++ AtomicVaep.polar(0) ++ AtomicVaep.movementPolar(0) ++
+      AtomicVaep.direction(0) ++ Features.goalscore(ActionKind.Atomic)
     val withF = ltr.select(
       Seq(col("game_id"), col("action_id"), col("seq"), col("team_id"),
         col("period_id"), col("time_seconds"), col("type_id")) ++ feats: _*)
-    AtomicVaep.labels(withF)
+    Labels.concedes(Labels.scores(withF, kind = ActionKind.Atomic),
+      kind = ActionKind.Atomic)
   }
 
   /** The committed frozen GBT pair (generated once by [[graft.FreezeGbt]]). */
@@ -98,7 +99,7 @@ object MlQueries {
          |  offensive_value, defensive_value,
          |  offensive_value + defensive_value AS vaep_value
          |FROM v""".stripMargin) { (s, dir) =>
-      import graft.vaep.{Features, FrozenGbt, Formula}
+      import graft.vaep.FrozenGbt
       val acts = SynActions.fromEvents(Tables.events(s, dir))
       val withF = acts.select(
         col("*") +: (Features.startlocation(0) ++ Features.endlocation(0) ++
@@ -131,7 +132,8 @@ object MlQueries {
     Q.rowsOnly("atomic_vaep_ml_rate") { (s, dir) =>
       val data = atomicAssembled(s, dir).cache()
       val model = VaepModel.fit(data, atomicFeatureCols, maxIter = 10, maxDepth = 3, seed = 42L)
-      val rated = AtomicVaep.value(VaepModel.estimateProbabilities(model, data))
+      val rated = Formula.value(VaepModel.estimateProbabilities(model, data),
+        kind = ActionKind.Atomic)
       data.unpersist()
       rated.select("game_id", "action_id", "seq", "scores_p", "concedes_p",
         "offensive_value", "defensive_value", "vaep_value")

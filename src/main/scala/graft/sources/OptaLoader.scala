@@ -30,12 +30,14 @@ final class OptaLoader(spark: SparkSession, root: String,
       .replace("{competition_id}", competitionId)
       .replace("{season_id}", seasonId)
       .replace("{game_id}", gameId)
-    val dir = new java.io.File(root)
     val rx = java.util.regex.Pattern.compile(
       pattern.replace(".", "\\.").replace("*", ".*"))
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => rx.matcher(f.getName).matches())
-      .map(_.getPath).toSeq.sorted
+    // through the root's Hadoop filesystem, so a file:, hdfs: or s3a: URI
+    // lists like a plain path
+    val dir = new org.apache.hadoop.fs.Path(root)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+      .map(_.getPath).filter(p => rx.matcher(p.getName).matches())
+      .map(_.toString).toSeq.sorted
   }
 
   private def readJson(ps: Seq[String]): DataFrame =

@@ -1,51 +1,20 @@
 package graft.vaep
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.core.Spadl
-import graft.operators.AtomicOps
+import graft.vaep.GameStates.st
 
-/** Atomic-VAEP variant (reference `socceraction/atomic/vaep/`): operates on
-  * the atomic action frame (x, y, dx, dy; results reified as extra rows).
-  * Differences from plain VAEP, all preserved here:
-  *   - orientation negates (dx, dy) for the away team (`features.py:95-120`)
-  *   - movement features are polar with an explicit dy==0 ⇒ angle 0 repair
-  *     and a raw-value passthrough when the movement is zero-length
-  *     (`features.py:199-235`)
-  *   - goal flags are action TYPES (goal/owngoal rows), not results
-  *     (`labels.py:28-29`)
-  *   - the formula drops the 10-second phase cutoff and the penalty/corner
-  *     constants; prev-goal tests type ∈ {goal, owngoal} (`formula.py:46-58`)
+/** Atomic-VAEP feature transformers (reference
+  * `socceraction/atomic/vaep/features.py`) over the atomic action frame
+  * (x, y, dx, dy; results reified as extra rows). Movement features are
+  * polar, with the reference's dy==0 ⇒ angle 0 repair and a raw-value
+  * passthrough for zero-length movement (`features.py:199-235`). Game
+  * states, orientation, running score, labels and the value formula are the
+  * shared tail, called with [[ActionKind.Atomic]].
   */
 object AtomicVaep {
-
-  private val Wa = Window.partitionBy("game_id", "period_id").orderBy("action_id")
-  private val Wg = Window.partitionBy("game_id").orderBy("period_id", "action_id")
-
-  val StateFields: Seq[String] = Seq("team_id", "player_id", "time_seconds",
-    "x", "y", "dx", "dy", "type_id", "bodypart_id", "period_id")
-
-  def st(f: String, i: Int): String = if (i == 0) f else s"${f}__a$i"
-
-  def withStates(atomic: DataFrame, k: Int): DataFrame =
-    (1 until k).foldLeft(atomic) { (df, i) =>
-      StateFields.foldLeft(df) { (d, f) =>
-        d.withColumn(st(f, i), coalesce(lag(f, i).over(Wa), first(f).over(Wa)))
-      }
-    }
-
-  /** P16 (atomic) — mirror x/y and negate dx/dy for away-team states. */
-  def playLeftToRight(states: DataFrame, k: Int, homeTeamId: Column): DataFrame = {
-    val away = col("team_id") =!= homeTeamId
-    (0 until k).foldLeft(states) { (df, i) =>
-      df.withColumn(st("x", i), when(away, lit(Spadl.FieldLength) - col(st("x", i))).otherwise(col(st("x", i))))
-        .withColumn(st("y", i), when(away, lit(Spadl.FieldWidth) - col(st("y", i))).otherwise(col(st("y", i))))
-        .withColumn(st("dx", i), when(away, -col(st("dx", i))).otherwise(col(st("dx", i))))
-        .withColumn(st("dy", i), when(away, -col(st("dy", i))).otherwise(col(st("dy", i))))
-    }
-  }
 
   /** DELIBERATE DEVIATION from the reference: socceraction's atomic
     * actiontypes list contains "interception" twice (ids 10 and 24,
@@ -90,59 +59,5 @@ object AtomicVaep {
     Seq(
       when(totald > 0.0, dx / totald).otherwise(dx).as(s"dx_a$i"),
       when(totald > 0.0, dy / totald).otherwise(dy).as(s"dy_a$i"))
-  }
-
-  def goalFlag: Column = col("type_id") === AtomicOps.TypeGoal
-  def owngoalFlag: Column = col("type_id") === AtomicOps.TypeOwngoal
-
-  /** G6 (atomic) — running score from goal/owngoal rows. */
-  def goalscore: Seq[Column] = {
-    val teamA = first("team_id").over(Wg)
-    val isA = col("team_id") === teamA
-    val goalA = when((goalFlag && isA) || (owngoalFlag && !isA), 1).otherwise(0)
-    val goalB = when((goalFlag && !isA) || (owngoalFlag && isA), 1).otherwise(0)
-    val wPrev = Wg.rowsBetween(Window.unboundedPreceding, -1)
-    val scoreA = coalesce(sum(goalA).over(wPrev), lit(0L))
-    val scoreB = coalesce(sum(goalB).over(wPrev), lit(0L))
-    Seq(
-      when(isA, scoreA).otherwise(scoreB).as("goalscore_team"),
-      when(isA, scoreB).otherwise(scoreA).as("goalscore_opponent"),
-      (when(isA, scoreA).otherwise(scoreB) - when(isA, scoreB).otherwise(scoreA))
-        .as("goalscore_diff"))
-  }
-
-  /** A2 (atomic) — lookahead labels over goal/owngoal TYPE rows, same
-    * range-frame formulation as vaep.Labels. */
-  def labels(atomic: DataFrame, nrActions: Int = 10): DataFrame = {
-    val wTeam = Window.partitionBy("game_id", "team_id").orderBy("action_id")
-      .rangeBetween(0, nrActions - 1)
-    val wGame = Window.partitionBy("game_id").orderBy("action_id")
-      .rangeBetween(0, nrActions - 1)
-    val goalI = when(goalFlag, 1).otherwise(0)
-    val ogI = when(owngoalFlag, 1).otherwise(0)
-    atomic
-      .withColumn("scores",
-        (max(goalI).over(wTeam) > 0) || (sum(ogI).over(wGame) - sum(ogI).over(wTeam) > 0))
-      .withColumn("concedes",
-        (max(ogI).over(wTeam) > 0) || (sum(goalI).over(wGame) - sum(goalI).over(wTeam) > 0))
-  }
-
-  /** §2.11 (atomic) — no phase cutoff, no penalty/corner constants;
-    * prev-goal on type ∈ {goal, owngoal}. */
-  def value(atomic: DataFrame, scoresCol: String = "scores_p",
-            concedesCol: String = "concedes_p"): DataFrame = {
-    def prev(c: Column): Column = coalesce(lag(c, 1).over(Wg), c)
-    val ps = col(scoresCol)
-    val pc = col(concedesCol)
-    val sameTeam = prev(col("team_id")) === col("team_id")
-    val prevGoal = prev(col("type_id")).isin(AtomicOps.TypeGoal, AtomicOps.TypeOwngoal)
-    val prevScores = when(prevGoal, 0.0)
-      .otherwise(when(sameTeam, prev(ps)).otherwise(prev(pc)))
-    val prevConcedes = when(prevGoal, 0.0)
-      .otherwise(when(sameTeam, prev(pc)).otherwise(prev(ps)))
-    atomic
-      .withColumn("offensive_value", ps - prevScores)
-      .withColumn("defensive_value", -(pc - prevConcedes))
-      .withColumn("vaep_value", col("offensive_value") + col("defensive_value"))
   }
 }

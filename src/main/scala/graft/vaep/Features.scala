@@ -196,15 +196,16 @@ object Features {
     * `vaep/features.py:702-736` (cumsum − current = sum over the strictly
     * preceding frame).
     */
-  def goalscore: Seq[Column] = {
-    val goalish = col("type_id").isin(Spadl.TypeShot, Spadl.TypeShotPenalty, Spadl.TypeShotFreekick)
-    val goal = goalish && col("result_id") === Spadl.ResultSuccess
-    val owngoal = goalish && col("result_id") === Spadl.ResultOwngoal
-    val teamA = first("team_id").over(Wg)
+  def goalscore: Seq[Column] = goalscore(ActionKind.Standard)
+
+  /** [[goalscore]] with the kind's goal predicates, in its game order. */
+  def goalscore(kind: ActionKind): Seq[Column] = {
+    val (goal, owngoal) = (kind.goal, kind.owngoal)
+    val teamA = first("team_id").over(kind.gameWindow)
     val isA = col("team_id") === teamA
     val goalA = when((goal && isA) || (owngoal && !isA), 1).otherwise(0)
     val goalB = when((goal && !isA) || (owngoal && isA), 1).otherwise(0)
-    val wPrev = Wg.rowsBetween(Window.unboundedPreceding, -1)
+    val wPrev = kind.gameWindow.rowsBetween(Window.unboundedPreceding, -1)
     val scoreA = coalesce(sum(goalA).over(wPrev), lit(0L))
     val scoreB = coalesce(sum(goalB).over(wPrev), lit(0L))
     val teamScore = when(isA, scoreA).otherwise(scoreB)

@@ -1,6 +1,6 @@
 package graft.vaep
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,12 +8,13 @@ import graft.core.{Act, Spadl}
 
 /** A2 — VAEP lookahead labels.
   *
-  * Reference `socceraction/vaep/labels.py:10-94`: for each action, did the
-  * acting team score (resp. concede) within the next `nrActions − 1`
-  * actions, where rows past the game end replicate the last row. The
+  * Reference `socceraction/vaep/labels.py:10-94` and
+  * `atomic/vaep/labels.py`: for each action, did the acting team score
+  * (resp. concede) within the next `nrActions − 1` actions, goals as the
+  * kind defines them, where rows past the game end replicate the last row. The
   * replicate-last-row clamping is equivalent to a truncated window because
   * every overflow term duplicates the last row's contribution, which the
-  * window already contains (proved in GameStatesSpec).
+  * window already contains (proved in LabelsSpec).
   *
   * Formulated with RANGE frames over the dense per-game `action_id`:
   * "my team's goals in the next 9 global actions" is a range frame over the
@@ -22,12 +23,6 @@ import graft.core.{Act, Spadl}
   * no extra shuffle beyond the game_id exchange.
   */
 object Labels {
-
-  private def goalish: Column =
-    col("type_id").isin(Spadl.TypeShot, Spadl.TypeShotPenalty, Spadl.TypeShotFreekick)
-
-  def goalFlag: Column = goalish && col("result_id") === Spadl.ResultSuccess
-  def owngoalFlag: Column = goalish && col("result_id") === Spadl.ResultOwngoal
 
   private def frames(nrActions: Int) = {
     val wTeam = Window.partitionBy("game_id", "team_id").orderBy("action_id")
@@ -38,21 +33,23 @@ object Labels {
   }
 
   /** P(score) target: goal by my team or owngoal by the opponent in
-    * [i, i + nrActions − 1]. */
-  def scores(actions: DataFrame, nrActions: Int = 10): DataFrame = {
+    * [i, i + nrActions − 1], goals as the kind defines them. */
+  def scores(actions: DataFrame, nrActions: Int = 10,
+             kind: ActionKind = ActionKind.Standard): DataFrame = {
     val (wTeam, wGame) = frames(nrActions)
-    val goalI = when(goalFlag, 1).otherwise(0)
-    val ogI = when(owngoalFlag, 1).otherwise(0)
+    val goalI = when(kind.goal, 1).otherwise(0)
+    val ogI = when(kind.owngoal, 1).otherwise(0)
     actions.withColumn("scores",
       (max(goalI).over(wTeam) > 0) ||
         (sum(ogI).over(wGame) - sum(ogI).over(wTeam) > 0))
   }
 
   /** P(concede) target: owngoal by my team or goal by the opponent. */
-  def concedes(actions: DataFrame, nrActions: Int = 10): DataFrame = {
+  def concedes(actions: DataFrame, nrActions: Int = 10,
+               kind: ActionKind = ActionKind.Standard): DataFrame = {
     val (wTeam, wGame) = frames(nrActions)
-    val goalI = when(goalFlag, 1).otherwise(0)
-    val ogI = when(owngoalFlag, 1).otherwise(0)
+    val goalI = when(kind.goal, 1).otherwise(0)
+    val ogI = when(kind.owngoal, 1).otherwise(0)
     actions.withColumn("concedes",
       (max(ogI).over(wTeam) > 0) ||
         (sum(goalI).over(wGame) - sum(goalI).over(wTeam) > 0))
@@ -86,5 +83,5 @@ object Labels {
   /** xG target — the action itself is a scored goal.
     * Reference `vaep/labels.py:97-117`. */
   def goalFromShot(actions: DataFrame): DataFrame =
-    actions.withColumn("goal_from_shot", goalFlag)
+    actions.withColumn("goal_from_shot", ActionKind.Standard.goal)
 }

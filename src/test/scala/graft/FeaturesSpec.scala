@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.vaep.{Features, GameStates}
+import graft.vaep.{ActionKind, AtomicVaep, Features, GameStates}
 
 /** Exact-value golden-fixture assertions mirroring the reference's
   * `tests/vaep/test_features.py` on the vendored 400-action game. */
@@ -122,5 +122,57 @@ class FeaturesSpec extends SparkSpec {
       val cat = r.getLong(3)
       assert(java.lang.Long.numberOfTrailingZeros(cat) == r.getInt(4)) // type lane
     }
+  }
+
+  // Atomic-SPADL input: one game, two periods, rows given out of order and
+  // time_seconds running against action_id, so only action_id order is right
+  private lazy val atomicActions = {
+    import spark.implicits._
+    Seq( // (action_id, period, team, x, y, dx, dy, time_seconds)
+      (2L, 1, 2L, 21.0, 22.0, 2.5, -1.5, 97.0),
+      (0L, 1, 1L, 1.0, 2.0, 0.5, 0.25, 99.0),
+      (4L, 2, 1L, 41.0, 42.0, 4.5, 3.0, 10.0),
+      (1L, 1, 1L, 11.0, 12.0, 1.5, 0.0, 98.0),
+      (3L, 2, 2L, 31.0, 32.0, 3.5, 2.0, 11.0))
+      .toDF("action_id", "period_id", "team_id", "x", "y", "dx", "dy", "time_seconds")
+      .withColumn("game_id", lit(1L))
+      .withColumn("player_id", col("team_id") * 10)
+      .withColumn("type_id", lit(0))
+      .withColumn("bodypart_id", lit(0))
+  }
+
+  test("atomic states lag within (game, period) in action_id order, clamped to the period's first row") {
+    val st = GameStates.withStates(atomicActions, 3, ActionKind.Atomic)
+    assert(ActionKind.Atomic.stateFields.forall(f => st.columns.contains(s"${f}__a2")))
+    val got = st.select("action_id", "x", "x__a1", "x__a2", "dy__a1", "time_seconds__a2")
+      .collect().map(r => r.getLong(0) -> r).toMap
+    def xs(id: Long) = (got(id).getDouble(2), got(id).getDouble(3))
+    assert(xs(0) == (1.0, 1.0))
+    assert(xs(1) == (1.0, 1.0))
+    assert(xs(2) == (11.0, 1.0))
+    assert(xs(3) == (31.0, 31.0)) // period 2 restarts at its own first row
+    assert(xs(4) == (31.0, 31.0))
+    assert(got(2L).getDouble(4) == 0.0 && got(2L).getDouble(5) == 99.0)
+  }
+
+  test("atomic playLeftToRight mirrors x/y and negates dx/dy of every state for the away team") {
+    val st = GameStates.withStates(atomicActions, 2, ActionKind.Atomic)
+    val ltr = GameStates.playLeftToRight(st, 2, lit(1L), ActionKind.Atomic)
+    val cols = Seq("x", "y", "dx", "dy", "x__a1", "y__a1", "dx__a1", "dy__a1", "time_seconds")
+    def row(df: org.apache.spark.sql.DataFrame, id: Long) =
+      df.filter(col("action_id") === id).select(cols.map(col): _*).head.toSeq.map(_.asInstanceOf[Double])
+    assert(row(ltr, 1L) == row(st, 1L)) // home team: unchanged
+    val (before, after) = (row(st, 2L), row(ltr, 2L)) // away team, predecessor is home
+    assert(after == Seq(105.0 - before(0), 68.0 - before(1), -before(2), -before(3),
+      105.0 - before(4), 68.0 - before(5), -before(6), -before(7), before(8)))
+    assert(ltr.columns.toSeq == st.columns.toSeq)
+  }
+
+  test("atomic interception one-hot fires on type_id 10 and drops the duplicate id") {
+    import spark.implicits._
+    val out = Seq(10, 24, 0).toDF("type_id").select(AtomicVaep.actiontypeOnehot(0): _*)
+    assert(!out.columns.exists(_.contains("interception_atomic_dup")))
+    assert(out.select("actiontype_interception_a0").collect().map(_.getBoolean(0)).toSeq ==
+      Seq(true, false, false))
   }
 }

@@ -29,6 +29,13 @@ class FeedLoaderSpec extends SparkSpec {
     assert(g.getAs[java.sql.Timestamp]("game_date").toString.startsWith("2026-03-01 15:00"))
   }
 
+  test("opta: a file: URI root lists the same feeds as its plain path") {
+    val uriRoot = new java.io.File(optaRoot).toURI.toString
+    assert(uriRoot.startsWith("file:"))
+    val viaUri = OptaLoader(spark, uriRoot).competitions().collect().toSet
+    assert(viaUri.nonEmpty && viaUri == opta.competitions().collect().toSet)
+  }
+
   test("opta: MA3 teams, qualifier map, end coordinates, deleted-event filter") {
     assert(opta.teams("g900").collect().map(_.getAs[String]("team_name")).toSet ==
       Set("Home FC", "Away United"))

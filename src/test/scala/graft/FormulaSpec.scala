@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.functions._
 
 import graft.core.Spadl
 import graft.streaming.SessionEngine.ActionRow
-import graft.vaep.Formula
+import graft.vaep.{ActionKind, Formula}
 
 /** §2.11 — VAEP formula semantics: override precedence, team switch,
   * phase cutoff, first-row self-lag. */
@@ -22,7 +24,7 @@ class FormulaSpec extends SparkSpec {
         element_at(typedLit(rows.map(r => r._1 -> r._7).toMap), col("seq")))
   }
 
-  private def values(df: org.apache.spark.sql.DataFrame) =
+  private def values(df: DataFrame) =
     Formula.value(df).orderBy("seq")
       .select("offensive_value", "defensive_value", "vaep_value")
       .collect()
@@ -86,5 +88,36 @@ class FormulaSpec extends SparkSpec {
       (0L, 0.0, 1L, Spadl.TypePass, 1, 0.3, 0.1),
       (1L, 2.0, 2L, Spadl.TypeTackle, 1, 0.4, 0.2)))
     v.foreach(r => assert(r.getDouble(2) == r.getDouble(0) + r.getDouble(1)))
+  }
+
+  test("each previous-action field is one lag, however often the formula reads it") {
+    def lags(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case w: logical.Window => w.windowExpressions.size
+    }.sum
+    val df = mk((0L, 0.0, 1L, Spadl.TypePass, 1, 0.3, 0.1))
+    assert(lags(Formula.value(df)) == 6) // team, type, result, time, P(scores), P(concedes)
+    assert(lags(Formula.value(df, kind = ActionKind.Atomic)) == 4) // team, type, P(scores), P(concedes)
+  }
+
+  test("atomic kind: no corner, penalty or phase-cutoff override; prev-goal on type 27/28") {
+    val rows = Seq( // (action_id, t, type, ps, pc)
+      (0L, 0.0, Spadl.TypePass, 0.3, 0.1),
+      (1L, 50.0, Spadl.TypeCornerCrossed, 0.2, 0.05), // gap > 10s AND corner
+      (2L, 52.0, Spadl.TypeShotPenalty, 0.9, 0.05),
+      (3L, 53.0, 27, 0.6, 0.1), // goal
+      (4L, 54.0, Spadl.TypePass, 0.4, 0.2),
+      (5L, 55.0, 28, 0.1, 0.3), // own goal
+      (6L, 56.0, Spadl.TypePass, 0.5, 0.25))
+      .toDF("action_id", "time_seconds", "type_id", "scores_p", "concedes_p")
+      .withColumn("game_id", lit(1L)).withColumn("period_id", lit(1))
+      .withColumn("team_id", lit(1L))
+    val v = Formula.value(rows, kind = ActionKind.Atomic).orderBy("action_id")
+      .select("offensive_value", "defensive_value").collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)))
+    val expected = Seq((0.0, 0.0), (0.2 - 0.3, -(0.05 - 0.1)), (0.9 - 0.2, -(0.05 - 0.05)),
+      (0.6 - 0.9, -(0.1 - 0.05)), (0.4, -0.2), (0.1 - 0.4, -(0.3 - 0.2)), (0.5, -0.25))
+    v.zip(expected).zipWithIndex.foreach { case (((o, d), (eo, ed)), i) =>
+      assert(math.abs(o - eo) < 1e-12 && math.abs(d - ed) < 1e-12, s"action $i: ($o, $d)")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft
 import scala.util.Random
 
 import graft.streaming.SessionEngine.ActionRow
-import graft.vaep.Labels
+import graft.vaep.{ActionKind, Labels}
 
 /** A2 — proves the truncated-window formulation equals the reference's
   * replicate-last-row clamping (`socceraction/vaep/labels.py:38-50`) on
@@ -74,5 +74,23 @@ class LabelsSpec extends SparkSpec {
     assert(out.count() == 400)
     val n = out.filter(org.apache.spark.sql.functions.col("scores")).count()
     assert(n >= 0 && n < 400)
+  }
+
+  test("atomic labels fire on goal/owngoal TYPE rows, not on shots") {
+    val rows = Seq( // (action_id, team, type_id) → (scores, concedes) at nrActions = 2
+      (0L, 1L, 11), // a shot: no goal in the atomic kind
+      (1L, 2L, 0), // next row is the opponent's goal
+      (2L, 1L, 27), // goal by the acting team
+      (3L, 1L, 0), // next row is the opponent's own goal
+      (4L, 2L, 28), // own goal by the acting team
+      (5L, 2L, 0))
+      .toDF("action_id", "team_id", "type_id")
+      .withColumn("game_id", org.apache.spark.sql.functions.lit(1L))
+    val k = ActionKind.Atomic
+    val got = Labels.concedes(Labels.scores(rows, 2, k), 2, k)
+      .orderBy("action_id").select("scores", "concedes").collect()
+      .map(r => (r.getBoolean(0), r.getBoolean(1))).toSeq
+    assert(got == Seq((false, false), (false, true), (true, false), (true, false),
+      (false, true), (false, false)))
   }
 }

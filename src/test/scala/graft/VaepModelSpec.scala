@@ -49,8 +49,8 @@ class VaepModelSpec extends SparkSpec {
     val n = data.count()
     val model = VaepModel.fit(data, MlQueries.atomicFeatureCols,
       maxIter = 5, maxDepth = 3, seed = 42L)
-    val rated = graft.vaep.AtomicVaep.value(
-      VaepModel.estimateProbabilities(model, data)).cache()
+    val rated = graft.vaep.Formula.value(VaepModel.estimateProbabilities(model, data),
+      kind = graft.vaep.ActionKind.Atomic).cache()
     assert(rated.count() == n)
     rated.select("scores_p", "concedes_p", "offensive_value", "defensive_value", "vaep_value")
       .collect().foreach { r =>
