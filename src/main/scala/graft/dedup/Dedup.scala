@@ -152,11 +152,6 @@ object Dedup {
       s => (lit(minhashA(j)) * (md5Hash60(s) % TextOps.HashPrime)
         + lit(minhashB(j))) % TextOps.HashPrime))
 
-  /** LSH band key b (= BandSize consecutive minhashes, string-combined). */
-  def bandKey(text: Column, band: Int, n: Int = 3): Column =
-    concat_ws("_", (band * BandSize until (band + 1) * BandSize)
-      .map(j => minhash(text, j, n).cast("string")): _*)
-
   /** MinHash-LSH candidate pairs: docs sharing any band bucket, verified
     * with exact Jaccard. Explodes docs × bands (constant factor 4), joins on
     * (band_id, band_key) — the classic banding join that keeps candidate

@@ -53,7 +53,7 @@ object SimilarityQueries {
       s"(CASE WHEN $p < npl THEN (CASE WHEN ${planeProjSql(emb, p)} > 0 THEN ${1L << p} ELSE 0 END) ELSE 0 END)"
     }.mkString(" + ")
 
-  // ---- deterministic IVF (Ivf.fitLloyd) mirror ------------------------------
+  // ---- deterministic IVF (Ivf.fit) mirror -----------------------------------
 
   private val IvfNlist = 8
   private val IvfIters = 3
@@ -186,17 +186,14 @@ object SimilarityQueries {
         .filter(col("cosine") >= 0.6)
     },
 
-    // IVF (k-means) ANN: learned centroids ⇒ rows-only (IvfSpec gates
-    // recall against brute force; full-probe search is asserted EXACT).
     // IVF ANN, fully value-golden: hash-seeded init + 3 Lloyd iterations on
     // 6-decimal-quantized vectors (decimal-exact means ⇒ bit-identical
     // centroids), assignment/probing on the quantized grid, exact cosine on
     // raw embeddings. The DuckDB mirror unrolls the same three iterations.
     Q("sim_ivf_ann", ivfOracleSql) { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val index = graft.sim.Ivf.fitLloyd(emb, nlist = IvfNlist, iters = IvfIters)
-      graft.sim.Ivf.search(emb, queriesDf(s, dir), index,
-        k = IvfK, nprobe = IvfNprobe, quantized = true)
+      val index = graft.sim.Ivf.fit(emb, nlist = IvfNlist, iters = IvfIters)
+      graft.sim.Ivf.search(emb, queriesDf(s, dir), index, k = IvfK, nprobe = IvfNprobe)
     },
 
     Q("sim_lsh_ann",

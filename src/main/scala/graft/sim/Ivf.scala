@@ -1,7 +1,5 @@
 package graft.sim
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,9 +7,10 @@ import org.apache.spark.sql.functions._
 /** IVF (inverted-file) approximate nearest neighbor — the k-means
   * counterpart to the random-hyperplane LSH path in [[Similarity]].
   *
-  * Index: k-means centroids (spark.ml, seeded) fitted on a deterministic
-  * sample; every corpus vector is assigned to its nearest centroid cell —
-  * a map-only argmax over the broadcast centroid array (no shuffle).
+  * Index: deterministic k-means centroids ([[fit]]) on a 6-decimal
+  * quantization grid; every corpus vector is assigned to its nearest
+  * centroid cell on that grid — a map-only argmax over the broadcast
+  * centroid array (no shuffle).
   * Search: each query probes its `nprobe` nearest cells (replicated by
   * explode), candidates come from the cell equi-join, exact cosine + top-k
   * inside the probed cells only.
@@ -21,12 +20,6 @@ import org.apache.spark.sql.functions._
   * √N ≈ 32k, a 16-probe search touches ~0.05% of the corpus. The centroid
   * array is nlist×dim floats (32k×64 ≈ 8 MB) — comfortably broadcast. The
   * assignment expression reuses the codegen'd FoldDot kernel per centroid.
-  *
-  * Two fit paths: [[fitLloyd]] is fully deterministic (hash-seeded init +
-  * fixed Lloyd iterations on a 6-decimal quantization grid) and backs the
-  * value-golden `sim_ivf_ann` oracle; [[fit]] wraps spark.ml's seeded
-  * k-means for the sampled/large-corpus path, where IvfSpec gates recall@k
-  * against the brute-force oracle instead.
   */
 object Ivf {
 
@@ -45,15 +38,18 @@ object Ivf {
     * number of Lloyd iterations over quantized vectors. Per-cell means are
     * DECIMAL(38,18)-exact sums requantized to 6 decimals before the one
     * double division, so every centroid is bit-identical to the DuckDB
-    * mirror and `sim_ivf_ann` is value-golden — unlike [[fit]]'s spark.ml
-    * k-means (kept for the sampled/large-corpus path), whose init is
-    * k-means|| on an RDD sample.
+    * mirror and `sim_ivf_ann` is value-golden. With `sampleFraction` < 1
+    * the fit runs on a `seed`ed sample of the corpus.
     *
     * Each iteration is one map-only assignment pass + one (cell, dim)
     * partial aggregate (nlist×dim rows collected — 8×64 here, ≤ a few MB
     * at any realistic nlist·dim); the corpus never shuffles its payload. */
-  def fitLloyd(embeddings: DataFrame, nlist: Int, iters: Int = 3): Index = {
-    val embq = embeddings.select(col("vec_id"), quantize(col("embedding")).as("q")).cache()
+  def fit(embeddings: DataFrame, nlist: Int, iters: Int = 3, seed: Long = 42L,
+          sampleFraction: Double = 1.0): Index = {
+    val sample =
+      if (sampleFraction >= 1.0) embeddings
+      else embeddings.sample(withReplacement = false, sampleFraction, seed)
+    val embq = sample.select(col("vec_id"), quantize(col("embedding")).as("q")).cache()
     try {
       val h = conv(substr(md5(col("vec_id").cast("string")), lit(1), lit(15)), 16, 10).cast("long")
       val init = embq.orderBy(h.asc, col("vec_id").asc).limit(nlist)
@@ -86,20 +82,6 @@ object Ivf {
     } finally { embq.unpersist(); () }
   }
 
-  /** Fit nlist centroids on (a sample of) the corpus (seeded k-means). */
-  def fit(embeddings: DataFrame, nlist: Int, seed: Long = 42L,
-          sampleFraction: Double = 1.0): Index = {
-    val sample =
-      if (sampleFraction >= 1.0) embeddings
-      else embeddings.sample(withReplacement = false, sampleFraction, seed)
-    val vecs = sample.select(
-      array_to_vector(col("embedding").cast("array<double>")).as("features"))
-    val model = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("features")
-      .fit(vecs)
-    Index(model.clusterCenters.head.size,
-      model.clusterCenters.map(_.toArray))
-  }
-
   /** Scores against every centroid: x·c − ‖c‖²/2 (argmax ≡ nearest by L2),
     * as one array column; FoldDot per centroid, all map-only. */
   private def cellScores(emb: Column, index: Index): Column =
@@ -127,18 +109,17 @@ object Ivf {
   }
 
   /** ANN top-k: corpus partitioned by cell once, queries replicated to
-    * their nprobe cells, exact cosine within probed cells. With
-    * `quantized = true`, cell assignment and probing run on the quantized
-    * vectors (the [[fitLloyd]] index grid) so the whole query is
-    * value-golden; scoring always uses the raw embeddings. */
+    * their nprobe cells, exact cosine within probed cells. Cell assignment
+    * and probing run on the quantized vectors, the grid [[fit]] fits the
+    * centroids on, so the whole query is value-golden; scoring uses the raw
+    * embeddings. */
   def search(embeddings: DataFrame, queries: DataFrame, index: Index,
-             k: Int, nprobe: Int, quantized: Boolean = false): DataFrame = {
-    val asg: Column => Column = e => if (quantized) quantize(e) else e
+             k: Int, nprobe: Int): DataFrame = {
     val corpus = embeddings
-      .withColumn("ivf_cell", cell(asg(col("embedding")), index))
+      .withColumn("ivf_cell", cell(quantize(col("embedding")), index))
     val probed = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("probe", explode(probeCells(asg(col("q_emb")), index, nprobe)))
+      .withColumn("probe", explode(probeCells(quantize(col("q_emb")), index, nprobe)))
       .select(col("query_id"), col("q_emb"), col("probe.cell").cast("int").as("ivf_cell"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("vec_id"))
     corpus.join(broadcast(probed), Seq("ivf_cell"))

@@ -1,19 +1,24 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.sim.{Ivf, Similarity}
 
-/** IVF ANN quality gates: recall@k vs the brute-force oracle on the real
-  * embeddings table (learned centroids ⇒ no value-golden check; recall is
-  * the honest metric for an ANN index). */
+/** IVF ANN gates on the real embeddings table: the fit and the search are
+  * deterministic, centroids sit on the 6-decimal grid, full-probe search is
+  * exact and few-probe recall@k against the brute-force oracle is high. */
 class IvfSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  private def topSet(df: DataFrame) = df
+    .select("query_id", "vec_id").collect()
+    .map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("ivf: cells partition the corpus; assignment is deterministic") {
-    val emb = Tables.embeddings(spark, sf)
+    val emb = Tables.embeddings(spark, sf).cache()
     val index = Ivf.fit(emb, nlist = 8, seed = 42L)
     assert(index.centroids.length == 8)
     val cells = emb.withColumn("c", Ivf.cell(col("embedding"), index))
@@ -24,29 +29,43 @@ class IvfSpec extends SparkSpec {
     val index2 = Ivf.fit(emb, nlist = 8, seed = 42L)
     val cells2 = emb.withColumn("c", Ivf.cell(col("embedding"), index2))
     assert(cells.select("vec_id", "c").exceptAll(cells2.select("vec_id", "c")).count() == 0)
+    // two fit-and-search runs of the same input → identical ranked rows
+    val queries = emb.filter(col("vec_id") < 5)
+    def ranked(index: Ivf.Index) = Ivf.search(emb, queries, index, k = 10, nprobe = 4)
+      .select("query_id", "vec_id", "rk").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    val run1 = ranked(index)
+    assert(run1.nonEmpty)
+    assert(run1 == ranked(Ivf.fit(emb, nlist = 8, seed = 42L)),
+      "refit + search returned different (query_id, vec_id, rk) rows")
+    emb.unpersist()
   }
 
-  test("ivf fitLloyd: deterministic centroids on the 6-decimal grid; full-probe equals brute force") {
+  test("ivf fit: deterministic centroids on the 6-decimal grid; full-probe equals brute force") {
     val emb = Tables.embeddings(spark, sf).cache()
-    val i1 = Ivf.fitLloyd(emb, nlist = 8, iters = 3)
-    val i2 = Ivf.fitLloyd(emb, nlist = 8, iters = 3)
-    assert(i1.centroids.map(_.toSeq).toSeq == i2.centroids.map(_.toSeq).toSeq,
-      "refit produced different centroids")
-    // every component sits on the 6-decimal quantization grid
-    i1.centroids.flatten.foreach { x =>
+    def cents(i: Ivf.Index) = i.centroids.map(_.toSeq).toSeq
+    def assertOnGrid(i: Ivf.Index): Unit = i.centroids.flatten.foreach { x =>
       assert((BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble == x),
         s"centroid component $x off the 6-decimal grid")
     }
+    val i1 = Ivf.fit(emb, nlist = 8, iters = 3)
+    val i2 = Ivf.fit(emb, nlist = 8, iters = 3)
+    assert(cents(i1) == cents(i2), "refit produced different centroids")
+    assertOnGrid(i1)
     // Lloyd iterations actually moved the centroids off the init picks
-    val i0 = Ivf.fitLloyd(emb, nlist = 8, iters = 0)
-    assert(i1.centroids.map(_.toSeq).toSeq != i0.centroids.map(_.toSeq).toSeq)
+    val i0 = Ivf.fit(emb, nlist = 8, iters = 0)
+    assert(cents(i1) != cents(i0))
+    // a seeded half sample refits to the same centroids, also on the grid
+    val s1 = Ivf.fit(emb, nlist = 8, seed = 7L, sampleFraction = 0.5)
+    val s2 = Ivf.fit(emb, nlist = 8, seed = 7L, sampleFraction = 0.5)
+    assert(s1.centroids.length == 8)
+    assert(cents(s1) == cents(s2), "sampled refit produced different centroids")
+    assertOnGrid(s1)
+    assert(cents(s1) != cents(i1)) // the sample, not the full corpus, was fitted
 
     val queries = emb.filter(col("vec_id") < 5)
-    def topSet(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = topSet(Similarity.bruteForceTopK(emb, queries, 10))
-    val full = topSet(Ivf.search(emb, queries, i1, k = 10, nprobe = 8, quantized = true))
+    val full = topSet(Ivf.search(emb, queries, i1, k = 10, nprobe = 8))
     assert(full == brute)
     emb.unpersist()
   }
@@ -55,10 +74,6 @@ class IvfSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf).cache()
     val queries = emb.filter(col("vec_id") < 5)
     val index = Ivf.fit(emb, nlist = 8, seed = 42L)
-
-    def topSet(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "vec_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val brute = topSet(Similarity.bruteForceTopK(emb, queries, 10))
     // probing ALL cells is exact: identical result set to brute force
