@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Q
 import graft.core.{SynActions, Tables, TokenCodec}
 import graft.core.SynActions.OracleCte
-import graft.streaming.{SessionEngine, WindowedStats}
+import graft.streaming.{SessionEngine, SnapshotTable, StreamRun, WindowedStats}
 import graft.xt.XThreat
 
 /** The CEP engine surface (SURVEY.md §2.12, §3.1): the stateful per-game
@@ -170,9 +170,10 @@ object StreamingQueries {
     // The broadcast-model foreachBatch sink run as a REAL streaming query:
     // file-source stream over the events parquet → map-only SPADL projection
     // → per-batch xT rating with the model held in an AtomicReference →
-    // append-mode parquet sink, read back. The oracle re-derives the
-    // CONVERGED surface (freeze chain) and rates declaratively — proving the
-    // streaming sink path value-equal to the batch rating. (Mid-stream model
+    // exactly-once SnapshotTable commit per micro-batch, read back. The
+    // oracle re-derives the CONVERGED surface (freeze chain) and rates
+    // declaratively — proving the streaming sink path value-equal to the
+    // batch rating. (Mid-stream model
     // refresh is deterministic only per batch; WindowedStatsSpec covers it.)
     Q("stream_rated_sink",
       s"""${XtQueries.fitStatsCtes}, ${XtQueries.convergedChainCtes}, gl AS MATERIALIZED (
@@ -192,14 +193,14 @@ object StreamingQueries {
       val acts = SynActions.projectEvents(stream)
       // session-rooted temp dirs: cleaned at JVM exit, so repeated Verify /
       // min-of-N Bench invocations don't accumulate orphan sink+checkpoint data
-      val out = graft.streaming.StreamRun.tempDir("rated_sink")
-      val ckpt = graft.streaming.StreamRun.tempDir("rated_ckpt")
-      val q = WindowedStats.ratedSink(acts, ref,
-          b => b.select(col("seq"), col("xt_value")).write.mode("append").parquet(out))
+      val table = new SnapshotTable(StreamRun.tempDir("rated_sink"))
+      val ckpt = StreamRun.tempDir("rated_ckpt")
+      val sink = SnapshotTable.sink(table, writerId = ckpt)
+      WindowedStats.ratedSink(acts, ref, (b, epoch) => sink(b.select(col("seq"), col("xt_value")), epoch))
         .option("checkpointLocation", ckpt)
         .start()
-      q.awaitTermination()
-      s.read.parquet(out)
+        .awaitTermination()
+      table.read(s)
     },
 
     // Flagship end-to-end: tokenized ingest surface → decode → stateful CEP

@@ -658,11 +658,10 @@ object TokenQueries {
          |  SELECT unnest(tokens) AS token FROM t
          |)
          |SELECT token, count(*) AS tf FROM ex GROUP BY token""".stripMargin) { (s, dir) =>
-      StreamRun.withAdaptiveStateParallelism(s, s"$dir/documents.parquet") {
-        val agg = TokenPipeline.fromDocuments(documentsStream(s, dir))
+      StreamRun.availableNow(s, s"$dir/documents.parquet", complete = true) { c =>
+        TokenPipeline.fromDocuments(documentsStream(c, dir))
           .select(explode(col("tokens")).as("token"))
           .groupBy("token").agg(count(lit(1)).as("tf"))
-        StreamRun.availableNow(agg, complete = true)
       }
     },
 
@@ -674,9 +673,8 @@ object TokenQueries {
     // which duplicate arrives first.
     Q("stream_dedup_exact",
       """SELECT DISTINCT md5(text) AS content_hash FROM documents""") { (s, dir) =>
-      StreamRun.withAdaptiveStateParallelism(s, s"$dir/documents.parquet") {
-        StreamRun.availableNow(documentsStream(s, dir)
-          .select(md5(col("text")).as("content_hash")).dropDuplicates())
+      StreamRun.availableNow(s, s"$dir/documents.parquet") { c =>
+        documentsStream(c, dir).select(md5(col("text")).as("content_hash")).dropDuplicates()
       }
     },
 
@@ -691,14 +689,14 @@ object TokenQueries {
     // state can expire mid-run regardless of batch boundaries.
     Q("stream_dedup_watermarked",
       """SELECT DISTINCT md5(text) AS content_hash FROM documents""") { (s, dir) =>
-      StreamRun.withAdaptiveStateParallelism(s, s"$dir/documents.parquet") {
-        StreamRun.availableNow(documentsStream(s, dir)
+      StreamRun.availableNow(s, s"$dir/documents.parquet") { c =>
+        documentsStream(c, dir)
           .withColumn("ts",
             timestamp_seconds(lit(1700000000L) + col("doc_id").cast("long") % 8))
           .withWatermark("ts", "10 seconds")
           .select(col("ts"), md5(col("text")).as("content_hash"))
           .dropDuplicatesWithinWatermark("content_hash")
-          .select("content_hash"))
+          .select("content_hash")
       }
     },
 
@@ -711,15 +709,12 @@ object TokenQueries {
     // long-lived-query expiry test instead.
     Q("stream_dedup_tws",
       """SELECT DISTINCT md5(text) AS content_hash FROM documents""") { (s, dir) =>
-      import graft.streaming.{DedupTws, PackerTws}
-      import s.implicits._
-      StreamRun.withAdaptiveStateParallelism(s, s"$dir/documents.parquet") {
-        PackerTws.withRocksDB(s) {
-          val hashes = documentsStream(s, dir)
-            .select(md5(col("text")).as("content_hash")).as[String]
-          StreamRun.availableNow(
-            DedupTws.distinctHashes(hashes, ttlMs = 0L).toDF("content_hash"))
-        }
+      import graft.streaming.DedupTws
+      StreamRun.availableNow(s, s"$dir/documents.parquet") { c =>
+        import c.implicits._
+        val hashes = documentsStream(c, dir)
+          .select(md5(col("text")).as("content_hash")).as[String]
+        DedupTws.distinctHashes(hashes, ttlMs = 0L).toDF("content_hash")
       }
     },
 
@@ -733,13 +728,12 @@ object TokenQueries {
       s"""WITH ${tokensCte("documents")}$packCtes
          |${packSelect(" WHERE len(ct) = 128")}""".stripMargin) { (s, dir) =>
       import graft.streaming.StreamingPacker
-      import s.implicits._
-      StreamRun.withAdaptiveStateParallelism(s, s"$dir/documents.parquet") {
-        val packed = StreamingPacker.pack(
-          TokenPipeline.fromDocuments(documentsStream(s, dir)).as[StreamingPacker.TokenDoc],
-          chunkSize = 128)
-        chunkFingerprint(StreamRun.availableNow(packed.toDF()))
-      }
+      chunkFingerprint(StreamRun.availableNow(s, s"$dir/documents.parquet") { c =>
+        import c.implicits._
+        StreamingPacker.pack(
+          TokenPipeline.fromDocuments(documentsStream(c, dir)).as[StreamingPacker.TokenDoc],
+          chunkSize = 128).toDF()
+      })
     },
 
     // The same stateful packer on Spark 4's transformWithState API
@@ -751,14 +745,11 @@ object TokenQueries {
       s"""WITH ${tokensCte("documents")}$packCtes
          |${packSelect(" WHERE len(ct) = 128")}""".stripMargin) { (s, dir) =>
       import graft.streaming.{PackerTws, StreamingPacker}
-      import s.implicits._
-      StreamRun.withAdaptiveStateParallelism(s, s"$dir/documents.parquet") {
-        PackerTws.withRocksDB(s) {
-          val packed = PackerTws.pack(
-            TokenPipeline.fromDocuments(documentsStream(s, dir)).as[StreamingPacker.TokenDoc],
-            chunkSize = 128)
-          chunkFingerprint(StreamRun.availableNow(packed.toDF()))
-        }
-      }
+      chunkFingerprint(StreamRun.availableNow(s, s"$dir/documents.parquet") { c =>
+        import c.implicits._
+        PackerTws.pack(
+          TokenPipeline.fromDocuments(documentsStream(c, dir)).as[StreamingPacker.TokenDoc],
+          chunkSize = 128).toDF()
+      })
     })
 }

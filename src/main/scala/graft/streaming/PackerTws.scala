@@ -16,28 +16,14 @@ import graft.streaming.StreamingPacker.{PackState, PackedChunk, TokenDoc}
   *
   * Operational notes: `transformWithState` requires the RocksDB state
   * store provider (`spark.sql.streaming.stateStore.providerClass` =
-  * `...state.RocksDBStateStoreProvider` — bundled with Spark) — which is
-  * also what a 100 TB deployment runs for state larger than executor
-  * heap. State is one [[PackState]] per source under TTLConfig.NONE
-  * (packing state must never expire mid-corpus; a CDC-style ingest with
-  * finite sources would pass a TTL instead).
+  * `...state.RocksDBStateStoreProvider` — bundled with Spark; `StreamRun`
+  * sets it for any plan with this operator) — which is also what a 100 TB
+  * deployment runs for state larger than executor heap. State is one
+  * [[PackState]] per source under TTLConfig.NONE (packing state must never
+  * expire mid-corpus; a CDC-style ingest with finite sources would pass a
+  * TTL instead).
   */
 object PackerTws {
-
-  /** Run `body` with the RocksDB state store provider set on the session
-    * (the provider `transformWithState` requires), restoring the previous
-    * value after — the one conf every call site needs, kept with the
-    * operator instead of copy-pasted. */
-  def withRocksDB[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   class PackProcessor(chunkSize: Int)
       extends StatefulProcessor[String, TokenDoc, PackedChunk] {

@@ -1,108 +1,114 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.graft.Shim
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
-/** Emulated Iceberg-style table: immutable parquet data files + an atomic,
-  * versioned snapshot manifest. (No Iceberg jars ship in this environment —
-  * SURVEY.md §0 — so the commit protocol is modeled on Iceberg snapshots:
-  * write data → write manifest to a temp file → atomic rename to the next
-  * sequential version. The reader resolves the highest committed version.)
+/** Emulated Iceberg-style table (no Iceberg jars ship here, SURVEY.md §0):
+  * immutable parquet data files plus one JSON manifest per sequential
+  * snapshot version. A commit writes its data, then publishes the next
+  * version's manifest; readers see committed versions only.
   *
-  * Exactly-once for Structured Streaming `foreachBatch`: each commit records
-  * its (epochId); a replayed batch with an already-committed epochId is
-  * skipped, making the sink idempotent under retries. Manifests also carry
-  * per-partition lineage (file → row count) for audit/metrics.
+  * Exactly-once for `foreachBatch`: each manifest records its (writer,
+  * epoch) and a replayed pair is skipped. A batch's data directory is named
+  * by that pair and overwritten on retry, so files of an attempt that failed
+  * before its manifest never become live. Per-file row counts (lineage) come
+  * from the Parquet footers, so a commit starts no Spark job of its own.
+  *
+  * Store contract: all file access goes through Spark's streaming
+  * `CheckpointFileManager`, chosen by the session's confs as for
+  * checkpoints (methods without a session use the active one). A manifest
+  * is published with `createAtomic(overwriteIfPossible = false)`: a rename
+  * on HDFS and the local filesystem that fails if the version exists, so a
+  * writer racing to the same version fails instead of erasing a committed
+  * snapshot. Stores without atomic rename (S3-like) need a
+  * `CheckpointFileManager` that publishes with a conditional put.
   */
 final class SnapshotTable(val root: String) {
-  private def metaDir: Path = Paths.get(root, "metadata")
-  private def dataDir: Path = Paths.get(root, "data")
+  private val metaDir = new Path(root, "metadata")
+  private val dataDir = new Path(root, "data")
+  private val Snapshot = """snapshot-(\d+)\.json""".r
 
-  private def versions: Seq[Long] =
-    if (!Files.isDirectory(metaDir)) Seq.empty
-    else Files.list(metaDir).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("snapshot-\\d+\\.json") =>
-        s.stripPrefix("snapshot-").stripSuffix(".json").toLong
-      }.toSeq.sorted
+  private case class Manifest(writer: String, epochId: Long, files: Seq[(String, Long)])
 
-  def currentVersion: Option[Long] = versions.lastOption
+  private def store(spark: SparkSession): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(root), Shim.hadoopConf(spark))
+  private def store: CheckpointFileManager = store(SparkSession.active)
 
-  private def manifestOf(v: Long): String =
-    new String(Files.readAllBytes(metaDir.resolve(s"snapshot-$v.json")), "UTF-8")
+  private def versions(fm: CheckpointFileManager): Seq[Long] =
+    if (!fm.exists(metaDir)) Seq.empty
+    else fm.list(metaDir).toSeq.map(_.getPath.getName)
+      .collect { case Snapshot(v) => v.toLong }.sorted
+
+  private def manifest(fm: CheckpointFileManager, v: Long): Manifest = {
+    implicit val formats: Formats = DefaultFormats
+    val in = fm.open(new Path(metaDir, s"snapshot-$v.json"))
+    val json = try parse(in) finally in.close()
+    Manifest((json \ "writer").extract[String], (json \ "epochId").extract[Long],
+      (json \ "files").children.map(f => (f \ "path").extract[String] -> (f \ "rows").extract[Long]))
+  }
+
+  private def manifests(fm: CheckpointFileManager): Seq[Manifest] =
+    versions(fm).map(manifest(fm, _))
+
+  def currentVersion: Option[Long] = versions(store).lastOption
 
   /** (writerId, epochId) pairs already committed (for idempotent replay).
     * Epoch ids restart at 0 per streaming query, so idempotence is scoped
     * to the writer (= checkpoint lineage) that produced the epoch. */
   def committedEpochs: Set[(String, Long)] =
-    versions.map { v =>
-      val m = manifestOf(v)
-      (parseString(m, "writer"), parseField(m, "epochId").toLong)
-    }.toSet
+    manifests(store).map(m => (m.writer, m.epochId)).toSet
 
   /** All live data files (union of snapshots — append-only table). */
-  def liveFiles: Seq[String] =
-    versions.flatMap(v => parseFiles(manifestOf(v)).map(_._1))
+  def liveFiles: Seq[String] = manifests(store).flatMap(_.files.map(_._1))
 
-  /** Per-partition lineage of a snapshot version: file → row count. */
-  def lineage(v: Long): Seq[(String, Long)] = parseFiles(manifestOf(v))
+  /** Per-file lineage of a snapshot version: file → row count. */
+  def lineage(v: Long): Seq[(String, Long)] = manifest(store, v).files
 
   /** Append `df` as one atomic snapshot for `epochId`. Returns false when
     * the epoch was already committed (replay detected → no-op). */
   def commit(df: DataFrame, epochId: Long, writerId: String = "default"): Boolean = this.synchronized {
-    if (committedEpochs.contains((writerId, epochId))) return false
-    Files.createDirectories(metaDir)
-    Files.createDirectories(dataDir)
-    val batchDir = dataDir.resolve(s"$writerId-epoch-$epochId")
+    val conf = Shim.hadoopConf(df.sparkSession)
+    val fm = CheckpointFileManager.create(new Path(root), conf)
+    if (manifests(fm).exists(m => m.writer == writerId && m.epochId == epochId)) return false
+    fm.mkdirs(metaDir)
+    // one directory per (writer, epoch); a writer id that is not a plain
+    // name (e.g. a checkpoint path) is escaped injectively: '/' → "+2f+"
+    val writerDir = writerId.flatMap(c =>
+      if (c < 128 && (c.isLetterOrDigit || "-_.".contains(c))) c.toString else f"+${c.toInt}%x+")
+    val batchDir = new Path(dataDir, s"$writerDir-epoch-$epochId")
     df.write.mode("overwrite").parquet(batchDir.toString)
-    val files = Files.list(batchDir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-    // row counts from the Parquet footers: no Spark job per file
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val counts = files.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HadoopPath(f.toUri), conf))
-      try f.toString -> reader.getRecordCount finally reader.close()
-    }
-    val v = currentVersion.getOrElse(-1L) + 1
-    val manifest =
-      s"""{"version": $v, "writer": "$writerId", "epochId": $epochId, "files": [${
-        counts.map { case (f, c) => s"""{"path": "$f", "rows": $c}""" }.mkString(", ")
-      }]}"""
-    val tmp = metaDir.resolve(s".snapshot-$v.json.tmp")
-    Files.write(tmp, manifest.getBytes("UTF-8"))
-    // atomic publish — the Iceberg-style commit point
-    Files.move(tmp, metaDir.resolve(s"snapshot-$v.json"),
-      StandardCopyOption.ATOMIC_MOVE)
+    val counts = fm.list(batchDir).toSeq.map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.toString).map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try f.toString -> reader.getRecordCount finally reader.close()
+      }
+    val v = versions(fm).lastOption.fold(0L)(_ + 1)
+    val json = ("version" -> v) ~ ("writer" -> writerId) ~ ("epochId" -> epochId) ~
+      ("files" -> counts.map { case (f, c) => ("path" -> f) ~ ("rows" -> c) })
+    val out = fm.createAtomic(new Path(metaDir, s"snapshot-$v.json"), overwriteIfPossible = false)
+    try out.write(compact(render(json)).getBytes(UTF_8))
+    catch { case e: Throwable => out.cancel(); throw e }
+    out.close() // the commit point: the manifest appears whole or not at all
     true
   }
 
   /** Snapshot-consistent read of the whole table. */
   def read(spark: SparkSession): DataFrame = {
-    val files = liveFiles
+    val files = manifests(store(spark)).flatMap(_.files.map(_._1))
     if (files.isEmpty) spark.emptyDataFrame
     else spark.read.parquet(files: _*)
   }
 
-  def totalRows: Long =
-    versions.flatMap(v => parseFiles(manifestOf(v)).map(_._2)).sum
-
-  // minimal manifest parsing (flat, engine-controlled format)
-  private def parseField(json: String, field: String): String = {
-    val m = (s""""$field": (\\d+)""").r.findFirstMatchIn(json)
-    m.map(_.group(1)).getOrElse(sys.error(s"field $field missing in manifest"))
-  }
-  private def parseString(json: String, field: String): String =
-    (s""""$field": "([^"]*)"""").r.findFirstMatchIn(json).map(_.group(1))
-      .getOrElse(sys.error(s"field $field missing in manifest"))
-
-  private def parseFiles(json: String): Seq[(String, Long)] =
-    ("""\{"path": "([^"]+)", "rows": (\d+)\}""").r.findAllMatchIn(json)
-      .map(m => (m.group(1), m.group(2).toLong)).toSeq
+  def totalRows: Long = manifests(store).flatMap(_.files.map(_._2)).sum
 }
 
 object SnapshotTable {

@@ -2,26 +2,26 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.hadoop.fs.{FileSystem, Path => HadoopPath}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.streaming.Trigger
 
 /** Shared run-to-completion harness for the driver's streaming queries:
-  * a file/memory stream is executed with `Trigger.AvailableNow` through a
-  * checkpointed parquet foreachBatch sink and the sink is read back as the
-  * query result. Sink + checkpoint live under one session-scoped temp root
-  * that a JVM shutdown hook deletes recursively, so repeated invocations
-  * (Verify, min-of-N bench rounds) don't accumulate orphan data. */
+  * a file/memory stream is executed with `Trigger.AvailableNow` in a child
+  * session, every micro-batch commits exactly once to a [[SnapshotTable]],
+  * and the table is read back in the caller's session as the query result.
+  * Tables + checkpoints live under one session-scoped temp root that a JVM
+  * shutdown hook deletes recursively, so repeated invocations (Verify,
+  * min-of-N bench rounds) don't accumulate orphan data. */
 object StreamRun {
 
   private lazy val root: Path = {
     val p = Files.createTempDirectory("graft_stream_run")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRec(p.toFile)))
+    val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    Runtime.getRuntime.addShutdownHook(new Thread(() => { fs.delete(new HadoopPath(p.toUri), true); () }))
     p
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(); ()
   }
 
   /** A temp directory under the session root (deleted at JVM exit) — for
@@ -31,51 +31,51 @@ object StreamRun {
 
   /** Bytes under `inputDir` (a plain path or any Hadoop filesystem URI),
     * or None when the path cannot be read. */
-  private[graft] def inputBytes(spark: org.apache.spark.sql.SparkSession,
-      inputDir: String): Option[Long] = scala.util.Try {
-    val path = new org.apache.hadoop.fs.Path(inputDir)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(path).getLength
-  }.toOption
+  private[graft] def inputBytes(spark: SparkSession, inputDir: String): Option[Long] =
+    scala.util.Try {
+      val path = new HadoopPath(inputDir)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(path).getLength
+    }.toOption
 
-  /** Scale-adaptive shuffle/state parallelism for a run-to-completion
-    * streaming query over a file source rooted at `inputDir`: every
-    * stateful operator materializes one state-store instance (and the
-    * foreachBatch sink one file) PER shuffle partition PER micro-batch, so
-    * inheriting the session's batch parallelism makes small streams pay
-    * ~32× the state/checkpoint/sink I/O their volume warrants. Target one
-    * partition per 64 MB of resting input, clamped to [1, session shuffle
-    * partitions] — a 100 TB stream keeps full parallelism, a small one
-    * collapses to few stores. The input is sized through its Hadoop
-    * filesystem; when that fails, the session value stands. The session
-    * conf is restored afterwards, so surrounding batch queries are
-    * untouched. */
-  def withAdaptiveStateParallelism[A](spark: org.apache.spark.sql.SparkSession,
-      inputDir: String)(body: => A): A = {
+  /** Runs the streaming DataFrame `build` makes to completion and returns
+    * the result, read back in `spark`: the latest snapshot in complete mode
+    * (streaming aggregations), else the whole table; 0 rows with the built
+    * schema when no batch committed. `build` runs in a clone of `spark`, so
+    * the caller's confs never change, and operators on the result plan with
+    * the caller's partition count. On the clone:
+    *  - shuffle (= state-store) partitions are scale-adaptive. Every stateful
+    *    operator materializes one state-store instance (and the sink one
+    *    file) PER partition PER micro-batch, so the session's batch
+    *    parallelism makes small streams pay ~32× the state/checkpoint/sink
+    *    I/O their volume warrants. Target one partition per 64 MB of resting
+    *    input under `inputDir`, clamped to [1, session shuffle partitions];
+    *    when its Hadoop filesystem cannot size it, the session value stands.
+    *  - a plan with `transformWithState` gets the RocksDB state store
+    *    provider, which that operator requires. */
+  def availableNow(spark: SparkSession, inputDir: String, complete: Boolean = false)(
+      build: SparkSession => DataFrame): DataFrame = {
+    val child = Shim.cloneSession(spark)
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    val target = inputBytes(spark, inputDir).fold(prev.toLong)(bytes =>
-      math.max(1L, bytes / (64L << 20)).min(prev.toLong.max(1L)))
-    spark.conf.set(key, target.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Runs `df` (a streaming DataFrame) to completion and returns the
-    * materialized result. `complete = true` uses complete output mode with
-    * an overwrite-per-micro-batch snapshot sink (streaming aggregations);
-    * default is append mode with an append sink. */
-  def availableNow(df: DataFrame, complete: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val out = Files.createTempDirectory(root, "out").toString
-    val ckpt = Files.createTempDirectory(root, "ckpt").toString
-    val q = df.writeStream
+    val session = spark.conf.get(key).toLong
+    inputBytes(spark, inputDir).foreach(bytes =>
+      child.conf.set(key, math.max(1L, bytes / (64L << 20)).min(session.max(1L))))
+    val df = build(child)
+    if (Shim.plan(df).exists(_.isInstanceOf[TransformWithState]))
+      child.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val table = new SnapshotTable(tempDir("out"))
+    val ckpt = tempDir("ckpt")
+    val sink = SnapshotTable.sink(table, writerId = ckpt)
+    df.writeStream
       .outputMode(if (complete) "complete" else "append")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: Dataset[Row], _: Long) =>
-        b.write.mode(if (complete) "overwrite" else "append").parquet(out)
-      }
+      .foreachBatch((b: Dataset[Row], epoch: Long) => sink(b, epoch))
       .option("checkpointLocation", ckpt)
       .start()
-    q.awaitTermination()
-    spark.read.parquet(out)
+      .awaitTermination()
+    val files = table.currentVersion.toSeq
+      .flatMap(v => if (complete) table.lineage(v).map(_._1) else table.liveFiles)
+    // the built schema spares the read a schema-inference job
+    spark.read.schema(df.schema).parquet(files: _*)
   }
 }

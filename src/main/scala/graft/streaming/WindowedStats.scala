@@ -89,13 +89,14 @@ object WindowedStats {
     * reference between batches (e.g. after a periodic refit) and the next
     * batch uses the new surface; the rating itself stays a map-only
     * codegen'd projection (the 192-double grid rides along as a literal,
-    * re-planned per batch). */
+    * re-planned per batch). `sink` has the shape of [[SnapshotTable.sink]]:
+    * it gets each rated batch with its epoch id. */
   def ratedSink(actions: DataFrame, modelRef: AtomicReference[XThreat.Model],
-                sink: DataFrame => Unit): DataStreamWriter[Row] =
+                sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     actions.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        sink(batch.withColumn("xt_value", XThreat.rateColumn(modelRef.get())))
+      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
+        sink(batch.withColumn("xt_value", XThreat.rateColumn(modelRef.get())), epoch)
       }
 }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Column, DataFrame, SparkSession => AnySession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
@@ -11,7 +12,8 @@ import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
   * `org.apache.spark.sql` to re-export exactly the conversions the
   * library needs (the standard extension-library pattern), plus the
   * `Dataset.ofRows` factory that wraps a custom logical node as a
-  * DataFrame, and a wait on the listener bus.
+  * DataFrame, a session clone and a session's Hadoop configuration, and a
+  * wait on the listener bus.
   */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -23,6 +25,12 @@ object Shim {
   /** `plan` as a DataFrame of `like`'s session. */
   def ofRows(like: DataFrame, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(like.sparkSession.asInstanceOf[SparkSession], plan)
+
+  /** A child of `spark` that starts with a copy of every session conf. */
+  def cloneSession(spark: AnySession): SparkSession = spark.asInstanceOf[SparkSession].cloneSession()
+
+  /** The context's Hadoop conf overlaid with `spark`'s session confs. */
+  def hadoopConf(spark: AnySession): Configuration = spark.asInstanceOf[SparkSession].sessionState.newHadoopConf()
 
   /** Blocks until every event posted so far has reached the listeners
     * (query-execution listeners are called asynchronously). */

@@ -93,31 +93,34 @@ class StreamingPackerSpec extends SparkSpec {
   }
 
   test("transformWithState packer (RocksDB) equals the flatMapGroupsWithState form") {
-    implicit val sqlCtx = spark.sqlContext
-    graft.streaming.PackerTws.withRocksDB(spark) {
-      val docs = (1 to 9).map(i => doc(i, if (i % 2 == 0) "a" else "b", 1 to (i * 3)))
-      val (batch1, batch2) = docs.splitAt(5)
-      val input = MemoryStream[TokenDoc]
-      val out = graft.streaming.PackerTws.pack(input.toDS(), chunkSize = 16)
-      val query = out.writeStream
-        .format("memory").queryName("tws_out").outputMode("append")
-        .option("checkpointLocation", Files.createTempDirectory("tws_ckpt").toString)
-        .start()
-      try {
-        input.addData(batch1)
-        query.processAllAvailable()
-        input.addData(batch2)
-        query.processAllAvailable()
-        val streamed = spark.table("tws_out").as[PackedChunk].collect()
-          .sortBy(c => (c.source, c.chunk_id)).toSeq
-        // shared packGroup algebra ⇒ chunk-identical to the single-pass
-        // reference AND the flatMapGroupsWithState operator
-        val expected = docs.groupBy(_.source).toSeq.flatMap { case (src, ds) =>
-          StreamingPacker.packGroup(src, ds, PackState(0L, Nil, 0L), 16)._1
-        }.sortBy(c => (c.source, c.chunk_id))
-        assert(streamed == expected)
-      } finally query.stop()
-    }
+    // transformWithState requires the RocksDB provider: set it on a session
+    // of this test's own, not on the shared one
+    val rocks = spark.newSession()
+    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sqlCtx = rocks.sqlContext
+    val docs = (1 to 9).map(i => doc(i, if (i % 2 == 0) "a" else "b", 1 to (i * 3)))
+    val (batch1, batch2) = docs.splitAt(5)
+    val input = MemoryStream[TokenDoc]
+    val out = graft.streaming.PackerTws.pack(input.toDS(), chunkSize = 16)
+    val query = out.writeStream
+      .format("memory").queryName("tws_out").outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("tws_ckpt").toString)
+      .start()
+    try {
+      input.addData(batch1)
+      query.processAllAvailable()
+      input.addData(batch2)
+      query.processAllAvailable()
+      val streamed = rocks.table("tws_out").as[PackedChunk].collect()
+        .sortBy(c => (c.source, c.chunk_id)).toSeq
+      // shared packGroup algebra ⇒ chunk-identical to the single-pass
+      // reference AND the flatMapGroupsWithState operator
+      val expected = docs.groupBy(_.source).toSeq.flatMap { case (src, ds) =>
+        StreamingPacker.packGroup(src, ds, PackState(0L, Nil, 0L), 16)._1
+      }.sortBy(c => (c.source, c.chunk_id))
+      assert(streamed == expected)
+    } finally query.stop()
   }
 
   test("packer state survives a checkpoint restart (chunk ids and buffer continue)") {

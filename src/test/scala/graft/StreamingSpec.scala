@@ -1,9 +1,17 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HadoopPath, PathFilter}
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.streaming.{SessionEngine, SnapshotTable}
 import graft.streaming.SessionEngine.ActionRow
@@ -120,54 +128,57 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("TTL'd transformWithState dedup: drops within TTL, re-emits after expiry") {
-    implicit val sqlCtx = spark.sqlContext
-    graft.streaming.PackerTws.withRocksDB(spark) {
-      // ProcessingTime-mode TWS schedules batches continuously (timer/TTL
-      // advancement), so processAllAvailable never settles — poll the sink
-      // with a deadline instead
-      def awaitCount(table: String, n: Long, what: String): Unit = {
-        val deadline = System.nanoTime() + 30e9.toLong
-        while (spark.table(table).count() < n) {
-          assert(System.nanoTime() < deadline, s"timed out waiting for $what")
-          Thread.sleep(100)
-        }
+    // transformWithState requires the RocksDB provider: set it on a session
+    // of this test's own, not on the shared one
+    val rocks = spark.newSession()
+    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val sqlCtx = rocks.sqlContext
+    // ProcessingTime-mode TWS schedules batches continuously (timer/TTL
+    // advancement), so processAllAvailable never settles — poll the sink
+    // with a deadline instead
+    def awaitCount(table: String, n: Long, what: String): Unit = {
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (rocks.table(table).count() < n) {
+        assert(System.nanoTime() < deadline, s"timed out waiting for $what")
+        Thread.sleep(100)
       }
-      def start(input: MemoryStream[String], ttlMs: Long, name: String) =
-        graft.streaming.DedupTws.distinctHashes(input.toDS(), ttlMs).toDF("content_hash")
-          .writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .trigger(Trigger.ProcessingTime(100))
-          .option("checkpointLocation", Files.createTempDirectory(s"ckpt-$name").toString)
-          .start()
-      // (1) within-TTL suppression under a TTL far beyond any host-load
-      // stretch (30 s) — asserted UNCONDITIONALLY (the old 6 s TTL forced a
-      // skip-under-load guard that could silently bypass the core check)
-      val in1 = MemoryStream[String]
-      val q1 = start(in1, ttlMs = 30000L, "dedup_tws_sup")
-      try {
-        in1.addData(Seq("a", "b", "a"))
-        awaitCount("dedup_tws_sup", 2, "first occurrences")
-        Thread.sleep(500) // a few more batches: the in-batch dup stays absorbed
-        assert(spark.table("dedup_tws_sup").count() == 2)
-        in1.addData(Seq("a", "c"))
-        awaitCount("dedup_tws_sup", 3, "c")
-        Thread.sleep(500)
-        assert(spark.table("dedup_tws_sup").count() == 3) // a still in state
-      } finally q1.stop()
-      // (2) expiry — the only genuinely time-sensitive half — under a SHORT
-      // TTL so the fixed wait shrinks (2 s TTL + slack vs the old 8 s sleep)
-      val in2 = MemoryStream[String]
-      val q2 = start(in2, ttlMs = 2000L, "dedup_tws_exp")
-      try {
-        in2.addData(Seq("a"))
-        awaitCount("dedup_tws_exp", 1, "first a")
-        Thread.sleep(3500) // let the 2 s processing-time TTL lapse
-        in2.addData(Seq("a"))
-        awaitCount("dedup_tws_exp", 2, "re-emission of a after TTL expiry")
-        // state for a expired → fresh arrival again (bounded-state contract)
-        assert(spark.table("dedup_tws_exp").filter($"content_hash" === "a").count() == 2)
-      } finally q2.stop()
     }
+    def start(input: MemoryStream[String], ttlMs: Long, name: String) =
+      graft.streaming.DedupTws.distinctHashes(input.toDS(), ttlMs).toDF("content_hash")
+        .writeStream
+        .format("memory").queryName(name).outputMode("append")
+        .trigger(Trigger.ProcessingTime(100))
+        .option("checkpointLocation", Files.createTempDirectory(s"ckpt-$name").toString)
+        .start()
+    // (1) within-TTL suppression under a TTL far beyond any host-load
+    // stretch (30 s) — asserted UNCONDITIONALLY (the old 6 s TTL forced a
+    // skip-under-load guard that could silently bypass the core check)
+    val in1 = MemoryStream[String]
+    val q1 = start(in1, ttlMs = 30000L, "dedup_tws_sup")
+    try {
+      in1.addData(Seq("a", "b", "a"))
+      awaitCount("dedup_tws_sup", 2, "first occurrences")
+      Thread.sleep(500) // a few more batches: the in-batch dup stays absorbed
+      assert(rocks.table("dedup_tws_sup").count() == 2)
+      in1.addData(Seq("a", "c"))
+      awaitCount("dedup_tws_sup", 3, "c")
+      Thread.sleep(500)
+      assert(rocks.table("dedup_tws_sup").count() == 3) // a still in state
+    } finally q1.stop()
+    // (2) expiry — the only genuinely time-sensitive half — under a SHORT
+    // TTL so the fixed wait shrinks (2 s TTL + slack vs the old 8 s sleep)
+    val in2 = MemoryStream[String]
+    val q2 = start(in2, ttlMs = 2000L, "dedup_tws_exp")
+    try {
+      in2.addData(Seq("a"))
+      awaitCount("dedup_tws_exp", 1, "first a")
+      Thread.sleep(3500) // let the 2 s processing-time TTL lapse
+      in2.addData(Seq("a"))
+      awaitCount("dedup_tws_exp", 2, "re-emission of a after TTL expiry")
+      // state for a expired → fresh arrival again (bounded-state contract)
+      assert(rocks.table("dedup_tws_exp").filter($"content_hash" === "a").count() == 2)
+    } finally q2.stop()
   }
 
   test("snapshot sink: atomic versions, lineage, idempotent replay") {
@@ -200,6 +211,57 @@ class StreamingSpec extends SparkSpec {
     assert(files.length == 4 && files.map(_._2).sum == 40L)
     files.foreach { case (f, n) => assert(spark.read.parquet(f).count() == n, f) }
     assert(table.totalRows == 55L && table.read(spark).count() == 55L)
+
+    // a writer id and a table path with JSON metacharacters round-trip
+    // through the manifest
+    val odd = "w \"q\" \\ /x"
+    val quoted = new SnapshotTable(dir + "/a\"b")
+    assert(quoted.commit((1 to 3).toDF("v"), epochId = 0L, writerId = odd))
+    assert(quoted.committedEpochs == Set((odd, 0L)))
+    assert(!quoted.commit((1 to 3).toDF("v"), epochId = 0L, writerId = odd))
+    assert(quoted.totalRows == 3L && quoted.read(spark).count() == 3L)
+  }
+
+  test("snapshot sink: a commit that fails before its manifest is redone on restart") {
+    val src = Files.createTempDirectory("snap_src").resolve("in").toString
+    (1 to 40).toDF("v").repartition(4).write.parquet(src)
+    def run(s: SparkSession, table: SnapshotTable, ckpt: String): Unit =
+      s.readStream.schema("v INT").option("maxFilesPerTrigger", 2).parquet(src)
+        .writeStream.trigger(Trigger.AvailableNow())
+        .foreachBatch((b: Dataset[Row], epoch: Long) => SnapshotTable.sink(table, ckpt)(b, epoch))
+        .option("checkpointLocation", ckpt)
+        .start().awaitTermination()
+    // rows, and per version the row counts of its files
+    def contents(t: SnapshotTable) = (t.read(spark).as[Int].collect().sorted.toSeq,
+      t.currentVersion.toSeq.flatMap(v => 0L to v).map(t.lineage(_).map(_._2).sorted))
+
+    val clean = new SnapshotTable(Files.createTempDirectory("snap_clean").toString)
+    run(spark, clean, Files.createTempDirectory("ckpt_clean").toString)
+    assert(clean.currentVersion.contains(1L) && clean.totalRows == 40L)
+
+    val dir = Files.createTempDirectory("snap_fault")
+    val table = new SnapshotTable(dir.toString)
+    val ckpt = Files.createTempDirectory("ckpt_fault").toString
+    val s = spark.newSession()
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    s.conf.set(key, classOf[FailFirstManifest].getName)
+    FailFirstManifest.armed.set(true)
+    try {
+      val e = intercept[StreamingQueryException](run(s, table, ckpt))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(FailFirstManifest.Message)))
+    } finally s.conf.unset(key)
+    // the data of epoch 0 was written, its manifest never published
+    assert(table.currentVersion.isEmpty)
+    val orphans = Files.walk(dir.resolve("data")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    assert(orphans.nonEmpty)
+
+    // restart the same query from the same checkpoint
+    run(s, table, ckpt)
+    assert(contents(table) == contents(clean))
+    assert(table.committedEpochs == Set((ckpt, 0L), (ckpt, 1L)))
+    assert(table.liveFiles.map(f => new HadoopPath(f).getName).toSet.intersect(orphans).isEmpty)
   }
 
   test("checkpoint resume: restart continues without duplicating output") {
@@ -239,4 +301,29 @@ class StreamingSpec extends SparkSpec {
     assert(table.totalRows == 17L)
     assert(table.read(spark).count() == 17L)
   }
+}
+
+/** The default checkpoint file manager, except that the first snapshot
+  * manifest published while [[FailFirstManifest.armed]] is set throws:
+  * the fault a crash between a commit's data write and its manifest makes. */
+class FailFirstManifest(path: HadoopPath, conf: Configuration) extends CheckpointFileManager {
+  private val fm = new FileContextBasedCheckpointFileManager(path, conf)
+  override def createAtomic(p: HadoopPath, overwriteIfPossible: Boolean)
+      : CheckpointFileManager.CancellableFSDataOutputStream = {
+    if (p.getName.startsWith("snapshot-") && FailFirstManifest.armed.getAndSet(false))
+      throw new java.io.IOException(s"${FailFirstManifest.Message}: $p")
+    fm.createAtomic(p, overwriteIfPossible)
+  }
+  override def open(p: HadoopPath) = fm.open(p)
+  override def list(p: HadoopPath, filter: PathFilter) = fm.list(p, filter)
+  override def mkdirs(p: HadoopPath): Unit = fm.mkdirs(p)
+  override def exists(p: HadoopPath): Boolean = fm.exists(p)
+  override def delete(p: HadoopPath): Unit = fm.delete(p)
+  override def isLocal: Boolean = fm.isLocal
+  override def createCheckpointDirectory(): HadoopPath = fm.createCheckpointDirectory()
+}
+
+object FailFirstManifest {
+  val armed = new AtomicBoolean(false)
+  val Message = "injected fault before the manifest"
 }

@@ -98,7 +98,7 @@ class WindowedStatsSpec extends SparkSpec {
     mem.addData((1L, Spadl.TypePass, Spadl.ResultSuccess, 10.0, 30.0, 20.0, 30.0))
     val df = mem.toDF().toDF("game_id", "type_id", "result_id",
       "start_x", "start_y", "end_x", "end_y")
-    val q = WindowedStats.ratedSink(df, ref, batch =>
+    val q = WindowedStats.ratedSink(df, ref, (batch, _) =>
       collected ++= batch.select("xt_value").collect().map(_.getDouble(0))).start()
     q.awaitTermination()
     // constant surface → xT difference 0.0 for a successful move
@@ -109,7 +109,7 @@ class WindowedStatsSpec extends SparkSpec {
     ref.set(XThreat.Model(XThreat.DefaultL, XThreat.DefaultW,
       grid2, grid2, grid2, Array(), grid2, 0))
     mem.addData((1L, Spadl.TypePass, Spadl.ResultSuccess, 10.0, 30.0, 20.0, 30.0))
-    val q2 = WindowedStats.ratedSink(df, ref, batch =>
+    val q2 = WindowedStats.ratedSink(df, ref, (batch, _) =>
       collected ++= batch.select("xt_value").collect().map(_.getDouble(0))).start()
     q2.awaitTermination()
     assert(collected.size == 3) // batch 2 re-rated the full memory stream
