@@ -18,7 +18,10 @@ import graft.operators.SpadlOps
   *
   * The dispatch is a map-only when-chain over `array_contains` qualifier
   * probes; the repair chain shares one game_id exchange across all window
-  * stencils. Pipeline order follows the reference exactly:
+  * stencils. That exchange carries the ids, `seq`, `time_seconds`, the
+  * metered coordinates, the three dispatch ints, the raw outcome and the
+  * two event-type tests the repairs read (`ball recovery`, `ball touch`)
+  * — not the event-type string. Pipeline order follows the reference exactly:
   * qualifier dispatch → recoveries→dribbles → unintentional-touch fix →
   * non_action filter → sort → owngoal flip → direction fix → clearance fix →
   * interception result fix → resequence → dribble synthesis.
@@ -97,7 +100,8 @@ object Opta {
       typeId(col("type_name"), col("outcome")).as("type_id"),
       resultId(col("type_name"), col("outcome")).as("result_id"),
       bodypartId(col("type_name")).as("bodypart_id"),
-      col("type_name").as("opta_type"),
+      (col("type_name") === "ball recovery").as("opta_recovery"),
+      (col("type_name") === "ball touch").as("opta_touch"),
       col("outcome").as("opta_outcome"),
       col("seq"))
 
@@ -109,7 +113,7 @@ object Opta {
       .rowsBetween(Window.unboundedPreceding, -1)
     def nextReal(c: String): Column =
       last(when(col("type_id") =!= TypeNonAction, col(c)), ignoreNulls = true).over(wDescPrev)
-    val recovery = col("opta_type") === "ball recovery"
+    val recovery = col("opta_recovery")
     // neighbors must come from the PRE-mutation frame (pandas evaluates
     // df_actions_next before assigning) — materialize them first, THEN
     // rewrite type/end, so a recovery chain doesn't see other recoveries
@@ -134,7 +138,7 @@ object Opta {
     // unintentional deflection: the action's end snaps to action(+2)'s
     // start, and a pass kept by the same team becomes successful.
     val deflected = coalesce(
-      lead("opta_type", 1).over(wRaw) === "ball touch" &&
+      lead("opta_touch", 1).over(wRaw) &&
         lead("opta_outcome", 1).over(wRaw), lit(false))
     val nx2Team = lead("team_id", 2).over(wRaw)
     val touched = recovered
@@ -146,7 +150,7 @@ object Opta {
       .withColumn("new_end_y",
         when(deflected, lead("start_y", 2).over(wRaw)).otherwise(col("end_y")))
       .withColumn("end_x", col("new_end_x")).withColumn("end_y", col("new_end_y"))
-      .drop("new_end_x", "new_end_y", "opta_type", "opta_outcome")
+      .drop("new_end_x", "new_end_y", "opta_recovery", "opta_touch", "opta_outcome")
 
     val actions = touched.filter(col("type_id") =!= TypeNonAction)
 

@@ -21,8 +21,13 @@ import graft.operators.SpadlOps
   * The `extra` bag is parsed ONCE per row with `from_json` into a typed
   * struct (the Spark-first equivalent of the reference's dict column —
   * one codegen'd parse instead of N path probes), and every event parser is
-  * a `when`-chain over the struct fields: the whole dispatch is a single
-  * map-only projection, no shuffle until the normalizer's per-game windows.
+  * a `when`-chain over the struct fields. The dispatch, the time parse, the
+  * end-location choice and a per-row fractional-coordinate flag form one
+  * map-side projection before the converter's only exchange (the fidelity
+  * window's, whose game_id partitioning the normalizer's per-game scan
+  * reuses). That exchange carries game/period/team/player ids, `seq`,
+  * `time_seconds`, the start and chosen end locations, the three dispatch
+  * ints and the flag — none of the raw or parsed strings.
   *
   * Fidelity quirk preserved: in the reference, `_infer_xy_fidelity_versions`
   * returns its tuple in (shot, xy) order while the call site unpacks
@@ -253,8 +258,11 @@ object StatsBomb {
   /** Full conversion: interception split → extra-bag parse → dispatch →
     * coordinates/time → non_action filter → direction fix → clearance fix →
     * resequence → dribble synthesis (`statsbomb.py:17-120`). One shuffle
-    * total: the dispatch and coordinate math are map-only; the fidelity
-    * window and the per-game normalizer scan share the game_id
+    * total: every expression that reads only its own row (the dispatch, the
+    * time parse, the end-location choice, the fractional-coordinate flag)
+    * runs in one map-side projection before the fidelity window, so that
+    * window's exchange carries no strings — only the columns the later
+    * stages read — and the per-game normalizer scan shares its game_id
     * partitioning. */
   def convertToActions(rawEvents: DataFrame, homeTeamId: Column): DataFrame = {
     val withSplit = insertInterceptionPasses(rawEvents, from_json(col("extra"), extraSchema))
@@ -269,37 +277,49 @@ object StatsBomb {
     val withParsed = withSplit.withColumn("__extra_parsed", from_json(col("extra"), extraSchema))
     val x = col("__extra_parsed")
 
-    // effective fidelity (see object scaladoc): fractional anywhere in game
-    val fracOf = (c: Column) => !isnull(c) && c % 1 =!= 0
-    val anyFrac = max(
-      when(fracOf(element_at(col("location"), 1)) || fracOf(element_at(col("location"), 2)), 1)
-        .otherwise(0)).over(Window.partitionBy("game_id")) === 1
-
     // end location priority: pass → shot → carry → fall back to location
     val endLoc = coalesce(
       x.getField("pass").getField("end_location"),
       x.getField("shot").getField("end_location"),
       x.getField("carry").getField("end_location"),
       col("location"))
+    val fracOf = (c: Column) => !isnull(c) && c % 1 =!= 0
 
-    val parsed = withParsed
-      .withColumn("cell_side", Converters.fidelityCellSide(anyFrac))
-      .withColumn("arb", parseEvent(col("type_name"), x))
-      .withColumn("end_loc", endLoc)
-    val actions = parsed.select(
+    // the row-local half runs for every event, as in the reference (whose
+    // time parse, `statsbomb.py:80`, also precedes the non_action filter);
+    // element_at on `location` feeds the fidelity window, which reads every
+    // event anyway
+    val perRow = withParsed.select(
       col("game_id"),
       col("period_id"),
       Converters.statsBombTimeSeconds(col("timestamp")).as("time_seconds"),
       col("team_id"),
       col("player_id"),
-      locX(col("location"), col("cell_side")).as("start_x"),
-      locY(col("location"), col("cell_side")).as("start_y"),
-      locX(col("end_loc"), col("cell_side")).as("end_x"),
-      locY(col("end_loc"), col("cell_side")).as("end_y"),
-      col("arb").getField("type_id").as("type_id"),
-      col("arb").getField("result_id").as("result_id"),
-      col("arb").getField("bodypart_id").as("bodypart_id"),
+      col("location"),
+      endLoc.as("end_loc"),
+      parseEvent(col("type_name"), x).as("arb"),
+      (fracOf(element_at(col("location"), 1)) || fracOf(element_at(col("location"), 2)))
+        .as("frac"),
       col("seq"))
+
+    // effective fidelity (see object scaladoc): fractional anywhere in game
+    val anyFrac = max(col("frac")).over(Window.partitionBy("game_id"))
+    val actions = perRow
+      .withColumn("cell_side", Converters.fidelityCellSide(anyFrac))
+      .select(
+        col("game_id"),
+        col("period_id"),
+        col("time_seconds"),
+        col("team_id"),
+        col("player_id"),
+        locX(col("location"), col("cell_side")).as("start_x"),
+        locY(col("location"), col("cell_side")).as("start_y"),
+        locX(col("end_loc"), col("cell_side")).as("end_x"),
+        locY(col("end_loc"), col("cell_side")).as("end_y"),
+        col("arb").getField("type_id").as("type_id"),
+        col("arb").getField("result_id").as("result_id"),
+        col("arb").getField("bodypart_id").as("bodypart_id"),
+        col("seq"))
       .filter(col("type_id") =!= TypeNonAction)
 
     SpadlOps.normalize(SpadlOps.fixDirectionOfPlay(actions, homeTeamId))

@@ -24,7 +24,11 @@ import graft.operators.SpadlOps
   * clearance fix → dribble synthesis. Every step up to the per-game
   * normalizer scan is a per-game window pass or filter; the two orderings
   * used are raw `seq` (pre-insertion) and `(period, ms, seq2)`
-  * (post-insertion).
+  * (post-insertion). All of them share one game_id exchange, placed before
+  * the duel conversion's windows: it carries the ids, `period_id`,
+  * `milliseconds`, `seq`, Wyscout type/subtype, the four position
+  * coordinates (goal-mosaic already applied) and the 19 tag flags — not
+  * the raw `tags` array nor `event_id`, which no later stage reads.
   */
 object Wyscout {
 
@@ -85,6 +89,8 @@ object Wyscout {
         when((shot || pas) && col("blocked"), col("start_y"))
           .when(shot && mosaicY.isNotNull, mosaicY)
           .otherwise(col("end_y")))
+      // the tag flags above are all that later stages read of `tags`
+      .drop("tags", "event_id")
 
     // ---- step 2: duel conversion (`:290-375`) ---------------------------
     val d1 = mosaicked

@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -11,6 +13,8 @@ import org.apache.spark.sql.graft.Shim
 import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
+
+import graft.core.Tables
 
 /** Emulated Iceberg-style table (no Iceberg jars ship here, SURVEY.md §0):
   * immutable parquet data files plus one JSON manifest per sequential
@@ -28,9 +32,12 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   * checkpoints (methods without a session use the active one). A manifest
   * is published with `createAtomic(overwriteIfPossible = false)`: a rename
   * on HDFS and the local filesystem that fails if the version exists, so a
-  * writer racing to the same version fails instead of erasing a committed
-  * snapshot. Stores without atomic rename (S3-like) need a
-  * `CheckpointFileManager` that publishes with a conditional put.
+  * writer racing to the same version loses instead of erasing a committed
+  * snapshot. The loser removes its temporary manifest and publishes the same
+  * files at the next free version, unless its (writer, epoch) was committed
+  * meanwhile. Stores without atomic rename (S3-like) need a
+  * `CheckpointFileManager` that publishes with a conditional put and fails
+  * with `FileAlreadyExistsException` when the version exists.
   */
 final class SnapshotTable(val root: String) {
   private val metaDir = new Path(root, "metadata")
@@ -91,21 +98,50 @@ final class SnapshotTable(val root: String) {
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
         try f.toString -> reader.getRecordCount finally reader.close()
       }
-    val v = versions(fm).lastOption.fold(0L)(_ + 1)
-    val json = ("version" -> v) ~ ("writer" -> writerId) ~ ("epochId" -> epochId) ~
+    def json(v: Long) = ("version" -> v) ~ ("writer" -> writerId) ~ ("epochId" -> epochId) ~
       ("files" -> counts.map { case (f, c) => ("path" -> f) ~ ("rows" -> c) })
-    val out = fm.createAtomic(new Path(metaDir, s"snapshot-$v.json"), overwriteIfPossible = false)
-    try out.write(compact(render(json)).getBytes(UTF_8))
-    catch { case e: Throwable => out.cancel(); throw e }
-    out.close() // the commit point: the manifest appears whole or not at all
+    var v = versions(fm).lastOption.fold(0L)(_ + 1)
+    while (!publish(fm, v, compact(render(json(v))).getBytes(UTF_8))) {
+      // lost the race for v: if this (writer, epoch) won elsewhere the
+      // commit is a replay, otherwise it takes the next free version
+      val vs = versions(fm)
+      if (vs.map(manifest(fm, _)).exists(m => m.writer == writerId && m.epochId == epochId))
+        return false
+      v = vs.last + 1
+    }
     true
+  }
+
+  /** Publishes `bytes` as version `v`'s manifest — the commit point: it
+    * appears whole or not at all. Returns false, leaving nothing behind,
+    * when the version already exists. */
+  private def publish(fm: CheckpointFileManager, v: Long, bytes: Array[Byte]): Boolean = {
+    val path = new Path(metaDir, s"snapshot-$v.json")
+    try {
+      val out = fm.createAtomic(path, overwriteIfPossible = false)
+      try out.write(bytes)
+      catch { case e: Throwable => out.cancel(); throw e }
+      out.close()
+      true
+    } catch {
+      case _: FileAlreadyExistsException =>
+        // a rename-based store keeps the losing temporary file; ours is
+        // the one for this version with exactly these bytes, which name
+        // this (writer, epoch) and its data files
+        fm.list(metaDir).map(_.getPath)
+          .filter(p => p.getName.startsWith(s".${path.getName}.") && p.getName.endsWith(".tmp"))
+          .filter(p => Try { val in = fm.open(p); try in.readAllBytes() finally in.close() }
+            .toOption.exists(java.util.Arrays.equals(_, bytes)))
+          .foreach(fm.delete)
+        false
+    }
   }
 
   /** Snapshot-consistent read of the whole table. */
   def read(spark: SparkSession): DataFrame = {
     val files = manifests(store(spark)).flatMap(_.files.map(_._1))
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
+    else Tables.parquet(spark, files: _*)
   }
 
   def totalRows: Long = manifests(store).flatMap(_.files.map(_._2)).sum

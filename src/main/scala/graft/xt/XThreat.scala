@@ -9,10 +9,11 @@ import graft.core.Spadl
   * iteration (reference `socceraction/xthreat.py`).
   *
   * Spark-first design: the reference loops 192× over pandas `value_counts`
-  * (`xthreat.py:212-216`); here ALL fit statistics come from two hash
-  * aggregations (one `groupBy(start_cell)`, one
-  * `groupBy(start_cell, end_cell)`) — a single shuffle each with map-side
-  * partial aggregation, tree-collected to ≤ 192 + 192² tiny rows. The value
+  * (`xthreat.py:212-216`); here ALL fit statistics come from ONE hash
+  * aggregation keyed by (start cell, end cell), where the end cell is null
+  * unless the action is a successful move (the only rows whose end cell the
+  * transitions read) — a single shuffle with map-side partial aggregation,
+  * collected as ≤ 192 + 192² tiny rows of long counts. The value
   * iteration itself is driver-side Array math (≈37k flops/iter) and the
   * resulting 192-double surface is shipped back as a literal, so `rate` is a
   * map-only codegen'd projection — no shuffle, broadcast, or UDF at all.
@@ -100,18 +101,22 @@ object XThreat {
     // ONE fused aggregation pass instead of the two separate collect jobs
     // ([[cellStats]] + [[transitionEntries]]): each job re-derived the full
     // upstream action lineage (scan + per-game window), so fusing halves
-    // the passes for every fit caller. Grouping by (start_cell, end_cell)
-    // keeps ≤ n² result rows; the per-start-cell stats are summed over end
-    // cells on the driver. The cellStats sums keep that operator's NaN
-    // filter via the `when` guards (F1), while the transition counts stay
-    // UNfiltered exactly like transitionEntries — identical counts, hence a
+    // the passes for every fit caller. The key is (start_cell, end_cell)
+    // with end_cell null unless the action is a successful move, the only
+    // rows whose end cell the transitions read: ≤ n + n² result rows, and
+    // the partial aggregate ships one row per start cell for everything
+    // else. The per-start-cell stats are summed over end cells on the
+    // driver. The cellStats sums keep that operator's NaN filter via the
+    // `when` guards (F1), while the transition counts stay UNfiltered
+    // exactly like transitionEntries — identical counts, hence a
     // bit-identical model (xt_* value-golden oracles unchanged).
     val isShot = col("type_id") === Spadl.TypeShot
     val isMove = isMoveAction
+    val isSuccMove = isMove && col("result_id") === Spadl.ResultSuccess
     val f1 = !isnan(col("start_x")) && !isnan(col("start_y"))
     val grouped = actions
       .withColumn("start_cell", flatCellIndex(col("start_x"), col("start_y"), l, w))
-      .withColumn("end_cell", flatCellIndex(col("end_x"), col("end_y"), l, w))
+      .withColumn("end_cell", when(isSuccMove, flatCellIndex(col("end_x"), col("end_y"), l, w)))
       .groupBy("start_cell", "end_cell")
       .agg(
         sum(when(f1 && isShot, 1L).otherwise(0L)).as("shots"),
@@ -119,8 +124,7 @@ object XThreat {
           .otherwise(0L)).as("goals"),
         sum(when(f1 && isMove, 1L).otherwise(0L)).as("moves"),
         sum(when(isMove, 1L).otherwise(0L)).as("n_start_moves"),
-        sum(when(isMove && col("result_id") === Spadl.ResultSuccess, 1L)
-          .otherwise(0L)).as("n_succ"))
+        sum(when(isSuccMove, 1L).otherwise(0L)).as("n_succ"))
       .collect()
     val shots = new Array[Double](n)
     val goals = new Array[Double](n)
@@ -134,15 +138,10 @@ object XThreat {
         goals(s) += r.getLong(3).toDouble
         moves(s) += r.getLong(4).toDouble
         nStart(s) += r.getLong(5).toDouble
-        if (!r.isNullAt(1) && r.getLong(6) > 0)
+        if (!r.isNullAt(1))
           nSucc(s)(r.getLong(1).toInt) += r.getLong(6).toDouble
       }
     }
-    def safeDiv(a: Double, b: Double) = if (b != 0.0) a / b else 0.0
-    val pScoring = Array.tabulate(n)(i => safeDiv(goals(i), shots(i)))
-    val pShot = Array.tabulate(n)(i => safeDiv(shots(i), shots(i) + moves(i)))
-    val pMove = Array.tabulate(n)(i => safeDiv(moves(i), shots(i) + moves(i)))
-
     val trans = Array.fill(n)(new Array[Double](n))
     var ti = 0
     while (ti < n) {
@@ -153,6 +152,19 @@ object XThreat {
       }
       ti += 1
     }
+    solve(l, w, shots, goals, moves, trans, eps, maxIterations)
+  }
+
+  /** The driver half of [[fit]]: per-cell shot/goal/move counts and the
+    * move transition matrix ([start][end]) → probabilities and the value
+    * surface (reference `__solve`, `xthreat.py:278-320`). */
+  def solve(l: Int, w: Int, shots: Array[Double], goals: Array[Double], moves: Array[Double],
+            trans: Array[Array[Double]], eps: Double, maxIterations: Int): Model = {
+    val n = l * w
+    def safeDiv(a: Double, b: Double) = if (b != 0.0) a / b else 0.0
+    val pScoring = Array.tabulate(n)(i => safeDiv(goals(i), shots(i)))
+    val pShot = Array.tabulate(n)(i => safeDiv(shots(i), shots(i) + moves(i)))
+    val pMove = Array.tabulate(n)(i => safeDiv(moves(i), shots(i) + moves(i)))
 
     // value iteration: xT ← pScoring·pShot + pMove·(T xT), until the signed
     // per-cell improvement is ≤ eps everywhere (the surface is monotone

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession => AnySession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Bridge between graft's custom Catalyst expressions and the public
   * `Column` API. Spark 4 made `Column` a ColumnNode wrapper and scoped the
@@ -12,7 +13,7 @@ import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
   * `org.apache.spark.sql` to re-export exactly the conversions the
   * library needs (the standard extension-library pattern), plus the
   * `Dataset.ofRows` factory that wraps a custom logical node as a
-  * DataFrame, a session clone and a session's Hadoop configuration, and a
+  * DataFrame, a session clone, a session's SQL and Hadoop configurations, and a
   * wait on the listener bus.
   */
 object Shim {
@@ -28,6 +29,9 @@ object Shim {
 
   /** A child of `spark` that starts with a copy of every session conf. */
   def cloneSession(spark: AnySession): SparkSession = spark.asInstanceOf[SparkSession].cloneSession()
+
+  /** `spark`'s SQL conf. */
+  def sqlConf(spark: AnySession): SQLConf = spark.asInstanceOf[SparkSession].sessionState.conf
 
   /** The context's Hadoop conf overlaid with `spark`'s session confs. */
   def hadoopConf(spark: AnySession): Configuration = spark.asInstanceOf[SparkSession].sessionState.newHadoopConf()

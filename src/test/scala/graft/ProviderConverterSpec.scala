@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.core.Spadl
-import graft.sources.{Opta, Wyscout}
+import graft.core.{Spadl, SynKloppy, SynOpta, SynStatsBomb, SynWyscout, Tables}
+import graft.sources.{Kloppy, Opta, StatsBomb, Wyscout}
 
 /** Hand-built-row semantics of the Opta and Wyscout full converters —
-  * each case transcribed from the reference repair functions. */
-class ProviderConverterSpec extends SparkSpec {
+  * each case transcribed from the reference repair functions — and what
+  * each converter's one exchange carries. */
+class ProviderConverterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   // ---- Opta -----------------------------------------------------------
@@ -163,5 +168,36 @@ class ProviderConverterSpec extends SparkSpec {
     // the away team (team 1 vs home 0): 105 − 5 = 100, 68 − 34 = 34
     assert(gk.getAs[Double]("start_x") == 100.0 && gk.getAs[Double]("start_y") == 34.0)
     assert(gk.getAs[Int]("result_id") == Spadl.ResultFail) // no next action → fail
+  }
+
+  // ---- the per-game exchange ------------------------------------------
+
+  test("each converter ships one exchange of narrow typed columns") {
+    val events = Tables.events(spark, "/root/testdata/sf0.001")
+    val converters: Seq[(String, DataFrame, Set[String])] = Seq(
+      ("statsbomb", StatsBomb.convertToActions(SynStatsBomb.fromEvents(events), SynStatsBomb.homeTeamId),
+        Set("location", "end_loc")),
+      ("opta", Opta.convertToActions(SynOpta.fromEvents(events), SynOpta.homeTeamId), Set.empty),
+      ("wyscout", Wyscout.convertToActions(SynWyscout.fromEvents(events), SynWyscout.homeTeamId),
+        Set.empty),
+      ("kloppy", Kloppy.convertToActions(SynKloppy.fromEvents(events)), Set.empty))
+    def types(t: DataType): Seq[DataType] = t +: (t match {
+      case s: StructType => s.fields.toSeq.flatMap(f => types(f.dataType))
+      case a: ArrayType => types(a.elementType)
+      case m: MapType => types(m.keyType) ++ types(m.valueType)
+      case _ => Nil
+    })
+    def wide(t: DataType) =
+      types(t).exists(x => x.isInstanceOf[StringType] || x == BinaryType || x.isInstanceOf[MapType])
+    val problems = converters.flatMap { case (name, df, arrays) =>
+      assert(df.collect().nonEmpty, name)
+      val exchanges = collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      val out = exchanges.flatMap(_.output)
+      val shipped = out.filter(a => types(a.dataType).exists(_.isInstanceOf[ArrayType])).map(_.name).toSet
+      (if (exchanges.length == 1) Nil else Seq(s"$name: ${exchanges.length} exchanges")) ++
+        (if (!out.exists(a => wide(a.dataType)) && shipped == arrays) Nil
+        else Seq(s"$name ships ${out.mkString(", ")}"))
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 }

@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
 
 import graft.core.{SynActions, Tables}
+import graft.streaming.SnapshotTable
 
 /** Table-layout behavior the 100 TB design relies on (SURVEY §4.3):
   * partition pruning on a bucketed directory layout and predicate pushdown
@@ -44,5 +47,30 @@ class StorageLayoutSpec extends SparkSpec {
     assert(readSchema.contains("game_id") && readSchema.contains("type_id"))
     assert(!readSchema.contains("start_x") && !readSchema.contains("bodypart_id"),
       readSchema)
+  }
+
+  test("table reads take Spark's inferred schema from a footer and start no job") {
+    val sc = spark.sparkContext
+    def jobs() = { Shim.drainListeners(spark); sc.statusTracker.getJobIdsForGroup(null).toSet }
+    def noJob(read: => DataFrame) = {
+      val before = jobs()
+      val schema = read.schema
+      assert(jobs() == before, "the read started a Spark job")
+      schema
+    }
+    val sf = "/root/testdata/sf0.001"
+    for (t <- Seq("events", "documents", "embeddings", "lineitem", "orders", "customer",
+        "nation", "region", "part", "supplier"))
+      assert(noJob(Tables.read(spark, sf, t)) == spark.read.parquet(s"$sf/$t.parquet").schema, t)
+
+    val table = new SnapshotTable(Files.createTempDirectory("graft_schema").toString)
+    val actions = SynActions.fromEvents(Tables.events(spark, sf))
+    assert(table.commit(actions.filter(col("game_id") % 2 === 0), 0L))
+    assert(table.commit(actions.filter(col("game_id") % 2 === 1), 1L))
+    val files = table.liveFiles
+    assert(files.length >= 2)
+    val read = table.read(spark)
+    assert(noJob(table.read(spark)) == spark.read.parquet(files: _*).schema)
+    assert(read.count() == actions.count())
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
@@ -264,6 +265,34 @@ class StreamingSpec extends SparkSpec {
     assert(table.liveFiles.map(f => new HadoopPath(f).getName).toSet.intersect(orphans).isEmpty)
   }
 
+  test("snapshot sink: a commit that loses its version race leaves nothing behind") {
+    val dir = Files.createTempDirectory("snap_race")
+    val table = new SnapshotTable(dir.toString)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.streaming.checkpointFileManagerClass", classOf[ForeignFirstManifest].getName)
+    def rows(game: Long, n: Int) = s.createDataFrame(mkRows(game, n))
+    def names(sub: String) = Files.list(dir.resolve(sub)).iterator().asScala.map(_.getFileName.toString).toSeq
+    def clean(): Unit = {
+      assert(names("metadata").forall(_.matches("""\.?snapshot-\d+\.json(\.crc)?""")), names("metadata"))
+      val live = table.liveFiles.map(f => new HadoopPath(f).getParent.getName).toSet
+      assert(names("data").filterNot(_.startsWith(".")).toSet == live)
+    }
+    assert(table.commit(rows(1, 3), 0L, "w"))
+    // a foreign manifest takes version 1 just before this commit publishes
+    ForeignFirstManifest.next.set(("foreign", 0L))
+    assert(table.commit(rows(2, 4), 1L, "w"))
+    assert(table.currentVersion.contains(2L))
+    assert(table.lineage(1L).isEmpty && table.lineage(2L).map(_._2).sum == 4L)
+    assert(table.committedEpochs == Set(("w", 0L), ("foreign", 0L), ("w", 1L)))
+    clean()
+    // the version was taken by this very (writer, epoch): a replay, no-op
+    ForeignFirstManifest.next.set(("w", 2L))
+    assert(!table.commit(rows(3, 5), 2L, "w"))
+    assert(table.currentVersion.contains(3L) && table.lineage(3L).isEmpty)
+    assert(names("metadata").forall(_.matches("""\.?snapshot-\d+\.json(\.crc)?""")))
+    assert(table.read(s).count() == 7L)
+  }
+
   test("checkpoint resume: restart continues without duplicating output") {
     implicit val sqlCtx = spark.sqlContext
     val ckpt = Files.createTempDirectory("ckpt2").toString
@@ -326,4 +355,27 @@ class FailFirstManifest(path: HadoopPath, conf: Configuration) extends Checkpoin
 object FailFirstManifest {
   val armed = new AtomicBoolean(false)
   val Message = "injected fault before the manifest"
+}
+
+/** The default checkpoint file manager, except that the next snapshot
+  * manifest published after [[ForeignFirstManifest.next]] is set finds its
+  * version already taken by a manifest of that (writer, epoch) with no
+  * files: a concurrent writer that won the race. */
+class ForeignFirstManifest(path: HadoopPath, conf: Configuration) extends FailFirstManifest(path, conf) {
+  override def createAtomic(p: HadoopPath, overwriteIfPossible: Boolean)
+      : CheckpointFileManager.CancellableFSDataOutputStream = {
+    val foreign = if (p.getName.startsWith("snapshot-")) ForeignFirstManifest.next.getAndSet(null) else null
+    if (foreign != null) {
+      val v = p.getName.stripPrefix("snapshot-").stripSuffix(".json")
+      val out = super.createAtomic(p, overwriteIfPossible = false)
+      out.write(s"""{"version":$v,"writer":"${foreign._1}","epochId":${foreign._2},"files":[]}"""
+        .getBytes(UTF_8))
+      out.close()
+    }
+    super.createAtomic(p, overwriteIfPossible)
+  }
+}
+
+object ForeignFirstManifest {
+  val next = new AtomicReference[(String, Long)]()
 }

@@ -107,6 +107,41 @@ class XThreatSpec extends SparkSpec {
     (0 until mc.xT.length).foreach(i => assert(mc.xT(i) >= m5.xT(i) - 1e-12))
   }
 
+  test("fit is bit-identical to the model assembled from cellStats and transitionEntries") {
+    import org.apache.spark.sql.functions._
+    // NaN starts, null ends, failed and successful moves, shots and goals
+    val moveOrShot = Seq(0, 1, 21, 11, 7) // pass, cross, dribble, shot, take-on
+    val actions = df((0 until 300).map { i =>
+      row(if (i % 17 == 0) Double.NaN else (i * 13 % 105).toDouble,
+        if (i % 19 == 0) Double.NaN else (i * 7 % 68).toDouble,
+        (i * 29 % 105).toDouble, (i * 11 % 68).toDouble,
+        moveOrShot(i % 5), i % 2, i.toLong)
+    }: _*).withColumn("end_x", when(col("seq") % 11 === 0, lit(null)).otherwise(col("end_x")))
+    val (l, w) = (XThreat.DefaultL, XThreat.DefaultW)
+    val n = l * w
+    val Seq(shots, goals, moves) = Seq.fill(3)(new Array[Double](n))
+    XThreat.cellStats(actions).collect().foreach { r =>
+      val c = r.getLong(0).toInt
+      shots(c) = r.getLong(1).toDouble
+      goals(c) = r.getLong(2).toDouble
+      moves(c) = r.getLong(3).toDouble
+    }
+    val trans = Array.fill(n)(new Array[Double](n))
+    XThreat.transitionEntries(actions).collect().filterNot(_.isNullAt(1))
+      .foreach(r => trans(r.getLong(0).toInt)(r.getLong(1).toInt) = r.getDouble(2))
+    assert(trans.exists(_.exists(_ > 0)) && goals.sum > 0)
+    for ((eps, iterations) <- Seq((1e-5, Int.MaxValue), (Double.NegativeInfinity, 7))) {
+      val fitted = XThreat.fit(actions, l, w, eps, iterations)
+      val built = XThreat.solve(l, w, shots, goals, moves, trans, eps, iterations)
+      def same(a: Array[Double], b: Array[Double]) = java.util.Arrays.equals(a, b)
+      assert(same(fitted.pScoring, built.pScoring))
+      assert(same(fitted.pShot, built.pShot))
+      assert(same(fitted.pMove, built.pMove))
+      assert(fitted.transition.indices.forall(i => same(fitted.transition(i), built.transition(i))))
+      assert(same(fitted.xT, built.xT) && fitted.iterations == built.iterations)
+    }
+  }
+
   test("JSON save/load roundtrip") {
     val actions = df(
       row(10, 10, 90, 34, 11, 1, 0),

@@ -1,12 +1,13 @@
 #!/usr/bin/env python3
 """Alternating A/B pairs of one perfbench workload on two checkouts.
 
-    python3 tools/abpairs.py <parentDir> <changeDir> <workload> <pairs>
+    python3 tools/abpairs.py <parentDir> <changeDir> <workload> <pairs> [firstSeed]
 
-Pair i runs `python3 perfbench/run.py --workload <workload> --seed i
---seconds <run_seconds> --trace 0` once in each checkout, the parent first
-in even pairs and the change first in odd ones, so a drift in the host's
-load falls on both sides alike. `run_seconds` and the gated end-to-end
+Pair i runs `python3 perfbench/run.py --workload <workload> --seed
+firstSeed+i --seconds <run_seconds> --trace 0` once in each checkout, the
+parent first in even pairs and the change first in odd ones, so a drift in
+the host's load falls on both sides alike. `firstSeed` defaults to 0; give
+a final A/B seeds not used while developing the change (e.g. 10). `run_seconds` and the gated end-to-end
 metrics (name, direction, bound) come from the change's BENCHMARK.json.
 Each checkout builds its own `.bench_build/` on its first run.
 
@@ -14,13 +15,17 @@ Prints one line per run (pair, side, seed, correct, metrics, and the
 `perfbench:` notes of the run's log, such as the search recall), then one
 line per gated metric:
 
-    metric  parent-median  change-median  delta  parent-IQR  wins  verdict
+    metric  parent-median  change-median  delta  parent-IQR  wins  verdict  claim
 
-`wins` counts the pairs where the change was better. The verdict is
-`unresolved` when the parent's interquartile spread alone exceeds the
-bound, else `worse` when the change's median is worse than the parent's by
-more than the bound, and `ok` otherwise. A run that fails or reports
-`correct: false` is listed and left out of the statistics.
+`wins` counts the pairs where the change was better; a tie counts for
+neither side. The verdict is `unresolved` when the parent's interquartile
+spread alone exceeds the bound, else `worse` when the change's median is
+worse than the parent's by more than the bound, and `ok` otherwise. The
+claim reads `shown` when the change wins at least nine tenths of the pairs
+and its median is better than the parent's by more than the parent's
+interquartile range, else `not shown` (the rule of a claimed gain). A run
+that fails or reports `correct: false` is listed and left out of the
+statistics.
 """
 import json
 import os
@@ -53,9 +58,10 @@ def quartiles(xs):
 
 
 def main():
-    if len(sys.argv) != 5:
+    if len(sys.argv) not in (5, 6):
         sys.exit(__doc__)
     parent, change, workload, pairs = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
+    first_seed = int(sys.argv[5]) if len(sys.argv) == 6 else 0
     with open(os.path.join(change, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
     gated = bench["end_to_end"]
@@ -67,11 +73,12 @@ def main():
     for i in range(pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         got = {}
+        seed = first_seed + i
         for side in order:
-            res, notes = run(sides[side], workload, i, seconds)
+            res, notes = run(sides[side], workload, seed, seconds)
             ok = res is not None and res["correct"]
             metrics = {k: v["value"] for k, v in res["metrics"].items()} if res else {}
-            print(json.dumps({"pair": i, "side": side, "seed": i, "correct": ok, "metrics": metrics,
+            print(json.dumps({"pair": i, "side": side, "seed": seed, "correct": ok, "metrics": metrics,
                               "notes": notes}), flush=True)
             if ok:
                 got[side] = metrics
@@ -83,7 +90,7 @@ def main():
             if len(got) == 2:
                 a, b = got["parent"][name], got["change"][name]
                 wins[name] += (b < a) if m["better"] == "lower" else (b > a)
-    print(f"{'metric':<18}{'parent':>12}{'change':>12}{'delta':>9}{'parent IQR':>16}{'wins':>8}  verdict")
+    print(f"{'metric':<18}{'parent':>12}{'change':>12}{'delta':>9}{'parent IQR':>16}{'wins':>8}  verdict     claim")
     for m in gated:
         name, lower = m["name"], m["better"] == "lower"
         pv, cv = values["parent"][name], values["change"][name]
@@ -96,8 +103,10 @@ def main():
         spread = (q3 - q1) / pm if pm else 0.0
         worse = delta > m["bound"] if lower else -delta > m["bound"]
         verdict = "unresolved" if spread > m["bound"] else "worse" if worse else "ok"
+        gain = pm - cm if lower else cm - pm
+        claim = "shown" if paired and 10 * wins[name] >= 9 * paired and gain > q3 - q1 else "not shown"
         print(f"{name:<18}{pm:>12.4g}{cm:>12.4g}{delta:>+9.1%}{q3 - q1:>10.3g} ({spread:>3.0%})"
-              f"{wins[name]:>5}/{paired:<3} {verdict}")
+              f"{wins[name]:>5}/{paired:<3} {verdict:<11} {claim}")
 
 
 if __name__ == "__main__":
