@@ -248,8 +248,9 @@ object Dedup {
     * bits covers Hamming ≤ 3. At corpus scale, bucket occupancy ≈
     * N / 2^bandBits per band — shrink bandBits (more, narrower bands) only
     * for higher Hamming radii, and widen it (e.g. 2 × 16 bits for Hamming
-    * ≤ 1) to keep occupancy bounded as N grows. */
-  /** `bucketCap < 0` (the default) sizes the cap from the corpus IN-PLAN:
+    * ≤ 1) to keep occupancy bounded as N grows.
+    *
+    * `bucketCap < 0` (the default) sizes the cap from the corpus IN-PLAN:
     * a one-row count aggregate broadcast-cross-joined onto the banded
     * frame (the lmScore one-row-vocab pattern), evaluating
     * [[simhashCapFor]]'s integer formula as a Column. The operator stays

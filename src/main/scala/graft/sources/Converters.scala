@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Spadl.{FieldLength, FieldWidth}
@@ -8,7 +8,9 @@ import graft.core.Spadl.{FieldLength, FieldWidth}
 /** Provider-specific coordinate/time normalizers (SURVEY.md §2.2 P2–P13) —
   * the scalar core of the StatsBomb / Opta / Wyscout converters, as pure
   * Column expressions (the reference uses row-at-a-time `apply`, strictly
-  * slower; Catalyst codegen vectorizes these for free, §4.1).
+  * slower; Catalyst codegen vectorizes these for free, §4.1), plus the
+  * one interception split (§2.3 N3/N4) the StatsBomb and Wyscout
+  * converters share.
   */
 object Converters {
 
@@ -72,6 +74,28 @@ object Converters {
   /** P12 — Wyscout tag array → boolean flag per tag id
     * (reference `spadl/wyscout.py:59-139`, 59 tag columns). */
   def hasTag(tags: Column, tagId: Int): Column = array_contains(tags, tagId)
+
+  /** N3/N4 — the interception split StatsBomb and Wyscout share
+    * (reference `spadl/statsbomb.py:125-159`, `spadl/wyscout.py:377-418`):
+    * each row where `carrier` holds is preceded by a derived copy whose
+    * columns named in `derived` take the given values; a null `carrier` is
+    * false (`when`). One pass — an `explode` of [derived, row] or [row],
+    * not base ∪ derived, which would evaluate the upstream twice. `seq`
+    * becomes 2·seq (derived) / 2·seq+1 (original), so the derived row sorts
+    * immediately before its carrier in a unique total order. */
+  def insertBefore(events: DataFrame, carrier: Column, derived: Map[String, Column]): DataFrame = {
+    val cols = events.columns.filterNot(_ == "game_id")
+    def row(seq: Column, values: Map[String, Column]): Column = struct(cols.map {
+      case "seq" => seq.as("seq")
+      case c => values.getOrElse(c, col(c)).as(c)
+    }: _*)
+    val original = row(col("seq") * 2 + 1, Map.empty)
+    events
+      .select(col("game_id"),
+        explode(when(carrier, array(row(col("seq") * 2, derived), original))
+          .otherwise(array(original))).as("r"))
+      .select(col("game_id"), col("r.*"))
+  }
 
   private def clipX(c: Column): Column = least(greatest(c, lit(0.0)), lit(FieldLength))
   private def clipY(c: Column): Column = least(greatest(c, lit(0.0)), lit(FieldWidth))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Spadl._
-import graft.operators.SpadlOps
+import graft.operators.{RepairOps, SpadlOps}
 
 /** The full Opta event→SPADL converter (SURVEY.md §2.2 P9): the
   * qualifier-driven type/result/bodypart dispatch and the Opta-specific
@@ -82,16 +82,10 @@ object Opta {
 
   /** Full conversion (`opta.py:18-80`). */
   def convertToActions(events: DataFrame, homeTeamId: Column): DataFrame = {
-    val timeSeconds =
-      (col("minute") * 60 + col("second")
-        - when(col("period_id") > 1, 45 * 60).otherwise(0)
-        - when(col("period_id") > 2, 45 * 60).otherwise(0)
-        - when(col("period_id") > 3, 15 * 60).otherwise(0)
-        - when(col("period_id") > 4, 15 * 60).otherwise(0)).cast("double")
-
     val parsed = events.select(
       col("game_id"), col("period_id"),
-      timeSeconds.as("time_seconds"),
+      Converters.optaTimeSeconds(col("minute"), col("second"), col("period_id"))
+        .cast("double").as("time_seconds"),
       col("team_id"), col("player_id"),
       Converters.optaX(col("start_x")).as("start_x"),
       Converters.optaY(col("start_y")).as("start_y"),
@@ -154,16 +148,9 @@ object Opta {
 
     val actions = touched.filter(col("type_id") =!= TypeNonAction)
 
-    // `_fix_owngoals` (`opta.py:186-198`): own-goal shots become bad
-    // touches with mirrored end coordinates (meters; before direction fix).
-    val owngoal = col("result_id") === ResultOwngoal && col("type_id") === TypeShot
-    val owngoals = actions
-      .withColumn("new_end_x", when(owngoal, lit(FieldLength) - col("end_x")).otherwise(col("end_x")))
-      .withColumn("new_end_y", when(owngoal, lit(FieldWidth) - col("end_y")).otherwise(col("end_y")))
-      .withColumn("end_x", col("new_end_x")).withColumn("end_y", col("new_end_y"))
-      .drop("new_end_x", "new_end_y")
-      .withColumn("type_id", when(owngoal, TypeBadTouch).otherwise(col("type_id")))
-
-    SpadlOps.normalize(SpadlOps.fixDirectionOfPlay(owngoals, homeTeamId), interceptions = true)
+    // `_fix_owngoals` mirrors in meters, before the direction fix
+    SpadlOps.normalize(
+      SpadlOps.fixDirectionOfPlay(RepairOps.fixOwngoals(actions), homeTeamId),
+      interceptions = true)
   }
 }

@@ -19,10 +19,11 @@ import graft.operators.SpadlOps
   * `(game_id, event_id, period_id, timestamp "HH:MM:SS.mmm", team_id,
   * player_id, type_name, location array<double>, extra JSON-string, seq)`.
   * The `extra` bag is parsed ONCE per row with `from_json` into a typed
-  * struct (the Spark-first equivalent of the reference's dict column —
-  * one codegen'd parse instead of N path probes), and every event parser is
-  * a `when`-chain over the struct fields. The dispatch, the time parse, the
-  * end-location choice and a per-row fractional-coordinate flag form one
+  * struct before the interception split (the Spark-first equivalent of
+  * the reference's dict column — one codegen'd parse instead of N path
+  * probes), and every event parser is a `when`-chain over the struct
+  * fields. The dispatch, the time parse, the end-location choice and a
+  * per-row fractional-coordinate flag form one
   * map-side projection before the converter's only exchange (the fidelity
   * window's, whose game_id partitioning the normalizer's per-game scan
   * reuses). That exchange carries game/period/team/player ids, `seq`,
@@ -212,37 +213,6 @@ object StatsBomb {
       .otherwise(nonAction)
   }
 
-  /** N3 — passes that are also interceptions (pass.type = "Interception")
-    * split into interception-then-pass (`statsbomb.py:125-159`). The derived
-    * interception keeps the pass's location/timestamp and sorts immediately
-    * BEFORE it (the reference concatenates [interceptions, events] and
-    * stable-sorts by timestamp); `seq` is re-derived as 2·seq (derived) /
-    * 2·seq+1 (original) to keep a unique total order. */
-  def insertInterceptionPasses(events: DataFrame, extra: Column): DataFrame = {
-    val isInterceptionPass =
-      name(extra.getField("pass").getField("type")) === "Interception"
-    // one-pass explode (not base∪derived, which would scan the raw events
-    // twice): each interception-pass emits [derived interception, pass]
-    val cols = events.columns.filterNot(_ == "game_id")
-    val baseS = struct(cols.map {
-      case "seq" => (col("seq") * 2 + 1).as("seq")
-      case c => col(c).as(c)
-    }: _*)
-    val derivedS = struct(cols.map {
-      case "type_name" => lit("Interception").as("type_name")
-      case "extra" =>
-        lit("""{"interception": {"outcome": {"id": 16, "name": "Success In Play"}}}""")
-          .as("extra")
-      case "seq" => (col("seq") * 2).as("seq")
-      case c => col(c).as(c)
-    }: _*)
-    events
-      .select(col("game_id"),
-        explode(when(coalesce(isInterceptionPass, lit(false)), array(derivedS, baseS))
-          .otherwise(array(baseS))).as("r"))
-      .select(col("game_id"), col("r.*"))
-  }
-
   /** Cell-grid → meters for a 2-element location; 3-element (goal-frame
     * shot end) locations use the always-high-fidelity y rule
     * (`statsbomb.py:175-215`). */
@@ -255,7 +225,7 @@ object StatsBomb {
         lit(0.0)), lit(FieldWidth)))
       .otherwise(Converters.statsBombY(element_at(loc, 2), cellSide))
 
-  /** Full conversion: interception split → extra-bag parse → dispatch →
+  /** Full conversion: extra-bag parse → interception split → dispatch →
     * coordinates/time → non_action filter → direction fix → clearance fix →
     * resequence → dribble synthesis (`statsbomb.py:17-120`). One shuffle
     * total: every expression that reads only its own row (the dispatch, the
@@ -265,17 +235,29 @@ object StatsBomb {
     * stages read — and the per-game normalizer scan shares its game_id
     * partitioning. */
   def convertToActions(rawEvents: DataFrame, homeTeamId: Column): DataFrame = {
-    val withSplit = insertInterceptionPasses(rawEvents, from_json(col("extra"), extraSchema))
-    // parse the extra bag ONCE into a materialized struct column: the
-    // dispatch references the parsed bag from inside dozens of `when`
-    // branches, where whole-stage codegen's subexpression elimination does
-    // NOT hoist conditional subexpressions — the plan carried ~100 textual
-    // from_json instances and re-parsed the JSON per consulted branch.
-    // Materializing the alias keeps one JsonToStructs per row
-    // (CollapseProject refuses to inline a non-cheap alias referenced more
-    // than once), and downstream uses are plain struct-field reads.
-    val withParsed = withSplit.withColumn("__extra_parsed", from_json(col("extra"), extraSchema))
-    val x = col("__extra_parsed")
+    // parse the extra bag ONCE, before the split, into a materialized
+    // struct column that replaces the raw string: the dispatch references
+    // the parsed bag from inside dozens of `when` branches, where
+    // whole-stage codegen's subexpression elimination does NOT hoist
+    // conditional subexpressions — the plan carried ~100 textual from_json
+    // instances and re-parsed the JSON per consulted branch. Materializing
+    // the alias keeps one JsonToStructs per row (CollapseProject refuses to
+    // inline a non-cheap alias referenced more than once), and downstream
+    // uses are plain struct-field reads.
+    val parsed = rawEvents.withColumn("extra", from_json(col("extra"), extraSchema))
+    val x = col("extra")
+    // N3 — passes that are also interceptions (pass.type = "Interception")
+    // split into interception-then-pass (`statsbomb.py:125-159`): the
+    // derived interception keeps the pass's location/timestamp and sorts
+    // immediately BEFORE it (the reference concatenates [interceptions,
+    // events] and stable-sorts by timestamp); its bag is a constant-folded
+    // literal parse
+    val withSplit = Converters.insertBefore(parsed,
+      name(x.getField("pass").getField("type")) === "Interception",
+      Map("type_name" -> lit("Interception"),
+        "extra" -> from_json(
+          lit("""{"interception": {"outcome": {"id": 16, "name": "Success In Play"}}}"""),
+          extraSchema)))
 
     // end location priority: pass → shot → carry → fall back to location
     val endLoc = coalesce(
@@ -289,7 +271,7 @@ object StatsBomb {
     // time parse, `statsbomb.py:80`, also precedes the non_action filter);
     // element_at on `location` feeds the fidelity window, which reads every
     // event anyway
-    val perRow = withParsed.select(
+    val perRow = withSplit.select(
       col("game_id"),
       col("period_id"),
       Converters.statsBombTimeSeconds(col("timestamp")).as("time_seconds"),

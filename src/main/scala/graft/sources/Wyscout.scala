@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Spadl._
-import graft.operators.SpadlOps
+import graft.core.SynActions.Wg
+import graft.operators.{RepairOps, SpadlOps}
 
 /** The full Wyscout event→SPADL converter (SURVEY.md §2.2 P10 + §2.3
   * N12/N13/N15) — reference `socceraction/spadl/wyscout.py:25-917`
@@ -31,8 +32,6 @@ import graft.operators.SpadlOps
   * the raw `tags` array nor `event_id`, which no later stage reads.
   */
 object Wyscout {
-
-  private def tag(id: Int): Column = array_contains(col("tags"), id)
 
   /** Tag ids consulted by the pipeline (the relevant subset of the
     * reference's 59-entry `wyscout_tags`, `wyscout.py:79-139`). Exploded to
@@ -70,15 +69,16 @@ object Wyscout {
         Converters.wyscoutStartY(col("positions")).as("start_y"),
         Converters.wyscoutEndX(col("positions")).as("end_x"),
         Converters.wyscoutEndY(col("positions")).as("end_y")) ++
-        tagCols.map { case (n, id) => tag(id).as(n) }: _*)
+        tagCols.map { case (n, id) => Converters.hasTag(col("tags"), id).as(n) }: _*)
 
     // ---- step 1: shot goal-mosaic end coordinates (N13, `:207-287`) -----
     val shot = col("subtype_id").isin(33, 100)
     val pas = col("type_id") === 8
-    val anyMosaic = MosaicGroups.flatMap(_._1).map(tag).reduce(_ || _)
+    val anyTag = (ids: Seq[Int]) => ids.map(Converters.hasTag(col("tags"), _)).reduce(_ || _)
+    val anyMosaic = anyTag(MosaicGroups.flatMap(_._1))
     // last-wins pandas assignment ⇒ when-chain in REVERSE application order
     val mosaicY = MosaicGroups.reverse.foldLeft(lit(null).cast("double")) {
-      case (acc, (ids, y)) => when(ids.map(tag).reduce(_ || _), y).otherwise(acc)
+      case (acc, (ids, y)) => when(anyTag(ids), y).otherwise(acc)
     }
     val mosaicked = base
       .withColumn("end_x",
@@ -130,31 +130,14 @@ object Wyscout {
         "nx2_period", "nx2_sx", "nx2_sy", "won")
 
     // ---- step 3: interception insertion (N4, `:377-418`) ----------------
-    // one-pass explode (not base∪derived, which would evaluate the whole
-    // upstream chain twice): each carrier row emits [derived, base]
     val isInterceptionCarrier = col("interception") &&
       (col("type_id") === 8 || col("subtype_id").isin(70, 71))
-    val d2cols = d2.columns.filterNot(_ == "game_id")
-    val tagNames = tagCols.map(_._1).toSet
-    val baseS = struct(d2cols.map {
-      case "seq" => (col("seq") * 2 + 1).as("seq")
-      case c => col(c).as(c)
-    }: _*)
-    val derivedS = struct(d2cols.map {
-      case "type_id" => lit(0).as("type_id")
-      case "subtype_id" => lit(0).as("subtype_id")
-      case "end_x" => col("start_x").as("end_x")
-      case "end_y" => col("start_y").as("end_y")
-      case "seq" => (col("seq") * 2).as("seq")
-      case "interception" => lit(true).as("interception")
-      case c if tagNames.contains(c) => lit(false).as(c)
-      case c => col(c).as(c)
-    }: _*)
-    val d3 = d2
-      .select(col("game_id"),
-        explode(when(isInterceptionCarrier, array(derivedS, baseS))
-          .otherwise(array(baseS))).as("r"))
-      .select(col("game_id"), col("r.*"))
+    // the derived interception is in place, untyped, with every tag reset
+    // but `interception`
+    val d3 = Converters.insertBefore(d2, isInterceptionCarrier,
+      Map("type_id" -> lit(0), "subtype_id" -> lit(0),
+        "end_x" -> col("start_x"), "end_y" -> col("start_y")) ++
+        tagCols.map { case (n, _) => n -> lit(n == "interception") })
     // post-insertion canonical order: stable (period, ms) with derived first
     val wMs = Window.partitionBy("game_id")
       .orderBy("period_id", "milliseconds", "seq")
@@ -265,21 +248,13 @@ object Wyscout {
       .filter(col("type_id") =!= TypeNonAction)
 
     // ---- step 8: fix_actions (`:745-917`) -------------------------------
-    val wAct = Window.partitionBy("game_id").orderBy("period_id", "time_seconds", "seq")
     val metered = actions
       .withColumn("start_x", Converters.wyscoutX(col("start_x")))
       .withColumn("start_y", Converters.wyscoutY(col("start_y")))
       .withColumn("end_x", Converters.wyscoutX(col("end_x")))
       .withColumn("end_y", Converters.wyscoutY(col("end_y")))
-    val goalkick = col("type_id") === TypeGoalkick
-    val fixed = metered
-      // N14 — goalkick start → (5, 34); result from next-action possession
-      .withColumn("start_x", when(goalkick, 5.0).otherwise(col("start_x")))
-      .withColumn("start_y", when(goalkick, 34.0).otherwise(col("start_y")))
-      .withColumn("result_id",
-        when(goalkick && (col("team_id") <=> lead("team_id", 1).over(wAct)), ResultSuccess)
-          .when(goalkick, ResultFail)
-          .otherwise(col("result_id")))
+    // N14 — goalkick start → (5, 34); result from next-action possession
+    val fixed = RepairOps.fixGoalkicks(metered)
       // foul end := start
       .withColumn("end_x",
         when(col("type_id") === TypeFoul, col("start_x")).otherwise(col("end_x")))
@@ -295,9 +270,9 @@ object Wyscout {
     // N15 — drop keeper saves right after a goal (same 10 s phase);
     // window expressions can't sit in a filter, so materialize first
     val prevGoal =
-      lag("type_id", 1).over(wAct).isin(TypeShot, TypeShotPenalty, TypeShotFreekick) &&
-        lag("result_id", 1).over(wAct) === ResultSuccess &&
-        (lag("time_seconds", 1).over(wAct) + 10 > col("time_seconds"))
+      lag("type_id", 1).over(Wg).isin(TypeShot, TypeShotPenalty, TypeShotFreekick) &&
+        lag("result_id", 1).over(Wg) === ResultSuccess &&
+        (lag("time_seconds", 1).over(Wg) + 10 > col("time_seconds"))
     val cleaned = savesFixed
       .withColumn("dropSave", coalesce(saves && prevGoal, lit(false)))
       .filter(!col("dropSave"))

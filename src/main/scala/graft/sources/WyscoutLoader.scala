@@ -5,17 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** S9 — the Wyscout API loader (local layout): `competitions.json`,
-  * `seasons_{competition_id}.json`, `matches_{season_id}.json`,
-  * `events_{game_id}.json` (the API payload with events/teams/players/match
-  * sections). Reference `socceraction/data/wyscout/loader.py:330-660`
-  * (feeds, accessors) and `:662-780` (the *_convert_* projections).
-  *
-  * `events(gameId)` emits exactly the frame `Wyscout.convertToActions`
-  * consumes: wyscout type/subtype ids, `tags` as array<int>, `positions` as
-  * array<struct<x,y>>, milliseconds from eventSec, period ids from the
-  * 1H/2H/E1/E2/P vocabulary, and a deterministic per-game `seq`.
-  */
 /** Shared Wyscout substitution-minutes algebra
   * (`socceraction/data/wyscout/loader.py:782-848` and `_expand_minute`,
   * `data/base.py:100-122`): per-period durations come from the event
@@ -143,6 +132,17 @@ object WyscoutMinutes {
   }
 }
 
+/** S9 — the Wyscout API loader (local layout): `competitions.json`,
+  * `seasons_{competition_id}.json`, `matches_{season_id}.json`,
+  * `events_{game_id}.json` (the API payload with events/teams/players/match
+  * sections). Reference `socceraction/data/wyscout/loader.py:330-660`
+  * (feeds, accessors) and `:662-780` (the *_convert_* projections).
+  *
+  * `events(gameId)` emits exactly the frame `Wyscout.convertToActions`
+  * consumes: wyscout type/subtype ids, `tags` as array<int>, `positions` as
+  * array<struct<x,y>>, milliseconds from eventSec, period ids from the
+  * 1H/2H/E1/E2/P vocabulary, and a deterministic per-game `seq`.
+  */
 final class WyscoutLoader(spark: SparkSession, root: String) {
 
   private def readJson(rel: String): DataFrame =

@@ -332,6 +332,18 @@ object TokenPipeline {
         (col("sum_logp") / col("n_bigrams")).as("avg_logp"))
   }
 
+  /** One-slot cache lifecycle for the pack metadata frame: the persist is
+    * load-bearing (phase-1 local prefixes and phase-2 base offsets must
+    * observe the SAME spark_partition_id assignment, and AQE does not
+    * reuse divergently-pruned exchanges), but it must not accumulate — a
+    * long-running curation service calls packChunks per batch. Each call
+    * releases the previous call's frame, so at most one ~16-byte/row
+    * metadata frame is ever cached per JVM. Concurrent packChunks plans
+    * built before the earlier one executes would recompute (correct,
+    * just uncached) — sequential pipelines, the normal case, never do. */
+  private val lastPackMeta =
+    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
+
   /** Concat-and-chunk packing: per source, docs in doc_id order are laid
     * out on a global token axis (running-sum offset) and cut into
     * `chunkSize` chunks; a doc overlapping k chunk boundaries contributes
@@ -365,18 +377,6 @@ object TokenPipeline {
     * and the chunk assembly, and the value of `off` — hence every
     * downstream chunk — is identical to the single-window form
     * (TokenPipelineSpec asserts; identical oracle). */
-  /** One-slot cache lifecycle for the pack metadata frame: the persist is
-    * load-bearing (phase-1 local prefixes and phase-2 base offsets must
-    * observe the SAME spark_partition_id assignment, and AQE does not
-    * reuse divergently-pruned exchanges), but it must not accumulate — a
-    * long-running curation service calls packChunks per batch. Each call
-    * releases the previous call's frame, so at most one ~16-byte/row
-    * metadata frame is ever cached per JVM. Concurrent packChunks plans
-    * built before the earlier one executes would recompute (correct,
-    * just uncached) — sequential pipelines, the normal case, never do. */
-  private val lastPackMeta =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   def packChunks(tokens: DataFrame, chunkSize: Int = 128): DataFrame = {
     val c = chunkSize
     val nParts = tokens.sparkSession.sessionState.conf.numShufflePartitions

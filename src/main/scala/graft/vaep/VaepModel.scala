@@ -121,15 +121,15 @@ object VaepModel {
     * (FrozenGbtSpec asserts ≤1e-12 parity with the ml transform on every
     * row), but runs as ONE whole-stage-codegen projection — no
     * VectorAssembler materialization and no per-row prediction UDF, the
-    * guide-§4 "prefer codegen expressions in the hot path" move. */
-  def estimateProbabilities(model: Fitted, df: DataFrame): DataFrame = {
-    val num = numericize(df, model.featureCols.toSeq)
-    num
+    * guide-§4 "prefer codegen expressions in the hot path" move. The walker
+    * reads each feature as `cast("double")`, so the features are not
+    * numericized first. */
+  def estimateProbabilities(model: Fitted, df: DataFrame): DataFrame =
+    df
       .withColumn("scores_p",
         FrozenGbt.column(FrozenGbt.fromMl(model.scores, model.featureCols)))
       .withColumn("concedes_p",
         FrozenGbt.column(FrozenGbt.fromMl(model.concedes, model.featureCols)))
-  }
 
   /** M3 — rate: probabilities + the VAEP value formula. */
   def rate(model: Fitted, df: DataFrame): DataFrame =

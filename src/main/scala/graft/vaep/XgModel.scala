@@ -48,11 +48,11 @@ object XgModel {
   /** P̂(goal) per shot as column `outCol` — scored through the FrozenGbt
     * literal-tree walker (≤1e-12 parity with the ml transform, see
     * VaepModel.estimateProbabilities): one codegen projection instead of a
-    * VectorAssembler + prediction-UDF stage. */
+    * VectorAssembler + prediction-UDF stage; the walker casts each feature
+    * to double itself. */
   def predict(model: GBTClassificationModel, df: DataFrame,
               featureCols: Array[String], outCol: String = "xg"): DataFrame =
-    VaepModel.numericize(df, featureCols.toSeq)
-      .withColumn(outCol, FrozenGbt.column(FrozenGbt.fromMl(model, featureCols)))
+    df.withColumn(outCol, FrozenGbt.column(FrozenGbt.fromMl(model, featureCols)))
 
   private def assemble(df: DataFrame, featureCols: Array[String]): DataFrame =
     new VectorAssembler().setInputCols(featureCols).setOutputCol("features_vec")

@@ -220,17 +220,6 @@ object XThreat {
     (l, w, parsed.flatten)
   }
 
-  /** M8 — closed-form bilinear interpolation over cell centers (replaces the
-    * reference's scipy `interp2d`, `xthreat.py:347-378`): value at (x, y)
-    * interpolates the 4 surrounding cell-center values, clamped at borders.
-    *
-    * This is the CLEAN path: rows map to physical y directly and the query
-    * point is evaluated exactly. The reference's double-flip +
-    * fine-lattice composition is available behind the
-    * [[interpolateColumnRefCompat]] / [[rateInterpRefCompatColumn]] flag
-    * surface — see the reference-compat section below for the proof that
-    * upstream's two flips cancel and the residual deviation is lattice
-    * quantization of the query point. */
   /** Column form of [[interpolate]] — the same closed-form bilinear math as
     * Column expressions over the surface literal, so `rate` with
     * interpolation is a map-only codegen'd projection exactly like the
@@ -266,6 +255,17 @@ object XThreat {
       .otherwise(lit(null).cast("double"))
   }
 
+  /** M8 — closed-form bilinear interpolation over cell centers (replaces the
+    * reference's scipy `interp2d`, `xthreat.py:347-378`): value at (x, y)
+    * interpolates the 4 surrounding cell-center values, clamped at borders.
+    *
+    * This is the CLEAN path: rows map to physical y directly and the query
+    * point is evaluated exactly. The reference's double-flip +
+    * fine-lattice composition is available behind the
+    * [[interpolateColumnRefCompat]] / [[rateInterpRefCompatColumn]] flag
+    * surface — see the reference-compat section below for the proof that
+    * upstream's two flips cancel and the residual deviation is lattice
+    * quantization of the query point. */
   def interpolate(model: Model, x: Double, y: Double): Double = {
     val cw = Spadl.FieldLength / model.l
     val ch = Spadl.FieldWidth / model.w

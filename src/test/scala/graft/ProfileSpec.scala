@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
+
 /** `Profile` records: the shape counts are read from the plan that ran (the
   * final adaptive plan), and a record carries every documented field. */
 class ProfileSpec extends SparkSpec {
@@ -12,6 +14,28 @@ class ProfileSpec extends SparkSpec {
     import spark.implicits._
     val Seq(rec) = Profile.profile(spark, sf, cores = 4, rounds = 1, out, name)
     spark.read.json(Seq(rec).toDS())
+  }
+
+  /** Plan-shape drift: the shape counts of a fixed sample — the four
+    * provider converters, the headline job, the two repair stencils the
+    * converters share, the xT fit and a map-only query — must equal their
+    * records in `BENCH/profile_r07.jsonl`. A change that moves one of these
+    * shapes regenerates that table in the same diff (`graft.Profile
+    * <sf0.001> 4 3 <out> all valuation valuation_packed phases`, whose
+    * `profile.jsonl` replaces it). */
+  test("plan shapes of a fixed sample match BENCH/profile_r07.jsonl") {
+    val shape = Seq("exchanges", "broadcasts", "sorts", "windows", "wscg", "scans").map(col)
+    val table = spark.read.json("BENCH/profile_r07.jsonl")
+    val drift = Seq("convert_statsbomb_full", "convert_opta_full", "convert_wyscout_full",
+      "convert_kloppy_full", "valuation", "repair_owngoal_shots", "repair_goalkicks",
+      "xt_fit_surface", "tokens_hash_split").flatMap { name =>
+      val rec = record(name)
+      assert(!rec.columns.contains("error"), rec.head().toString)
+      val ran = rec.select(shape: _*).head()
+      val want = table.filter(col("name") === name).select(shape: _*).collect().toSeq
+      if (want == Seq(ran)) None else Some(s"$name: ran $ran, table $want")
+    }
+    assert(drift.isEmpty, drift.mkString("\n"))
   }
 
   test("map-only tokens_hash_split runs no exchange") {

@@ -125,12 +125,19 @@ class ProviderConverterSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("wyscout: interception-tagged pass splits into interception then pass") {
     val df = wyDf(Seq(
-      wyEv(1, 8, 85, Seq(1401, 1801), sx = 40, sy = 50, ex = 60, ey = 50)))
+      wyEv(1, 8, 85, Seq(1401, 1801), sx = 40, sy = 50, ex = 60, ey = 50),
+      // null tags: the carrier condition is null, which splits nothing
+      wyEv(2, 8, 85, null, player = 9, ms = 60000)))
     val out = Wyscout.convertToActions(df, lit(0L)).orderBy("action_id").collect()
-    assert(out.map(_.getAs[Int]("type_id")).toSeq == Seq(Spadl.TypeInterception, Spadl.TypePass))
+    assert(out.map(_.getAs[Int]("type_id")).toSeq ==
+      Seq(Spadl.TypeInterception, Spadl.TypePass, Spadl.TypePass))
     val icpt = out(0)
     assert(icpt.getAs[Int]("result_id") == Spadl.ResultSuccess)
     assert(icpt.getAs[Double]("end_x") == icpt.getAs[Double]("start_x"))
+    // the null-tag pass is one action: the original row (2·2+1) alone
+    val nullTags = out.filter(_.getAs[Long]("player_id") == 9L)
+    assert(nullTags.map(r => (r.getAs[Int]("type_id"), r.getAs[Long]("seq"))).toSeq ==
+      Seq((Spadl.TypePass, 5L)))
   }
 
   test("wyscout: offside event attaches to the previous pass and disappears") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.core.SynStatsBomb
@@ -8,7 +10,7 @@ import graft.sources.StatsBomb
 /** Per-parser semantics of the full StatsBomb dispatch, each case
   * transcribed from `socceraction/spadl/statsbomb.py:223-483`, plus the
   * interception-pass split and pipeline wiring. */
-class StatsBombSpec extends SparkSpec {
+class StatsBombSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   /** Run one (type_name, extra-JSON) pair through the dispatch. */
@@ -122,7 +124,9 @@ class StatsBombSpec extends SparkSpec {
         Seq(10.0, 10.0),
         """{"pass":{"type":{"name":"Interception"},"end_location":[60.0,40.0]}}""", 100L),
       (1L, 101L, 1, "00:01:05.000", 0L, 8L, "Carry",
-        Seq(60.0, 40.0), """{"carry":{"end_location":[61.0,41.0]}}""", 101L))
+        Seq(60.0, 40.0), """{"carry":{"end_location":[61.0,41.0]}}""", 101L),
+      // a null bag: the carrier condition is null, which splits nothing
+      (1L, 102L, 1, "00:02:00.000", 0L, 9L, "Pass", Seq(70.0, 30.0), null, 102L))
       .toDF("game_id", "event_id", "period_id", "timestamp", "team_id",
         "player_id", "type_name", "location", "extra", "seq")
     val out = StatsBomb.convertToActions(events, lit(0L))
@@ -136,6 +140,28 @@ class StatsBombSpec extends SparkSpec {
     // interception inherits the pass's location and timestamp
     assert(icpt.getAs[Double]("time_seconds") == 60.0)
     assert(icpt.getAs[Double]("start_x") == out(1).getAs[Double]("start_x"))
+    // the null-bag pass is one action: the original row (2·102+1) alone
+    val nullBag = out.filter(_.getAs[Long]("player_id") == 9L)
+    assert(nullBag.map(r => (r.getAs[Int]("type_id"), r.getAs[Long]("seq"))).toSeq ==
+      Seq((0, 205L)))
+  }
+
+  test("the extra bag is parsed once: one from_json in the plan that ran") {
+    // an RDD source, so the optimizer cannot fold the parse into a local
+    // relation; the derived interception's literal bag folds to a constant
+    val events = spark.sparkContext.parallelize(Seq(
+      (1L, 100L, 1, "00:01:00.000", 0L, 7L, "Pass", Seq(10.0, 10.0),
+        """{"pass":{"type":{"name":"Interception"},"end_location":[60.0,40.0]}}""", 100L),
+      (1L, 101L, 1, "00:01:05.000", 0L, 8L, "Shot", Seq(60.0, 40.0),
+        """{"shot":{"outcome":{"name":"Goal"}}}""", 101L)))
+      .toDF("game_id", "event_id", "period_id", "timestamp", "team_id",
+        "player_id", "type_name", "location", "extra", "seq")
+    val df = StatsBomb.convertToActions(events, lit(0L))
+    assert(df.collect().length == 3)
+    val parses = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p => p.expressions.map(_.collect { case j: JsonToStructs => j }.length).sum
+    }.sum
+    assert(parses == 1, df.queryExecution.executedPlan.toString)
   }
 
   test("fidelity: one fractional location switches the whole game to 0.1 cells") {
