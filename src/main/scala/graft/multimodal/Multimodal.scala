@@ -244,8 +244,11 @@ object Multimodal {
     }
   }
 
-  private def withPayloadBy(documents: DataFrame,
-      payload: (Long, Array[Byte]) => Array[Byte]): DataFrame = {
+  /** Attach a real encoded image payload derived from the text column
+    * (test stand-in for a real media blob column in the source table);
+    * `payload` is the lane rule, [[payloadFor]] or [[payloadFor4]]. */
+  def withPayload(documents: DataFrame,
+      payload: (Long, Array[Byte]) => Array[Byte] = payloadFor): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     documents
@@ -254,14 +257,6 @@ object Multimodal {
       .map { case (id, hex) => MediaRow(id, payload(id, hexBytes(hex))) }
       .toDF()
   }
-
-  /** Attach a real encoded image payload derived from the text column
-    * (test stand-in for a real media blob column in the source table). */
-  def withPayload(documents: DataFrame): DataFrame =
-    withPayloadBy(documents, payloadFor)
-
-  def withPayload4(documents: DataFrame): DataFrame =
-    withPayloadBy(documents, payloadFor4)
 
   /** Decode kernel over one batch: parse each payload with the real codec,
     * derive metadata + a FeatureDim vector from the DECODED raster. */
@@ -295,13 +290,9 @@ object Multimodal {
     transform(sequence(lit(1), ((length(payload) + (stride - 1)) / stride).cast("int")),
       i => payload.substr((i - 1) * stride + 1, lit(1)))
 
-  def decodeDocuments(spark: SparkSession, documents: DataFrame): Dataset[DecodedRow] = {
+  def decodeDocuments(spark: SparkSession, documents: DataFrame,
+      payload: (Long, Array[Byte]) => Array[Byte] = payloadFor): Dataset[DecodedRow] = {
     import spark.implicits._
-    decode(withPayload(documents).as[MediaRow])
-  }
-
-  def decodeDocuments4(spark: SparkSession, documents: DataFrame): Dataset[DecodedRow] = {
-    import spark.implicits._
-    decode(withPayload4(documents).as[MediaRow])
+    decode(withPayload(documents, payload).as[MediaRow])
   }
 }

@@ -69,7 +69,7 @@ object MultimodalQueries {
          |       ELSE list_avg(list_transform(generate_series(0, n - 1),
          |         j -> ${pxSql("j")})) END AS mean_byte
          |FROM dims""".stripMargin) { (s, dir) =>
-      Multimodal.decodeDocuments4(s, Tables.documents(s, dir))
+      Multimodal.decodeDocuments(s, Tables.documents(s, dir), Multimodal.payloadFor4)
         .toDF()
         .select(col("doc_id"), (col("doc_id") % 4).cast("int").as("fmt"),
           col("width"), col("height"), col("channels"),

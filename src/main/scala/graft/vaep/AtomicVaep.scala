@@ -33,14 +33,8 @@ object AtomicVaep {
   def location(i: Int): Seq[Column] =
     Seq(col(st("x", i)).as(s"x_a$i"), col(st("y", i)).as(s"y_a$i"))
 
-  def polar(i: Int): Seq[Column] = {
-    val dxg = abs(lit(Spadl.FieldLength) - col(st("x", i)))
-    val dyg = abs(lit(Spadl.FieldWidth / 2) - col(st("y", i)))
-    val angle = when(dxg === 0.0 && dyg === 0.0, 0.0)
-      .when(dxg === 0.0, math.Pi / 2)
-      .otherwise(atan(dyg / dxg))
-    Seq(sqrt(dxg * dxg + dyg * dyg).as(s"dist_to_goal_a$i"), angle.as(s"angle_to_goal_a$i"))
-  }
+  def polar(i: Int): Seq[Column] =
+    Features.polar(col(st("x", i)), col(st("y", i)), "", i)
 
   /** mov_d + mov_angle with the reference's dy==0 ⇒ 0 repair. */
   def movementPolar(i: Int): Seq[Column] = {

@@ -140,23 +140,24 @@ object Features {
 
   /** Polar coordinates w.r.t. the goal center; angle = nan_to_num(arctan(dy/dx))
     * with explicit branches (dx=0,dy=0 → 0; dx=0 → π/2) so no IEEE
-    * divide-by-zero is ever issued. Reference `vaep/features.py:490-541`. */
-  private def polar(xc: Column, yc: Column, prefix: String, i: Int): Seq[Column] = {
+    * divide-by-zero is ever issued. Reference `vaep/features.py:490-541`;
+    * the atomic kind ([[AtomicVaep.polar]]) uses it with the empty `stem`. */
+  private[vaep] def polar(xc: Column, yc: Column, stem: String, i: Int): Seq[Column] = {
     val dx = abs(lit(GoalX) - xc)
     val dy = abs(lit(GoalY) - yc)
     val angle = when(dx === 0.0 && dy === 0.0, lit(0.0))
       .when(dx === 0.0, lit(math.Pi / 2))
       .otherwise(atan(dy / dx))
     Seq(
-      sqrt(dx * dx + dy * dy).as(s"${prefix}_dist_to_goal_a$i"),
-      angle.as(s"${prefix}_angle_to_goal_a$i"))
+      sqrt(dx * dx + dy * dy).as(s"${stem}dist_to_goal_a$i"),
+      angle.as(s"${stem}angle_to_goal_a$i"))
   }
 
   def startpolar(i: Int): Seq[Column] =
-    polar(col(st("start_x", i)), col(st("start_y", i)), "start", i)
+    polar(col(st("start_x", i)), col(st("start_y", i)), "start_", i)
 
   def endpolar(i: Int): Seq[Column] =
-    polar(col(st("end_x", i)), col(st("end_y", i)), "end", i)
+    polar(col(st("end_x", i)), col(st("end_y", i)), "end_", i)
 
   def movement(i: Int): Seq[Column] = {
     val dx = col(st("end_x", i)) - col(st("start_x", i))

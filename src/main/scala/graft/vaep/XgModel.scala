@@ -1,9 +1,7 @@
 package graft.vaep
 
-import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier}
-import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.classification.GBTClassificationModel
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Expected-goals (xG) classifier: a single binary model P(goal | shot)
   * over shot gamestate features — the workflow of the reference's
@@ -19,31 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object XgModel {
 
-  /** Fit one binary GBT on `labelCol` (boolean/numeric) over `featureCols`. */
+  /** Fit one binary GBT on `labelCol` (boolean/numeric) over `featureCols`
+    * through the shared training path ([[VaepModel.fitGbts]]). */
   def fit(train: DataFrame, featureCols: Array[String], labelCol: String,
-          maxIter: Int = 10, maxDepth: Int = 3, seed: Long = 42L): GBTClassificationModel = {
-    // project to (label, vector) and right-size the training parallelism
-    // before boosting: each boosting iteration runs several tiny
-    // histogram-aggregation jobs, so partitions far below ~32k rows each
-    // cost more in per-task overhead than they buy (same scale-adaptive
-    // rule as VaepModel.fit — a large corpus keeps the session parallelism)
-    val assembled = assemble(train, featureCols)
-      .withColumn("label_xg", col(labelCol).cast("double"))
-      .select("label_xg", "features_vec")
-      .cache()
-    val nRows = assembled.count()
-    val target = math.max(1L, nRows / 32768L)
-      .min(assembled.rdd.getNumPartitions.toLong).toInt
-    val train0 =
-      if (target < assembled.rdd.getNumPartitions) assembled.coalesce(target)
-      else assembled
-    val m = new GBTClassifier()
-      .setLabelCol("label_xg").setFeaturesCol("features_vec")
-      .setMaxIter(maxIter).setMaxDepth(maxDepth).setSeed(seed)
-      .fit(train0)
-    assembled.unpersist()
-    m
-  }
+          maxIter: Int = 10, maxDepth: Int = 3, seed: Long = 42L): GBTClassificationModel =
+    VaepModel.fitGbts(train, featureCols, Seq(labelCol), maxIter, maxDepth, seed).head
 
   /** P̂(goal) per shot as column `outCol` — scored through the FrozenGbt
     * literal-tree walker (≤1e-12 parity with the ml transform, see
@@ -53,8 +31,4 @@ object XgModel {
   def predict(model: GBTClassificationModel, df: DataFrame,
               featureCols: Array[String], outCol: String = "xg"): DataFrame =
     df.withColumn(outCol, FrozenGbt.column(FrozenGbt.fromMl(model, featureCols)))
-
-  private def assemble(df: DataFrame, featureCols: Array[String]): DataFrame =
-    new VectorAssembler().setInputCols(featureCols).setOutputCol("features_vec")
-      .transform(VaepModel.numericize(df, featureCols.toSeq))
 }

@@ -194,13 +194,18 @@ object XThreat {
   /** M7 — rate: successful move actions get xT(end) − xT(start); everything
     * else null (reference `xthreat.py:380-437`, NaN there). The fitted
     * surface rides along as a 192-double literal inside codegen. */
-  def rateColumn(model: Model): Column = {
+  def rateColumn(model: Model): Column =
+    rate(model)((grid, x, y) =>
+      element_at(grid, (flatCellIndex(x, y, model.l, model.w) + 1).cast("int")))
+
+  /** The one successful-move rating shell of [[rateColumn]],
+    * [[rateInterpColumn]] and [[rateInterpRefCompatColumn]]:
+    * `valueAt(end) − valueAt(start)` for successful move actions, null
+    * otherwise; `valueAt` reads a point's value off the surface literal. */
+  private def rate(model: Model)(valueAt: (Column, Column, Column) => Column): Column = {
     val grid = typedLit(model.xT.toSeq)
-    val startIdx = flatCellIndex(col("start_x"), col("start_y"), model.l, model.w)
-    val endIdx = flatCellIndex(col("end_x"), col("end_y"), model.l, model.w)
     when(isMoveAction && col("result_id") === Spadl.ResultSuccess,
-      element_at(grid, (endIdx + 1).cast("int")) -
-        element_at(grid, (startIdx + 1).cast("int")))
+      valueAt(grid, col("end_x"), col("end_y")) - valueAt(grid, col("start_x"), col("start_y")))
       .otherwise(lit(null).cast("double"))
   }
 
@@ -247,13 +252,8 @@ object XThreat {
 
   /** M7 with interpolation: successful move actions get
     * interp(end) − interp(start); everything else null. */
-  def rateInterpColumn(model: Model): Column = {
-    val grid = typedLit(model.xT.toSeq)
-    when(isMoveAction && col("result_id") === Spadl.ResultSuccess,
-      interpolateColumn(grid, col("end_x"), col("end_y"), model.l, model.w) -
-        interpolateColumn(grid, col("start_x"), col("start_y"), model.l, model.w))
-      .otherwise(lit(null).cast("double"))
-  }
+  def rateInterpColumn(model: Model): Column =
+    rate(model)(interpolateColumn(_, _, _, model.l, model.w))
 
   /** M8 — closed-form bilinear interpolation over cell centers (replaces the
     * reference's scipy `interp2d`, `xthreat.py:347-378`): value at (x, y)
@@ -330,13 +330,8 @@ object XThreat {
   /** M7 with the reference-compat interpolation path (the flag surface:
     * `refCompat = true` selects upstream's quantized-lattice semantics,
     * default stays the clean bilinear of [[rateInterpColumn]]). */
-  def rateInterpRefCompatColumn(model: Model): Column = {
-    val grid = typedLit(model.xT.toSeq)
-    when(isMoveAction && col("result_id") === Spadl.ResultSuccess,
-      interpolateColumnRefCompat(grid, col("end_x"), col("end_y"), model.l, model.w) -
-        interpolateColumnRefCompat(grid, col("start_x"), col("start_y"), model.l, model.w))
-      .otherwise(lit(null).cast("double"))
-  }
+  def rateInterpRefCompatColumn(model: Model): Column =
+    rate(model)(interpolateColumnRefCompat(_, _, _, model.l, model.w))
 
   /** Scalar twin of [[interpolateColumnRefCompat]]. */
   def interpolateRefCompat(model: Model, x: Double, y: Double): Double = {

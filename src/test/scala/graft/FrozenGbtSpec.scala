@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.functions._
 
 import graft.queries.MlQueries
@@ -23,8 +25,13 @@ class FrozenGbtSpec extends SparkSpec {
     val ser = FrozenGbt.serialize(frozen)
     assert(FrozenGbt.serialize(FrozenGbt.parse(ser)) == ser)
 
-    val mlP = VaepModel.estimateProbabilities(model, data)
-      .select("seq", "scores_p").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // spark.ml's own prediction: the model's transform over the assembled
+    // vector, P(positive) = probability[1]
+    val vectors = new VectorAssembler().setInputCols(fc).setOutputCol("features_vec")
+      .transform(data.select(col("seq") +: fc.map(c => col(c).cast("double").as(c)).toSeq: _*))
+    val mlP = model.scores.transform(vectors)
+      .select(col("seq"), vector_to_array(col("probability"))(1))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val frozenP = data.withColumn("fp", FrozenGbt.column(frozen))
       .select("seq", "fp").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(mlP.keySet == frozenP.keySet)
