@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.{Kernels, TextExpressions}
 import graft.text.TextOps
 
 /** Deduplication operators for web-scale corpus curation: exact (content
@@ -23,7 +24,7 @@ object Dedup {
   /** Word n-gram shingles (distinct, first-occurrence order). Codegen'd
     * kernel; value-identical to [[shinglesHof]] (KernelsSpec asserts). */
   def shingles(text: Column, n: Int = 3): Column =
-    graft.functions.TextExpressions.shingles(text, n)
+    TextExpressions.shingles(text, n)
 
   /** Round-1 HOF formulation — parity baseline only (interpreted lambdas). */
   def shinglesHof(text: Column, n: Int = 3): Column = {
@@ -141,12 +142,14 @@ object Dedup {
 
   val NumMinhash = 16
   val BandSize = 4
-  def minhashA(j: Int): Long = 1L + 7919L * j
-  def minhashB(j: Int): Long = 104729L * j
+  def minhashA(j: Int): Long = Kernels.minhashA(j)
+  def minhashB(j: Int): Long = Kernels.minhashB(j)
 
   /** MinHash signature component j over the shingle set:
     * min over shingles of (a_j · h(s) + b_j) mod p, h = 60-bit md5 prefix
-    * reduced mod p (keeps products < 2^63). */
+    * reduced mod p (keeps products < 2^63). Interpreted parity reference
+    * for the [[minhashSignatures]] kernel (KernelsSpec asserts): each call
+    * re-shingles and re-hashes the text. */
   def minhash(text: Column, j: Int, n: Int = 3): Column =
     array_min(transform(shingles(text, n),
       s => (lit(minhashA(j)) * (md5Hash60(s) % TextOps.HashPrime)
@@ -157,19 +160,18 @@ object Dedup {
     * (band_id, band_key) — the classic banding join that keeps candidate
     * generation linear in bucket occupancy at corpus scale.
     *
-    * Physical shape: shingles are exploded and md5-hashed ONCE, then all 16
-    * signature components are conditional-min aggregates over the same
-    * hashed postings (one shuffle) — naively computing each component as a
-    * separate expression re-hashes every shingle 16× (measured 30× slower
-    * at sf0.1). Integer math ⇒ identical values either way. */
+    * Physical shape: map-only. One codegen'd kernel per document shingles
+    * the text once, md5-hashes each shingle once and keeps all 16 running
+    * minima ([[Kernels.minhashSig]]); `mh0..mh15` are the elements of its
+    * array. A document's signature reads only its own text, so nothing is
+    * shuffled, and computing each component as a separate [[minhash]]
+    * expression would re-hash every shingle 16×. Documents with null text
+    * have no shingles and no signature row. Integer math ⇒ the values of
+    * [[minhash]]. */
   def minhashSignatures(documents: DataFrame, n: Int = 3): DataFrame = {
-    val hashed = documents.select(col("doc_id"),
-      explode(shingles(col("text"), n)).as("shingle"))
-      .withColumn("h", md5Hash60(col("shingle")) % TextOps.HashPrime)
-    hashed.groupBy("doc_id").agg(
-      min((lit(minhashA(0)) * col("h") + lit(minhashB(0))) % TextOps.HashPrime).as("mh0"),
-      (1 until NumMinhash).map(j =>
-        min((lit(minhashA(j)) * col("h") + lit(minhashB(j))) % TextOps.HashPrime).as(s"mh$j")): _*)
+    val sig = documents.filter(col("text").isNotNull)
+      .select(col("doc_id"), TextExpressions.minhashSig(col("text"), n, NumMinhash).as("sig"))
+    sig.select(col("doc_id") +: (0 until NumMinhash).map(j => col("sig")(j).as(s"mh$j")): _*)
   }
 
   def minhashLshPairs(documents: DataFrame, n: Int = 3, threshold: Double = 0.5,
@@ -210,10 +212,12 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  val SimhashBits = 32
+  val SimhashBits = Kernels.SimhashBits
 
   /** 32-bit SimHash over whitespace tokens: bit b is set iff the sum of
-    * ±1 votes from each token's hash bit b is positive. */
+    * ±1 votes from each token's hash bit b is positive. Interpreted parity
+    * reference for the [[simhashValues]] kernel (KernelsSpec asserts): it
+    * hashes each token once per bit, and gives 0 for null text. */
   def simhash32(text: Column): Column = {
     val toks = TextOps.tokens(text)
     val hashes = transform(toks,
@@ -225,21 +229,14 @@ object Dedup {
     }.reduce(_ + _)
   }
 
-  /** simhash32 as one pass: explode tokens, hash each ONCE, then 32
-    * conditional-sum aggregates (integer math ⇒ same values as the
-    * column-expression form, ~20× less md5 work). */
-  def simhashValues(documents: DataFrame): DataFrame = {
-    val toks = documents.select(col("doc_id"),
-      explode(TextOps.tokens(col("text"))).as("t"))
-      .withColumn("h", conv(substring(md5(col("t")), 1, 8), 16, 10).cast("long"))
-    val votes = toks.groupBy("doc_id").agg(
-      sum(when(shiftright(col("h"), 0).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as("v0"),
-      (1 until SimhashBits).map(b =>
-        sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v$b")): _*)
-    votes.select(col("doc_id"),
-      (0 until SimhashBits).map(b =>
-        when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L)).reduce(_ + _).as("simhash"))
-  }
+  /** (doc_id, simhash) per document with non-null text, as one map-only
+    * projection: the codegen'd [[Kernels.simhash32]] tokenizes once, hashes
+    * each token ONCE and counts all 32 votes in one pass. Integer math ⇒
+    * the values of [[simhash32]]; documents with null text have no tokens
+    * and no row. */
+  def simhashValues(documents: DataFrame): DataFrame =
+    documents.filter(col("text").isNotNull)
+      .select(col("doc_id"), TextExpressions.simhash(col("text")).as("simhash"))
 
   /** SimHash near-duplicate pairs, bucketed by `32/bandBits` sub-keys of
     * `bandBits` bits each and verified with bit_count. The pigeonhole
@@ -260,7 +257,12 @@ object Dedup {
     * default would be structurally wrong here: simhash band keys live in
     * the fixed 2^bandBits keyspace, so expected occupancy grows with N
     * and a constant cap silently drops essentially every bucket at corpus
-    * scale (the failure simhashCapFor's scaladoc derives). */
+    * scale (the failure simhashCapFor's scaladoc derives).
+    *
+    * The Hamming filter runs BEFORE the `(doc_a, doc_b)` distinct: a pair's
+    * distance is a function of its two simhashes, so every copy of a pair
+    * (one per shared band) carries the same value, and filtering first only
+    * stops the distinct's exchange from shipping candidates it would drop. */
   def simhashPairs(documents: DataFrame, maxHamming: Int = 3, bandBits: Int = 8,
                    bucketCap: Int = -1): DataFrame = {
     val nBands = SimhashBits / bandBits
@@ -287,7 +289,7 @@ object Dedup {
         shiftright(col("simhash"), b * bandBits).bitwiseAND(mask)): _*)).as(Seq("band_id", "band_key")))
     // per-bucket postings lists carrying (doc_id, simhash) pairs — one
     // shuffle, simhash computed once (the self-join form doubled the
-    // 32-aggregate vote pass). Over-`bucketCap` buckets are dropped via an
+    // signature pass). Over-`bucketCap` buckets are dropped via an
     // occupancy window BEFORE collect_list (shared exchange, bounded rows)
     // — see DefaultBucketCap; mirrored in the DuckDB oracle.
     import org.apache.spark.sql.expressions.Window
@@ -300,8 +302,8 @@ object Dedup {
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      .dropDuplicates("doc_a", "doc_b")
       .filter(col("hamming") <= maxHamming)
+      .dropDuplicates("doc_a", "doc_b")
   }
 
   /** Connected components over an undirected edge list — the clustering

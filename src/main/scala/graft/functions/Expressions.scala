@@ -30,6 +30,11 @@ object TextExpressions {
   def shingles(text: Column, n: Int): Column =
     Shim.column(ShinglesExpr(Shim.expression(text), n))
 
+  def simhash(text: Column): Column = Shim.column(SimhashExpr(Shim.expression(text)))
+
+  def minhashSig(text: Column, n: Int, k: Int): Column =
+    Shim.column(MinhashSigExpr(Shim.expression(text), n, k))
+
   def dot(a: Column, b: Column): Column =
     Shim.column(FoldDotExpr(Shim.expression(a), Shim.expression(b)))
 
@@ -111,6 +116,42 @@ case class ShinglesExpr(child: Expression, n: Int)
       c => s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
         s"(Object[]) graft.functions.Kernels.shingles($c, $n))")
   override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
+    copy(child = newChild)
+}
+
+/** 32-bit SimHash of a text's whitespace tokens, one MD5 per token (see
+  * [[Kernels.simhash32]]). */
+case class SimhashExpr(child: Expression) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got $t")
+  }
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(input: Any): Any =
+    Kernels.simhash32(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.simhash32($c)")
+  override protected def withNewChildInternal(newChild: Expression): SimhashExpr =
+    copy(child = newChild)
+}
+
+/** The `k` MinHash components of a text's word `n`-gram shingles, one MD5
+  * per shingle (see [[Kernels.minhashSig]]). */
+case class MinhashSigExpr(child: Expression, n: Int, k: Int) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string input, got $t")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(input: Any): Any =
+    new GenericArrayData(Kernels.minhashSig(input.asInstanceOf[UTF8String], n, k))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
+        s"graft.functions.Kernels.minhashSig($c, $n, $k))")
+  override protected def withNewChildInternal(newChild: Expression): MinhashSigExpr =
     copy(child = newChild)
 }
 

@@ -1,5 +1,8 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -203,6 +206,15 @@ object Kernels {
     * n))))`): grams shorter than n appear only when the text has fewer than
     * n tokens. */
   def shingles(s: UTF8String, n: Int): Array[UTF8String] = {
+    val seen = shingleSet(s, n)
+    val out = new Array[UTF8String](seen.size)
+    val it = seen.iterator()
+    var k = 0
+    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
+    out
+  }
+
+  private def shingleSet(s: UTF8String, n: Int): java.util.LinkedHashSet[String] = {
     val toks = tokens(s.toString)
     val nGrams = math.max(toks.length - n + 1, 1)
     val seen = new java.util.LinkedHashSet[String](nGrams * 2)
@@ -219,11 +231,75 @@ object Kernels {
       seen.add(sb.toString)
       i += 1
     }
-    val out = new Array[UTF8String](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
+    seen
+  }
+
+  // One MD5 digest per task thread: `MessageDigest` is stateful and not
+  // thread-safe, and `getInstance` per token costs a provider lookup.
+  private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
+
+  /** MD5 of the string's UTF-8 bytes — the bytes Spark's and DuckDB's
+    * `md5(s)` hash. */
+  private def md5Of(s: String): Array[Byte] = md5.get().digest(s.getBytes(StandardCharsets.UTF_8))
+
+  /** Big-endian unsigned value of `d(0 until nBytes)` — the number the
+    * first 2·nBytes hex digits of the digest spell. */
+  private def prefix(d: Array[Byte], nBytes: Int): Long = {
+    var v = 0L
+    var i = 0
+    while (i < nBytes) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    v
+  }
+
+  val SimhashBits = 32
+
+  /** 32-bit SimHash over whitespace tokens: each token is MD5-hashed once,
+    * its hash is the first 4 digest bytes as an unsigned int (=
+    * `conv(substring(md5(t), 1, 8), 16, 10)`), every hash bit casts a ±1
+    * vote, and bit b is set iff vote b is positive. */
+  def simhash32(s: UTF8String): Long = {
+    val toks = tokens(s.toString)
+    val votes = new Array[Int](SimhashBits)
+    var t = 0
+    while (t < toks.length) {
+      val h = prefix(md5Of(toks(t)), 4)
+      var b = 0
+      while (b < SimhashBits) {
+        votes(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1)
+        b += 1
+      }
+      t += 1
+    }
+    var out = 0L
+    var b = 0
+    while (b < SimhashBits) {
+      if (votes(b) > 0) out |= 1L << b
+      b += 1
+    }
     out
+  }
+
+  def minhashA(j: Int): Long = 1L + 7919L * j
+  def minhashB(j: Int): Long = 104729L * j
+
+  /** The first `k` MinHash components over the distinct word `n`-gram
+    * shingles: each shingle is MD5-hashed once to its 60-bit prefix (first
+    * 8 digest bytes `>>> 4`, = `Dedup.md5Hash60`) reduced mod p, and
+    * component j is min over shingles of (a_j·h + b_j) mod p (h < 2^30,
+    * so the products stay far below 2^63). */
+  def minhashSig(s: UTF8String, n: Int, k: Int): Array[Long] = {
+    val sig = Array.fill(k)(Long.MaxValue)
+    val it = shingleSet(s, n).iterator()
+    while (it.hasNext) {
+      val h = (prefix(md5Of(it.next()), 8) >>> 4) % HashPrime
+      var j = 0
+      while (j < k) {
+        val v = (minhashA(j) * h + minhashB(j)) % HashPrime
+        if (v < sig(j)) sig(j) = v
+        j += 1
+      }
+    }
+    sig
   }
 
   // Ordered left-fold dot products with double accumulation (equal-length

@@ -26,19 +26,20 @@ object Ivf {
   final case class Index(dim: Int, centroids: Array[Array[Double]])
 
   /** Index-grade quantization: each component rounded to 6 decimals (as a
-    * double). Makes the Lloyd means decimal-exact — the whole index build
-    * becomes value-golden (both engines round half-away-from-zero, and a
-    * sum of 6-decimal values is exact in DECIMAL(38,18)). Assignment uses
-    * the quantized vector; candidate scoring stays on raw embeddings. */
+    * double). Makes the Lloyd means exact — the whole index build becomes
+    * value-golden (both engines round half-away-from-zero, and a sum of
+    * 6-decimal values is an exact integer count of 10⁻⁶ units, see
+    * [[cellMeans]]). Assignment uses the quantized vector; candidate
+    * scoring stays on raw embeddings. */
   def quantize(emb: Column): Column =
     transform(emb, x => round(x.cast("double"), 6))
 
   /** Deterministic k-means: hash-seeded init (the nlist vectors with the
     * smallest md5(vec_id) — a uniform, engine-mirrorable pick) + a FIXED
     * number of Lloyd iterations over quantized vectors. Per-cell means are
-    * DECIMAL(38,18)-exact sums requantized to 6 decimals before the one
-    * double division, so every centroid is bit-identical to the DuckDB
-    * mirror and `sim_ivf_ann` is value-golden. With `sampleFraction` < 1
+    * exact sums of the grid values ([[cellMeans]]) requantized to 6
+    * decimals, so every centroid is bit-identical to the DuckDB mirror and
+    * `sim_ivf_ann` is value-golden. With `sampleFraction` < 1
     * the fit runs on a `seed`ed sample of the corpus.
     *
     * Each iteration is one map-only assignment pass + one (cell, dim)
@@ -58,14 +59,7 @@ object Ivf {
       val dim = cents(0).length
       for (_ <- 0 until iters) {
         val idx = Index(dim, cents)
-        // per-cell means as `dim` aggregate expressions over element_at —
-        // no Generate node (the posexplode form additionally tripped a
-        // janino method-split bug inside the combined stage, falling back
-        // to interpreted eval) and no dim× row explosion in the exchange
-        val aggs = (0 until dim).map(d =>
-          round(sum(element_at(col("q"), d + 1).cast("decimal(38,18)"))
-            .cast("decimal(38,6)").cast("double")
-            / count(lit(1)).cast("double"), 6).as(s"m$d"))
+        val aggs = cellMeans(col("q"), dim)
         val means = embq
           .withColumn("cellq", cell(col("q"), idx))
           .groupBy("cellq").agg(aggs.head, aggs.tail: _*)
@@ -81,6 +75,23 @@ object Ivf {
       Index(dim, cents)
     } finally { embq.unpersist(); () }
   }
+
+  /** The `dim` per-group mean aggregates of quantized vectors `q`, one
+    * aggregate expression per component over element_at — no Generate node
+    * (the posexplode form additionally tripped a janino method-split bug
+    * inside the combined stage, falling back to interpreted eval) and no
+    * dim× row explosion in the exchange.
+    *
+    * Every grid value is a 6-decimal v = m·10⁻⁶, and `round(q·10⁶)`
+    * recovers its integer m exactly (|m| ≪ 2^51), so the long sum S = Σm is
+    * exact and S / 10⁶ (S < 2^53 and 10⁶ both exact doubles) is the
+    * correctly rounded double of the decimal sum Σv: bit-identical to the
+    * DECIMAL(38,18) sum cast to double, at long-add cost. The mean is then
+    * one division by the count and a requantization to 6 decimals. */
+  private[graft] def cellMeans(q: Column, dim: Int): Seq[Column] =
+    (0 until dim).map(d =>
+      round(sum(round(element_at(q, d + 1) * 1e6).cast("long")).cast("double")
+        / 1e6 / count(lit(1)).cast("double"), 6).as(s"m$d"))
 
   /** Scores against every centroid: x·c − ‖c‖²/2 (argmax ≡ nearest by L2),
     * as one array column; FoldDot per centroid, all map-only. */

@@ -82,6 +82,45 @@ class DedupSpec extends SparkSpec {
     assert(viaLazy == viaExplicit)
   }
 
+  test("simhashPairs: the (doc_a, doc_b) distinct shuffles only in-radius pairs") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // 1 000 random 12-word documents: every 8-bit band bucket holds ~4 of
+    // them, so each shares a band with a dozen others at Hamming ~16, plus
+    // 30 exact copies, the only pairs within Hamming ≤ 3 (checked below).
+    // One shuffle partition puts every candidate of the distinct's map side
+    // in one task, so its partial aggregate emits each pair once.
+    val s1 = spark.newSession()
+    s1.conf.set("spark.sql.shuffle.partitions", "1")
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 500).map(i => s"w$i")
+    val base = (1L to 1000L).map(i => i -> Seq.fill(12)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val copies = (1L to 30L).map(i => (5000L + i) -> base((i * 31).toInt)._2)
+    val corpus = s1.createDataFrame(base ++ copies).toDF("doc_id", "text")
+    val sims = Dedup.simhashValues(corpus).collect().map(r => r.getLong(0) -> r.getLong(1))
+    def shareBand(a: Long, b: Long) = (0 until 4).exists(k => ((a ^ b) >>> (8 * k) & 255L) == 0L)
+    val cand = for {
+      i <- sims.indices; j <- i + 1 until sims.length
+      if shareBand(sims(i)._2, sims(j)._2)
+    } yield java.lang.Long.bitCount(sims(i)._2 ^ sims(j)._2)
+    val inRadius = cand.count(_ <= 3)
+    assert(inRadius >= 30 && cand.size > 10 * inRadius, s"${cand.size} candidates, $inRadius in radius")
+
+    val pairs = Dedup.simhashPairs(corpus, maxHamming = 3)
+    assert(pairs.collect().length == inRadius)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val shipped = helper.collect(pairs.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case HashPartitioning(keys, _) =>
+          keys.collect { case a: Attribute => a.name } == Seq("doc_a", "doc_b")
+        case _ => false
+      }) => e.metrics("shuffleRecordsWritten").value
+    }
+    assert(shipped == Seq(inRadius.toLong))
+  }
+
   test("text ops: token counts, quality, language id, fingerprints") {
     val r = docs.filter($"doc_id" === 1).select(
       TextOps.tokenCount(col("text")),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -68,6 +68,35 @@ class IvfSpec extends SparkSpec {
     val full = topSet(Ivf.search(emb, queries, i1, k = 10, nprobe = 8))
     assert(full == brute)
     emb.unpersist()
+  }
+
+  test("ivf fit: long-sum cell means are bit-identical to the DECIMAL(38,18) means") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // 2 000 unit-norm 64-dim Gaussian float vectors (the perfbench corpus
+    // shape), grouped into 16 cells of uneven size
+    val dim = 64
+    val rnd = new scala.util.Random(11)
+    val rows = (0 until 2000).map { i =>
+      val v = Array.fill(dim)(rnd.nextGaussian())
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      Row(i.toLong, v.map(x => (x / norm).toFloat).toSeq)
+    }
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = false))))
+    val q = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+      .select((pmod(xxhash64(col("vec_id")), lit(16L)) * (col("vec_id") % 3 + 1) % 16).as("cell"),
+        Ivf.quantize(col("embedding")).as("q"))
+    val decimal = (0 until dim).map(d =>
+      round(sum(element_at(col("q"), d + 1).cast("decimal(38,18)"))
+        .cast("decimal(38,6)").cast("double")
+        / count(lit(1)).cast("double"), 6).as(s"m$d"))
+    def means(aggs: Seq[Column]) = q.groupBy("cell").agg(aggs.head, aggs.tail: _*).collect()
+      .map(r => r.getLong(0) -> (1 to dim).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i))))
+      .toMap
+    val (viaLong, viaDecimal) = (means(Ivf.cellMeans(col("q"), dim)), means(decimal))
+    assert(viaLong.size == 16)
+    assert(viaLong == viaDecimal)
   }
 
   test("ivf: full-probe search equals brute force; few-probe recall is high") {

@@ -71,6 +71,41 @@ class KernelsSpec extends SparkSpec {
     }
   }
 
+  test("simhash kernel == Dedup.simhash32, minhash kernel == Dedup.minhash(text, j)") {
+    val s = textDf.select(
+      TextExpressions.simhash(col("text")).as("k"),
+      Dedup.simhash32(col("text")).as("h"))
+    assert(s.filter(!(col("k") <=> col("h"))).count() == 0)
+    for (n <- Seq(1, 3, 8)) {
+      val d = textDf.select(
+        TextExpressions.minhashSig(col("text"), n, Dedup.NumMinhash).as("k"),
+        array((0 until Dedup.NumMinhash).map(j => Dedup.minhash(col("text"), j, n)): _*).as("h"))
+      assert(d.filter(!(col("k") <=> col("h"))).count() == 0, s"n=$n")
+    }
+  }
+
+  test("simhash and minhash kernels: null text gives null; both run in whole-stage codegen") {
+    import spark.implicits._
+    val nulls = Seq(Option.empty[String]).toDF("text").select(
+      TextExpressions.simhash(col("text")), TextExpressions.minhashSig(col("text"), 3, 16)).head()
+    assert(nulls.isNullAt(0) && nulls.isNullAt(1))
+    // the parity reference maps null text to 0; simhashValues drops the row
+    assert(Seq(Option.empty[String]).toDF("text").select(Dedup.simhash32(col("text")))
+      .head().getLong(0) == 0L)
+    val d = Tables.documents(spark, sf).select(
+      TextExpressions.simhash(col("text")).as("s"),
+      TextExpressions.minhashSig(col("text"), 3, 16).as("m"))
+    assert(d.collect().forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    // codegen.fallback is false in this session: a kernel whose generated
+    // Java fails to compile fails here instead of running interpreted
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import graft.functions.{MinhashSigExpr, SimhashExpr}
+    val inStage = d.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+      .flatMap(_.collect { case p: ProjectExec => p.projectList }).flatten
+    assert(inStage.exists(_.find(_.isInstanceOf[SimhashExpr]).isDefined))
+    assert(inStage.exists(_.find(_.isInstanceOf[MinhashSigExpr]).isDefined))
+  }
+
   test("fold-dot kernel is bit-identical to the HOF fold (float and const-double)") {
     val e = Tables.embeddings(spark, sf).limit(200)
     val pair = e.select(col("embedding").as("a"))

@@ -18,7 +18,8 @@ class ProfileSpec extends SparkSpec {
 
   /** Plan-shape drift: the shape counts of a fixed sample — the four
     * provider converters, the headline job, the two repair stencils the
-    * converters share, the xT fit and a map-only query — must equal their
+    * converters share, the xT fit, a map-only query and the three
+    * signature-based dedup queries — must equal their
     * records in `BENCH/profile_r07.jsonl`. A change that moves one of these
     * shapes regenerates that table in the same diff (`graft.Profile
     * <sf0.001> 4 3 <out> all valuation valuation_packed phases`, whose
@@ -28,7 +29,8 @@ class ProfileSpec extends SparkSpec {
     val table = spark.read.json("BENCH/profile_r07.jsonl")
     val drift = Seq("convert_statsbomb_full", "convert_opta_full", "convert_wyscout_full",
       "convert_kloppy_full", "valuation", "repair_owngoal_shots", "repair_goalkicks",
-      "xt_fit_surface", "tokens_hash_split").flatMap { name =>
+      "xt_fit_surface", "tokens_hash_split", "dedup_simhash_values", "dedup_simhash_pairs",
+      "dedup_minhash_lsh").flatMap { name =>
       val rec = record(name)
       assert(!rec.columns.contains("error"), rec.head().toString)
       val ran = rec.select(shape: _*).head()
@@ -40,6 +42,10 @@ class ProfileSpec extends SparkSpec {
 
   test("map-only tokens_hash_split runs no exchange") {
     assert(record("tokens_hash_split").head().getAs[Long]("exchanges") == 0L)
+  }
+
+  test("map-only dedup_simhash_values runs no exchange") {
+    assert(record("dedup_simhash_values").head().getAs[Long]("exchanges") == 0L)
   }
 
   test("xt_transition_matrix: exchanges and whole-stage codegen stages of the final plan") {
