@@ -21,6 +21,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions.col
     df.orderBy(cols.map(col): _*).collect().toSeq
   }
+
+  /** An order-independent fingerprint of a frame's schema and content:
+    * the schema DDL (names, types, nullability), then the SHA-256 of its
+    * rows rendered with `to_json(struct(*))`, sorted, one per line. */
+  def contentDigest(df: DataFrame): String = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    val rows = df.select(to_json(struct(df.columns.map(c => col(s"`$c`")): _*)))
+      .collect().map(_.getString(0)).sorted
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    s"${df.schema.toDDL} sha256:${sha.map("%02x".format(_)).mkString}"
+  }
 }
 
 object SparkSpec {
