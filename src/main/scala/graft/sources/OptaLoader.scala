@@ -3,8 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.core.Spadl
+import org.apache.spark.sql.types._
 
 /** S7/S8 — the Opta feed loader: Stats Perform MA1 (schedule) + MA3
   * (match events) JSON feeds, classic F1 (schedule) / F9 (match result) /
@@ -20,6 +19,9 @@ import graft.core.Spadl
   * reference); each accessor is a JSON scan + explode + projection, and
   * `events(gameId)` emits exactly the frame `Opta.convertToActions`
   * consumes (type_name, outcome, percent coordinates, qualifier-id array).
+  * The four event flavours (MA3, F24 JSON, F24 XML, WhoScored) share one
+  * reader, [[readEvents]]; the two result feeds (F9 JSON, F7 XML) share
+  * one [[ResultFeed]] body per accessor.
   */
 final class OptaLoader(spark: SparkSession, root: String,
                        feeds: Map[String, String] = OptaLoader.StatsPerformFeeds) {
@@ -35,13 +37,28 @@ final class OptaLoader(spark: SparkSession, root: String,
     // through the root's Hadoop filesystem, so a file:, hdfs: or s3a: URI
     // lists like a plain path
     val dir = new org.apache.hadoop.fs.Path(root)
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+    val found = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
       .map(_.getPath).filter(p => rx.matcher(p.getName).matches())
       .map(_.toString).toSeq.sorted
+    if (found.isEmpty) throw new IllegalArgumentException(
+      s"no $feed feed file matches '$pattern' under $root")
+    found
   }
 
   private def readJson(ps: Seq[String]): DataFrame =
     spark.read.option("multiLine", true).json(ps: _*)
+
+  private def readXml(rowTag: String, ps: Seq[String]): DataFrame =
+    spark.read.format("xml").option("rowTag", rowTag).load(ps: _*)
+
+  /** An attribute of a JSON feed element (its `@attributes` bag). */
+  private def bag(c: Column, name: String): Column = c.getField("@attributes").getField(name)
+
+  /** An attribute of an XML feed element (Spark's `_` prefix). */
+  private def xmlAttr(c: Column, name: String): Column = c.getField("_" + name)
+
+  /** An ISO-8601 instant with an optional trailing `Z`. */
+  private def isoTimestamp(c: Column): Column = to_timestamp(regexp_replace(c, "Z$", ""))
 
   /** Competitions and seasons from the MA1 schedule feeds
     * (`ma1_json.py:52-74`). */
@@ -61,9 +78,8 @@ final class OptaLoader(spark: SparkSession, root: String,
       .select(col("m.matchInfo").as("mi"), col("m.liveData").as("ld"))
       .filter(col("mi.competition.id") === competitionId &&
         col("mi.tournamentCalendar.id") === seasonId)
-    val contestants = col("mi.contestant")
     def teamBySide(side: String): Column =
-      element_at(filter(contestants, c => c.getField("position") === side), 1).getField("id")
+      Feeds.onSide(col("mi.contestant"), side, _.getField("position")).getField("id")
     m.select(
       col("mi.id").as("game_id"),
       col("mi.competition.id").as("competition_id"),
@@ -88,62 +104,93 @@ final class OptaLoader(spark: SparkSession, root: String,
       .select(explode(col("matchInfo.contestant")).as("c"))
       .select(col("c.id").as("team_id"), col("c.name").as("team_name"))
 
-  /** Raw event rows of a game: explode liveData.event, build the qualifier
-    * id→value map, derive end coordinates from qualifiers 140/141 (pass) /
-    * 146/147 (blocked shot) / 102/103 (goal line), attach type names, apply
-    * the loader's sort + cleanup (`ma3_json.py:240-292`,
-    * `loader.py:432-478`). */
-  def events(gameId: String): DataFrame = {
-    val raw = ma3(gameId).select(
-      col("matchInfo.id").as("game_id"),
-      explode(col("liveData.event")).as("e"))
-    val quals = col("e.qualifier")
+  /** What one event flavour supplies to [[readEvents]], as expressions
+    * over its exploded event `e`: the qualifier list with its id and value
+    * extractors, and the raw event fields. Only MA3 carries a player name;
+    * only WhoScored carries explicit end coordinates, which win over the
+    * qualifier-derived ones. */
+  private case class EventFields(
+      quals: Column, qualId: Column => Column, qualValue: Column => Column,
+      id: Column, period: Column, minute: Column, second: Column, timestamp: Column,
+      team: Column, player: Column, typeId: Column, outcome: Column, x: Column, y: Column,
+      playerName: Option[Column] = None,
+      endX: Option[Column] = None, endY: Option[Column] = None)
+
+  /** The event reader of every flavour (`ma3_json.py:240-292`,
+    * `f24_json.py:68-123`, `f24_xml.py:57-108`, `whoscored.py:189-249`):
+    * `raw` holds `game_id` and the exploded event `e`. Builds the qualifier
+    * id→value map, derives end coordinates from qualifiers 140/141 (pass) /
+    * 146/147 (blocked shot) / 102/103 (goal line), reads an absent outcome
+    * as success, drops deleted events, and applies the loader's tail: the
+    * event-type dim join and the canonical per-game ordering
+    * (`loader.py:432-478`). */
+  private def readEvents(raw: DataFrame, f: EventFields): DataFrame = {
     // a null qualifier array yields a null map / empty id list; element_at
-    // and map_contains_key on null are null → all probes fall through
-    val qmap = map_from_entries(transform(quals,
-      q => struct(q.getField("qualifierId").as("key"), q.getField("value").as("value"))))
-    def qval(id: Int): Column = element_at(col("qmap"), id)
-    def qnum(id: Int): Column = qval(id).cast("double")
-
-    val base = raw
-      .withColumn("qmap", qmap)
-      .select(
+    // on null is null → all probes fall through
+    def qnum(id: Int): Column = element_at(col("qmap"), id).cast("double")
+    val x = f.x.cast("double")
+    val y = f.y.cast("double")
+    raw
+      .withColumn("qmap", map_from_entries(transform(f.quals,
+        q => struct(f.qualId(q).as("key"), f.qualValue(q).as("value")))))
+      .select(Seq(
         col("game_id"),
-        col("e.id").cast("long").as("event_id"),
-        col("e.periodId").cast("int").as("period_id"),
-        col("e.timeMin").cast("long").as("minute"),
-        greatest(col("e.timeSec").cast("long"), lit(0L)).as("second"), // pre-match -3..-1 → 0
-        to_timestamp(regexp_replace(col("e.timeStamp"), "Z$", "")).as("timestamp"),
-        col("e.contestantId").as("team_id"),
-        col("e.playerId").as("player_id"),
-        col("e.playerName").as("player_name"),
-        col("e.typeId").cast("int").as("type_id"),
-        coalesce(col("e.outcome").cast("int") === 1, lit(true)).as("outcome"),
-        col("e.x").cast("double").as("start_x"),
-        col("e.y").cast("double").as("start_y"),
-        coalesce(qnum(140), qnum(146), qnum(102), col("e.x").cast("double")).as("end_x"),
-        coalesce(qnum(141), qnum(147), qnum(103), col("e.y").cast("double")).as("end_y"),
-        coalesce(transform(quals, q => q.getField("qualifierId").cast("int")),
+        f.id.cast("long").as("event_id"),
+        f.period.cast("int").as("period_id"),
+        f.minute.cast("long").as("minute"),
+        greatest(f.second.cast("long"), lit(0L)).as("second"), // pre-match -3..-1 → 0
+        f.timestamp.as("timestamp"),
+        f.team.as("team_id"),
+        f.player.as("player_id")) ++
+        f.playerName.map(_.as("player_name")) ++ Seq(
+        f.typeId.cast("int").as("type_id"),
+        coalesce(f.outcome.cast("int") === 1, lit(true)).as("outcome"),
+        x.as("start_x"),
+        y.as("start_y"),
+        coalesce(f.endX.map(_.cast("double")).toSeq ++
+          Seq(qnum(140), qnum(146), qnum(102), x): _*).as("end_x"),
+        coalesce(f.endY.map(_.cast("double")).toSeq ++
+          Seq(qnum(141), qnum(147), qnum(103), y): _*).as("end_y"),
+        coalesce(transform(f.quals, q => f.qualId(q).cast("int")),
           array().cast("array<int>")).as("qualifiers"),
-        col("qmap"))
+        col("qmap")): _*)
       .filter(col("type_id") =!= 43) // deleted events
-    finishEvents(base)
-  }
-
-  /** Shared accessor tail: event-type dim join + the loader's canonical
-    * per-game ordering (`loader.py:455-478`). */
-  private def finishEvents(base: DataFrame): DataFrame =
-    base
       .join(broadcast(OptaLoader.eventTypes(spark)), Seq("type_id"), "left")
       .withColumn("seq",
         row_number().over(Window.partitionBy("game_id")
           .orderBy("period_id", "minute", "second", "timestamp", "event_id")).cast("long"))
+  }
+
+  /** Raw event rows of a game from the MA3 liveData.event list
+    * ([[readEvents]]). */
+  def events(gameId: String): DataFrame =
+    readEvents(
+      ma3(gameId).select(
+        col("matchInfo.id").as("game_id"),
+        explode(col("liveData.event")).as("e")),
+      EventFields(col("e.qualifier"), _.getField("qualifierId"), _.getField("value"),
+        id = col("e.id"), period = col("e.periodId"), minute = col("e.timeMin"),
+        second = col("e.timeSec"), timestamp = isoTimestamp(col("e.timeStamp")),
+        team = col("e.contestantId"), player = col("e.playerId"),
+        typeId = col("e.typeId"), outcome = col("e.outcome"), x = col("e.x"), y = col("e.y"),
+        playerName = Some(col("e.playerName"))))
 
   // ---- F1 JSON feed (`parsers/f1_json.py`) ----------------------------
   // Schedule feed: OptaFeed→OptaDocument with a MatchData list; uID values
   // carry a one-letter prefix ("g123" → 123).
 
   private def stripU(c: Column): Column = substring(c, 2, 1000).cast("long")
+
+  /** Home/away team ids and scores from a TeamData list (F1 per match, F9
+    * and F7 per game), read through the feed's attribute accessor. */
+  private def sideColumns(teams: Column, attr: (Column, String) => Column): Seq[Column] = {
+    def side(s: String, name: String): Column =
+      attr(Feeds.onSide(teams, s, attr(_, "Side")), name)
+    Seq(stripU(side("Home", "TeamRef")).as("home_team_id"),
+      stripU(side("Away", "TeamRef")).as("away_team_id"),
+      side("Home", "Score").cast("long").as("home_score"),
+      side("Away", "Score").cast("long").as("away_score"))
+  }
 
   private def f1Doc(): DataFrame =
     readJson(paths("f1"))
@@ -165,67 +212,15 @@ final class OptaLoader(spark: SparkSession, root: String,
       col("d.`@attributes`.competition_id").cast("long").as("competition_id"),
       col("d.`@attributes`.season_id").cast("long").as("season_id"),
       explode(col("d.MatchData")).as("m"))
-    def side(s: String): Column =
-      element_at(filter(col("m.TeamData"),
-        t => t.getField("@attributes").getField("Side") === s), 1)
-        .getField("@attributes")
-    m.select(
+    m.select(Seq(
       stripU(col("m.`@attributes`.uID")).as("game_id"),
       col("competition_id"), col("season_id"),
       col("m.MatchInfo.`@attributes`.MatchDay").cast("int").as("game_day"),
-      to_timestamp(col("m.MatchInfo.Date")).as("game_date"),
-      stripU(side("Home").getField("TeamRef")).as("home_team_id"),
-      stripU(side("Away").getField("TeamRef")).as("away_team_id"),
-      side("Home").getField("Score").cast("long").as("home_score"),
-      side("Away").getField("Score").cast("long").as("away_score"))
+      to_timestamp(col("m.MatchInfo.Date")).as("game_date")) ++
+      sideColumns(col("m.TeamData"), bag): _*)
   }
 
-  // ---- F9 JSON feed (`parsers/f9_json.py`) ----------------------------
-  // Match-result feed: OptaDocument is a LIST; Stat entries are
-  // {@attributes: {Type}, @value} pairs.
-
-  private def f9Doc(gameId: String): DataFrame =
-    readJson(paths("f9", gameId = gameId))
-      .filter(col("data.OptaFeed").isNotNull)
-      .select(element_at(col("data.OptaFeed.OptaDocument"), 1).as("d"))
-
-  private def statOf(stats: Column, name: String): Column =
-    element_at(filter(stats,
-      s => s.getField("@attributes").getField("Type") === name), 1)
-      .getField("@value")
-
-  /** Game header from the F9 result feed (`f9_json.py:49-115`). */
-  def f9Games(gameId: String): DataFrame = {
-    val d = f9Doc(gameId)
-    def side(s: String): Column =
-      element_at(filter(col("d.MatchData.TeamData"),
-        t => t.getField("@attributes").getField("Side") === s), 1)
-        .getField("@attributes")
-    d.select(
-      stripU(col("d.`@attributes`.uID")).as("game_id"),
-      stripU(col("d.Competition.`@attributes`.uID")).as("competition_id"),
-      statOf(col("d.Competition.Stat"), "season_id").cast("long").as("season_id"),
-      statOf(col("d.Competition.Stat"), "matchday").cast("int").as("game_day"),
-      to_timestamp(col("d.MatchData.MatchInfo.Date"), "yyyyMMdd'T'HHmmssZ")
-        .as("game_date"),
-      stripU(side("Home").getField("TeamRef")).as("home_team_id"),
-      stripU(side("Away").getField("TeamRef")).as("away_team_id"),
-      side("Home").getField("Score").cast("long").as("home_score"),
-      side("Away").getField("Score").cast("long").as("away_score"),
-      statOf(col("d.MatchData.Stat"), "match_time").cast("long").as("duration"),
-      col("d.Venue.Name").as("venue"),
-      col("d.MatchData.MatchInfo.Attendance").cast("long").as("attendance"))
-  }
-
-  /** Teams from the F9 result feed (`f9_json.py:116-139`). */
-  def f9Teams(gameId: String): DataFrame =
-    f9Doc(gameId)
-      .select(explode(col("d.Team")).as("t"))
-      .filter(col("t.id").isNotNull)
-      .select(col("t.id").cast("long").as("team_id"),
-        col("t.nameObj.name").as("team_name"))
-
-  // ---- shared F9/F7 lineup-minutes machinery --------------------------
+  // ---- F9 JSON / F7 XML result feeds (`parsers/f9_json.py`, `f7_xml.py`)
   // Optional feed elements (a whole Substitution/Booking list, or single
   // attributes like Retired) are OMITTED from real files when absent, so
   // the inferred schema of a normal match must not fail at analysis time:
@@ -233,24 +228,20 @@ final class OptaLoader(spark: SparkSession, root: String,
   // typed empty, single element inferred as a bare struct → wrapped,
   // absent attribute → NULL (the coalesce chains fall through).
 
-  private def memberType(parent: org.apache.spark.sql.types.StructType,
-      name: String): Option[org.apache.spark.sql.types.DataType] =
+  private def memberType(parent: StructType, name: String): Option[DataType] =
     parent.find(_.name == name).map(_.dataType)
 
-  private def memberStruct(parent: org.apache.spark.sql.types.StructType,
-      name: String): Option[org.apache.spark.sql.types.StructType] =
+  private def memberStruct(parent: StructType, name: String): Option[StructType] =
     memberType(parent, name).flatMap {
-      case org.apache.spark.sql.types.ArrayType(st: org.apache.spark.sql.types.StructType, _) => Some(st)
-      case st: org.apache.spark.sql.types.StructType => Some(st)
+      case ArrayType(st: StructType, _) => Some(st)
+      case st: StructType => Some(st)
       case _ => None
     }
 
-  private def optArr(parent: org.apache.spark.sql.types.StructType,
-      prefix: String, name: String, ddl: String): Column =
+  private def optArr(parent: StructType, prefix: String, name: String, ddl: String): Column =
     memberType(parent, name) match {
-      case Some(org.apache.spark.sql.types.ArrayType(_: org.apache.spark.sql.types.StructType, _)) =>
-        col(s"$prefix.$name")
-      case Some(_: org.apache.spark.sql.types.StructType) => array(col(s"$prefix.$name"))
+      case Some(ArrayType(_: StructType, _)) => col(s"$prefix.$name")
+      case Some(_: StructType) => array(col(s"$prefix.$name"))
       // explicit JSON null / empty XML element infers a non-struct type —
       // same degraded path as a missing member (accessors assume struct)
       case _ => lit(null).cast(s"array<$ddl>")
@@ -261,172 +252,158 @@ final class OptaLoader(spark: SparkSession, root: String,
     * fallback — absence should still fail loudly). */
   private def pathAsArray(df: DataFrame, path: String): Column =
     scala.util.Try(df.select(col(path)).schema.head.dataType).toOption match {
-      case Some(_: org.apache.spark.sql.types.ArrayType) => col(path)
+      case Some(_: ArrayType) => col(path)
       case _ => array(col(path))
     }
 
-  /** sub_on/sub_off/red-card minutes rule shared by the F9 JSON and F7 XML
-    * paths (`f9_json.py:176-266`, `f7_xml.py:142-210`): per player,
-    * sub_on = their first non-Retired SubOn entry (else match_time for an
-    * unused Sub, 0 for a starter), sub_off = their first SubOff entry
-    * (else the red-card minute, else match_time); minutes = sub_off −
-    * sub_on. `sAttr`/`bAttr` abstract the feed's attribute access (F9
-    * '@attributes' bags vs F7 '_'-prefixed XML attributes). The booking
-    * minute attribute differs between the feeds — F9 Booking elements
-    * carry `Time` (`f9_json.py:208-216`) but F7 Booking elements carry
-    * `Min` (`f7_xml.py:171-178`) — so it is a parameter, not a constant. */
-  private def subMinutes(subs: Column, sAttr: (Column, String) => Column,
-      bookings: Column, bAttr: (Column, String) => Column,
-      pref: Column, status: Column, matchTime: Column,
-      bookTimeAttr: String = "Time"): Column = {
-    val subOn = coalesce(
-      sAttr(get(filter(subs,
-        s => sAttr(s, "Retired").isNull && sAttr(s, "SubOn") === pref), lit(0)), "Time")
-        .cast("long"),
-      when(status === "Sub", matchTime).otherwise(0L))
-    val redTime = bAttr(get(filter(bookings,
-        b => bAttr(b, "CardType").isin("Red", "SecondYellow") &&
-          bAttr(b, "PlayerRef") === pref), lit(0)), bookTimeAttr)
-      .cast("long")
-    val subOff = coalesce(
-      sAttr(get(filter(subs, s => sAttr(s, "SubOff") === pref), lit(0)), "Time")
-        .cast("long"),
-      redTime, matchTime)
-    subOff - subOn
-  }
+  /** One result-feed dialect. F9 JSON and F7 XML carry the same match
+    * result, spelled differently: attributes in an `@attributes` bag vs
+    * `_`-prefixed XML attributes (`attr`, and `attrNames` lists an
+    * element's attributes), a Stat's value in `@value` vs `_VALUE`,
+    * attendance as a MatchInfo element vs attribute, and the booking minute
+    * as `Time` (`f9_json.py:208-216`) vs `Min` (`f7_xml.py:171-178`).
+    * `doc` reads a game's document as one struct column `d`; `subsDdl` /
+    * `bookDdl` type an absent Substitution/Booking member; `teamCols` /
+    * `playerCols` are the lineup columns whose names and order the two
+    * reference parsers choose differently. */
+  private final class ResultFeed(
+      val doc: String => DataFrame,
+      attr: (Column, String) => Column,
+      attrNames: StructType => Set[String],
+      statValue: String, attendance: String,
+      subsDdl: String, bookDdl: String, bookTime: String,
+      teamCols: Column => Seq[Column], playerCols: Column => Seq[Column]) {
 
-  private val F9SubsDdl =
-    "struct<`@attributes`:struct<Retired:string,SubOn:string,SubOff:string,Time:string>>"
-  private val F9BookDdl =
-    "struct<`@attributes`:struct<CardType:string,PlayerRef:string,Time:string>>"
+    private def stat(d: DataFrame, path: String, name: String): Column =
+      element_at(filter(pathAsArray(d, path), s => attr(s, "Type") === name), 1)
+        .getField(statValue)
 
-  /** '@attributes'-bag accessor that degrades to NULL when the inferred
-    * element schema lacks the attribute (or the whole bag). */
-  private def bagAttr(elem: Option[org.apache.spark.sql.types.StructType])
-      : (Column, String) => Column = {
-    val inner: Set[String] = elem.flatMap(memberStruct(_, "@attributes"))
-      .map(_.fieldNames.toSet).getOrElse(Set.empty)
-    (c, f) =>
-      if (elem.isEmpty || inner(f)) c.getField("@attributes").getField(f)
-      else lit(null).cast("string")
-  }
+    /** `attr` that degrades to NULL when the inferred element schema lacks
+      * the attribute (or the element). */
+    private def attrOrNull(elem: Option[StructType]): (Column, String) => Column = {
+      val names = elem.map(attrNames).getOrElse(Set.empty[String])
+      (c, f) => if (elem.isEmpty || names(f)) attr(c, f) else lit(null).cast("string")
+    }
 
-  /** Lineups with the substitution-minutes algebra from the F9 result feed
-    * ([[subMinutes]]) — map-only, every game one row-group, no shuffle. */
-  def f9Lineups(gameId: String): DataFrame = {
-    val d = f9Doc(gameId)
-    val base = d.select(
-        stripU(col("d.`@attributes`.uID")).as("game_id"),
-        statOf(col("d.MatchData.Stat"), "match_time").cast("long").as("match_time"),
-        explode(col("d.MatchData.TeamData")).as("td"))
-    val tdType = base.schema("td").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-    val exploded = base.select(col("game_id"), col("match_time"),
-        stripU(col("td.`@attributes`.TeamRef")).as("team_id"),
-        optArr(tdType, "td", "Substitution", F9SubsDdl).as("subs"),
-        optArr(tdType, "td", "Booking", F9BookDdl).as("bookings"),
+    /** sub_on/sub_off/red-card minutes rule (`f9_json.py:176-266`,
+      * `f7_xml.py:142-210`) over the `subs` / `bookings` / `match_time`
+      * columns of a TeamData row of type `tdType`: per player, sub_on =
+      * their first non-Retired SubOn entry (else match_time for an unused
+      * Sub, 0 for a starter), sub_off = their first SubOff entry (else the
+      * red-card minute, else match_time); minutes = sub_off − sub_on. */
+    private def minutesPlayed(tdType: StructType, pref: Column, status: Column): Column = {
+      val sAttr = attrOrNull(memberStruct(tdType, "Substitution"))
+      val bAttr = attrOrNull(memberStruct(tdType, "Booking"))
+      def subOf(p: Column => Column): Column =
+        sAttr(get(filter(col("subs"), p), lit(0)), "Time").cast("long")
+      val subOn = coalesce(subOf(s => sAttr(s, "Retired").isNull && sAttr(s, "SubOn") === pref),
+        when(status === "Sub", col("match_time")).otherwise(0L))
+      val redTime = bAttr(get(filter(col("bookings"),
+          b => bAttr(b, "CardType").isin("Red", "SecondYellow") &&
+            bAttr(b, "PlayerRef") === pref), lit(0)), bookTime)
+        .cast("long")
+      coalesce(subOf(s => sAttr(s, "SubOff") === pref), redTime, col("match_time")) - subOn
+    }
+
+    /** Game header (`f9_json.py:49-115`, `f7_xml.py:58-119`); a single XML
+      * element infers as a bare struct, so every repeated member is
+      * wrapped before the array ops. */
+    def games(gameId: String): DataFrame = {
+      val d = doc(gameId)
+      d.select(Seq(
+        stripU(attr(col("d"), "uID")).as("game_id"),
+        stripU(attr(col("d.Competition"), "uID")).as("competition_id"),
+        stat(d, "d.Competition.Stat", "season_id").cast("long").as("season_id"),
+        stat(d, "d.Competition.Stat", "matchday").cast("int").as("game_day"),
+        to_timestamp(col("d.MatchData.MatchInfo.Date"), "yyyyMMdd'T'HHmmssZ")
+          .as("game_date")) ++
+        sideColumns(pathAsArray(d, "d.MatchData.TeamData"), attr) ++ Seq(
+        stat(d, "d.MatchData.Stat", "match_time").cast("long").as("duration"),
+        col("d.Venue.Name").as("venue"),
+        col(attendance).cast("long").as("attendance")): _*)
+    }
+
+    /** Lineups with the substitution-minutes algebra ([[minutesPlayed]]) —
+      * map-only, every game one row-group, no shuffle. */
+    def lineups(gameId: String): DataFrame = {
+      val d = doc(gameId)
+      val base = d.select(
+        stripU(attr(col("d"), "uID")).as("game_id"),
+        stat(d, "d.MatchData.Stat", "match_time").cast("long").as("match_time"),
+        explode(pathAsArray(d, "d.MatchData.TeamData")).as("td"))
+      val tdType = base.schema("td").dataType.asInstanceOf[StructType]
+      val exploded = base.select(col("game_id"), col("match_time"), col("td"),
+        optArr(tdType, "td", "Substitution", subsDdl).as("subs"),
+        optArr(tdType, "td", "Booking", bookDdl).as("bookings"),
         explode(col("td.PlayerLineUp.MatchPlayer")).as("p"))
-    val sAttr = bagAttr(memberStruct(tdType, "Substitution"))
-    val bAttr = bagAttr(memberStruct(tdType, "Booking"))
-    val pref = col("p.`@attributes`.PlayerRef")
-    val status = col("p.`@attributes`.Status")
-    exploded.select(
-      col("game_id"), col("team_id"),
-      stripU(pref).as("player_id"),
-      col("p.`@attributes`.ShirtNumber").cast("long").as("jersey_number"),
-      col("p.`@attributes`.Position").as("starting_position"),
-      (status === "Start").as("is_starter"),
-      subMinutes(col("subs"), sAttr, col("bookings"), bAttr,
-        pref, status, col("match_time")).as("minutes_played"))
+      val pref = attr(col("p"), "PlayerRef")
+      val status = attr(col("p"), "Status")
+      exploded.select(
+        Seq(col("game_id"), stripU(attr(col("td"), "TeamRef")).as("team_id")) ++
+          teamCols(col("td")) ++ Seq(stripU(pref).as("player_id")) ++
+          playerCols(col("p")) ++ Seq(
+          (status === "Start").as("is_starter"),
+          minutesPlayed(tdType, pref, status).as("minutes_played")): _*)
+    }
   }
 
-  // ---- F7 XML feed (`parsers/f7_xml.py`) ------------------------------
-  // Same result-feed content in XML; Spark-native XML source with rowTag
-  // SoccerDocument; element text of attributed nodes lands in `_VALUE`.
+  private val F9 = new ResultFeed(
+    doc = gameId => readJson(paths("f9", gameId = gameId))
+      .filter(col("data.OptaFeed").isNotNull)
+      .select(element_at(col("data.OptaFeed.OptaDocument"), 1).as("d")),
+    attr = bag,
+    attrNames = memberStruct(_, "@attributes").map(_.fieldNames.toSet).getOrElse(Set.empty),
+    statValue = "@value",
+    attendance = "d.MatchData.MatchInfo.Attendance",
+    subsDdl = "struct<`@attributes`:struct<Retired:string,SubOn:string,SubOff:string,Time:string>>",
+    bookDdl = "struct<`@attributes`:struct<CardType:string,PlayerRef:string,Time:string>>",
+    bookTime = "Time",
+    teamCols = _ => Nil,
+    playerCols = p => Seq(bag(p, "ShirtNumber").cast("long").as("jersey_number"),
+      bag(p, "Position").as("starting_position")))
 
-  private def f7Doc(gameId: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "SoccerDocument")
-      .load(paths("f7", gameId = gameId): _*)
+  // element text of attributed XML nodes lands in `_VALUE`
+  private val F7 = new ResultFeed(
+    doc = gameId => readXml("SoccerDocument", paths("f7", gameId = gameId))
+      .select(struct(col("*")).as("d")),
+    attr = xmlAttr,
+    attrNames = _.fieldNames.collect { case n if n.startsWith("_") => n.drop(1) }.toSet,
+    statValue = "_VALUE",
+    attendance = "d.MatchData.MatchInfo._Attendance",
+    subsDdl = "struct<_Retired:string,_SubOn:string,_SubOff:string,_Time:string>",
+    bookDdl = "struct<_CardType:string,_PlayerRef:string,_Min:string>",
+    bookTime = "Min",
+    teamCols = td => Seq(xmlAttr(td, "Formation").cast("string").as("formation"),
+      xmlAttr(td, "Side").as("side")),
+    playerCols = p => Seq(xmlAttr(p, "Position").as("position"),
+      xmlAttr(p, "ShirtNumber").cast("long").as("jersey_number")))
 
-  /** Game header from the F7 XML feed (`f7_xml.py:58-119`). */
-  def f7Games(gameId: String): DataFrame = {
-    val d = f7Doc(gameId)
-    // single XML elements infer as bare structs — wrap every repeated
-    // member before the array ops (same shape-variance as f7Lineups)
-    def side(s: String): Column =
-      element_at(filter(pathAsArray(d, "MatchData.TeamData"),
-        t => t.getField("_Side") === s), 1)
-    def statOfX(path: String, name: String): Column =
-      element_at(filter(pathAsArray(d, path), st => st.getField("_Type") === name), 1)
-        .getField("_VALUE")
-    d.select(
-      stripU(col("_uID")).as("game_id"),
-      stripU(col("Competition._uID")).as("competition_id"),
-      statOfX("Competition.Stat", "season_id").cast("long").as("season_id"),
-      statOfX("Competition.Stat", "matchday").cast("int").as("game_day"),
-      to_timestamp(col("MatchData.MatchInfo.Date"), "yyyyMMdd'T'HHmmssZ").as("game_date"),
-      stripU(side("Home").getField("_TeamRef")).as("home_team_id"),
-      stripU(side("Away").getField("_TeamRef")).as("away_team_id"),
-      side("Home").getField("_Score").cast("long").as("home_score"),
-      side("Away").getField("_Score").cast("long").as("away_score"),
-      statOfX("MatchData.Stat", "match_time").cast("long").as("duration"),
-      col("Venue.Name").as("venue"),
-      col("MatchData.MatchInfo._Attendance").cast("long").as("attendance"))
-  }
+  /** Game header from the F9 result feed ([[ResultFeed.games]]). */
+  def f9Games(gameId: String): DataFrame = F9.games(gameId)
+
+  /** Teams from the F9 result feed (`f9_json.py:116-139`). */
+  def f9Teams(gameId: String): DataFrame =
+    F9.doc(gameId)
+      .select(explode(col("d.Team")).as("t"))
+      .filter(col("t.id").isNotNull)
+      .select(col("t.id").cast("long").as("team_id"),
+        col("t.nameObj.name").as("team_name"))
+
+  /** Lineups from the F9 result feed ([[ResultFeed.lineups]]). */
+  def f9Lineups(gameId: String): DataFrame = F9.lineups(gameId)
+
+  /** Game header from the F7 XML feed ([[ResultFeed.games]]). */
+  def f7Games(gameId: String): DataFrame = F7.games(gameId)
 
   /** Teams from the F7 XML feed (`f7_xml.py:121-140`). */
   def f7Teams(gameId: String): DataFrame =
-    f7Doc(gameId)
-      .select(explode(col("Team")).as("t"))
+    F7.doc(gameId)
+      .select(explode(col("d.Team")).as("t"))
       .select(stripU(col("t._uID")).as("team_id"), col("t.Name").as("team_name"))
 
-  private val F7SubsDdl =
-    "struct<_Retired:string,_SubOn:string,_SubOff:string,_Time:string>"
-  private val F7BookDdl =
-    "struct<_CardType:string,_PlayerRef:string,_Min:string>"
-
-  /** '_'-prefixed XML-attribute accessor that degrades to NULL when the
-    * inferred element schema lacks the attribute. */
-  private def xmlAttr(elem: Option[org.apache.spark.sql.types.StructType])
-      : (Column, String) => Column = {
-    val fields: Set[String] = elem.map(_.fieldNames.toSet).getOrElse(Set.empty)
-    (c, f) =>
-      if (elem.isEmpty || fields("_" + f)) c.getField("_" + f)
-      else lit(null).cast("string")
-  }
-
-  /** Lineups with the substitution-minutes algebra from the F7 XML feed —
-    * identical rules to the F9 path ([[subMinutes]]) over the
-    * XML-attributed Substitution/Booking elements. */
-  def f7Lineups(gameId: String): DataFrame = {
-    def statOfX(stats: Column, name: String): Column =
-      element_at(filter(stats, st => st.getField("_Type") === name), 1)
-        .getField("_VALUE")
-    val doc = f7Doc(gameId)
-    val base = doc
-      .select(stripU(col("_uID")).as("game_id"),
-        statOfX(pathAsArray(doc, "MatchData.Stat"), "match_time")
-          .cast("long").as("match_time"),
-        explode(pathAsArray(doc, "MatchData.TeamData")).as("td"))
-    val tdType = base.schema("td").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-    val exploded = base.select(col("game_id"), col("match_time"),
-        stripU(col("td._TeamRef")).as("team_id"),
-        col("td._Formation").cast("string").as("formation"),
-        col("td._Side").as("side"),
-        optArr(tdType, "td", "Substitution", F7SubsDdl).as("subs"),
-        optArr(tdType, "td", "Booking", F7BookDdl).as("bookings"),
-        explode(col("td.PlayerLineUp.MatchPlayer")).as("p"))
-    val sAttr = xmlAttr(memberStruct(tdType, "Substitution"))
-    val bAttr = xmlAttr(memberStruct(tdType, "Booking"))
-    val pref = col("p._PlayerRef")
-    val status = col("p._Status")
-    exploded.select(col("game_id"), col("team_id"), col("formation"), col("side"),
-      stripU(pref).as("player_id"),
-      col("p._Position").as("position"),
-      col("p._ShirtNumber").cast("long").as("jersey_number"),
-      (status === "Start").as("is_starter"),
-      subMinutes(col("subs"), sAttr, col("bookings"), bAttr,
-        pref, status, col("match_time"), bookTimeAttr = "Min").as("minutes_played"))
-  }
+  /** Lineups from the F7 XML feed, with the formation and side of each
+    * team ([[ResultFeed.lineups]]). */
+  def f7Lineups(gameId: String): DataFrame = F7.lineups(gameId)
 
   // ---- WhoScored matchCentreData feed (`parsers/whoscored.py`) --------
   // One JSON object per game (ids live in the file name); event types and
@@ -435,6 +412,17 @@ final class OptaLoader(spark: SparkSession, root: String,
 
   private def ws(gameId: String): DataFrame =
     readJson(paths("whoscored", gameId = gameId))
+
+  /** Both sides of a WhoScored game from one read of its file: per side,
+    * game_id and team_id followed by `cols(side)` (`side` is "home" or
+    * "away", the name of the side's object). */
+  private def wsSides(gameId: String)(cols: String => Seq[Column]): DataFrame = {
+    val d = ws(gameId)
+    def side(s: String): DataFrame = d.select(Seq(
+      lit(gameId.toLong).as("game_id"),
+      col(s"$s.teamId").cast("long").as("team_id")) ++ cols(s): _*)
+    side("home").unionByName(side("away"))
+  }
 
   /** Game header (`whoscored.py:97-131`); competition/season ids come from
     * the feed path, so the caller passes them through. */
@@ -453,52 +441,34 @@ final class OptaLoader(spark: SparkSession, root: String,
       col("attendance").cast("long").as("attendance"))
 
   /** Both teams (`whoscored.py:133-150`). */
-  def wsTeams(gameId: String): DataFrame = {
-    val d = ws(gameId)
-    d.select(col("home.teamId").cast("long").as("team_id"),
-        col("home.name").as("team_name"))
-      .unionByName(d.select(col("away.teamId").cast("long").as("team_id"),
-        col("away.name").as("team_name")))
-  }
+  def wsTeams(gameId: String): DataFrame =
+    wsSides(gameId)(s => Seq(col(s"$s.name").as("team_name"))).drop("game_id")
 
-  /** Event rows (`whoscored.py:189-249`): typed qualifier objects →
-    * id-value map, endX/endY preferred over qualifier-derived ends,
-    * expanded minutes, outcomeType.value as the outcome. */
-  def wsEvents(gameId: String): DataFrame = {
-    val raw = ws(gameId).select(
-      lit(gameId.toLong).as("game_id"),
-      explode(col("events")).as("e"))
-    val quals = col("e.qualifiers")
-    val qmap = map_from_entries(transform(quals,
-      q => struct(q.getField("type").getField("value").cast("int").as("key"),
-        coalesce(q.getField("value").cast("string"), lit("true")).as("value"))))
-    def qnum(id: Int): Column = element_at(col("qmap"), id).cast("double")
-    val base = raw
-      .withColumn("qmap", qmap)
-      .select(
-        col("game_id"),
-        coalesce(col("e.id"), col("e.eventId")).cast("long").as("event_id"),
-        col("e.period.value").cast("int").as("period_id"),
-        col("e.expandedMinute").cast("long").as("minute"),
-        greatest(coalesce(col("e.second"), lit(0L)).cast("long"), lit(0L)).as("second"),
-        lit(null).cast("timestamp").as("timestamp"), // not in the stream
-        col("e.teamId").cast("long").as("team_id"),
-        col("e.playerId").cast("long").as("player_id"),
-        col("e.type.value").cast("int").as("type_id"),
-        coalesce(col("e.outcomeType.value").cast("int") === 1, lit(true)).as("outcome"),
-        col("e.x").cast("double").as("start_x"),
-        col("e.y").cast("double").as("start_y"),
-        coalesce(col("e.endX").cast("double"), qnum(140), qnum(146), qnum(102),
-          col("e.x").cast("double")).as("end_x"),
-        coalesce(col("e.endY").cast("double"), qnum(141), qnum(147), qnum(103),
-          col("e.y").cast("double")).as("end_y"),
-        coalesce(transform(quals,
-          q => q.getField("type").getField("value").cast("int")),
-          array().cast("array<int>")).as("qualifiers"),
-        col("qmap"))
-      .filter(col("type_id") =!= 43)
-    finishEvents(base)
-  }
+  /** Event rows (`whoscored.py:189-249`, [[readEvents]]): typed qualifier
+    * objects (a valueless qualifier reads "true"), endX/endY preferred over
+    * qualifier-derived ends, expanded minutes, outcomeType.value as the
+    * outcome. */
+  def wsEvents(gameId: String): DataFrame =
+    readEvents(
+      ws(gameId).select(lit(gameId.toLong).as("game_id"), explode(col("events")).as("e")),
+      EventFields(col("e.qualifiers"), _.getField("type").getField("value").cast("int"),
+        q => coalesce(q.getField("value").cast("string"), lit("true")),
+        id = coalesce(col("e.id"), col("e.eventId")), period = col("e.period.value"),
+        minute = col("e.expandedMinute"), second = coalesce(col("e.second"), lit(0L)),
+        timestamp = lit(null).cast("timestamp"), // not in the stream
+        team = col("e.teamId").cast("long"), player = col("e.playerId").cast("long"),
+        typeId = col("e.type.value"), outcome = col("e.outcomeType.value"),
+        x = col("e.x"), y = col("e.y"), endX = Some(col("e.endX")), endY = Some(col("e.endY"))))
+
+  /** periodMinuteLimits / periodEndMinutes are objects keyed by period-id
+    * string → read as maps so a computed key can index them. */
+  private val longMap = MapType(StringType, LongType)
+
+  /** An expanded minute as a minute of its period: less the previous
+    * period's entry in the periodMinuteLimits map `lims`. */
+  private def periodMinute(minute: Column, periodId: Column, lims: Column): Column =
+    minute - when(periodId > 1,
+      coalesce(element_at(lims, (periodId - 1).cast("string")), lit(0L))).otherwise(0L)
 
   /** Substitutions from the WhoScored stream (`whoscored.py:251-274`):
     * sub-on events (type 19) with the replaced player attached, plus the
@@ -510,21 +480,13 @@ final class OptaLoader(spark: SparkSession, root: String,
       explode(col("events")).as("e"))
       .filter(col("e.type.value") === 19)
     val periodId = col("e.period.value").cast("int")
-    // periodMinuteLimits is an object keyed by period-id string → read it
-    // as a map so the (dynamic) previous-period key can index it
-    val limsMap = from_json(to_json(col("lims")),
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.LongType))
-    val prevLimit = when(periodId > 1,
-      coalesce(element_at(limsMap, (periodId - 1).cast("string")), lit(0L)))
-      .otherwise(0L)
-    val periodMinute = col("e.minute").cast("long") - prevLimit
+    val minute = periodMinute(col("e.minute").cast("long"), periodId,
+      from_json(to_json(col("lims")), longMap))
     raw.select(
       col("game_id"),
       col("e.teamId").cast("long").as("team_id"),
       periodId.as("period_id"),
-      ((periodMinute * 60 + coalesce(col("e.second"), lit(0L)).cast("long")) * 1000)
+      ((minute * 60 + coalesce(col("e.second"), lit(0L)).cast("long")) * 1000)
         .as("period_milliseconds"),
       col("e.playerId").cast("long").as("player_in_id"),
       col("e.relatedPlayerId").cast("long").as("player_out_id"))
@@ -537,13 +499,10 @@ final class OptaLoader(spark: SparkSession, root: String,
     * The dynamic per-stat dicts are emitted long-form by [[wsPlayerStats]]
     * (a tidy reshape of the reference's per-row stat columns). */
   def wsPlayerGameStats(gameId: String): DataFrame = {
-    def side(s: String): DataFrame = ws(gameId).select(
-      lit(gameId.toLong).as("game_id"),
+    val exploded = wsSides(gameId)(s => Seq(
       col("expandedMaxMinute").cast("long").as("max_minute"),
-      col(s"$s.teamId").cast("long").as("team_id"),
       from_json(to_json(col(s"$s.incidentEvents")), wsIncidentsType).as("incidents"),
-      explode(from_json(to_json(col(s"$s.players")), wsPlayersType)).as("p"))
-    val exploded = side("home").unionByName(side("away"))
+      explode(from_json(to_json(col(s"$s.players")), wsPlayersType)).as("p")))
     val pid = col("p.playerId").cast("long")
     val red = get(filter(col("incidents"),
         e => e.getField("cardType").getField("displayName").isin("Red", "SecondYellow") &&
@@ -574,15 +533,20 @@ final class OptaLoader(spark: SparkSession, root: String,
       minutes.as("minutes_played"))
   }
 
-  private def camelToSnake(c: Column): Column =
-    lower(regexp_replace(regexp_replace(c,
-      "(.)([A-Z][a-z]+)", "$1_$2"), "([a-z0-9])([A-Z])", "$1_$2"))
+  /** (stat, vals) dynamic stat dicts long-form after the `keys`: the
+    * camelCase name snake_cased, the dict's minute-keyed values summed. */
+  private def statRows(df: DataFrame, keys: String*): DataFrame =
+    df.select(keys.map(col) ++ Seq(
+      lower(regexp_replace(regexp_replace(col("stat"),
+        "(.)([A-Z][a-z]+)", "$1_$2"), "([a-z0-9])([A-Z])", "$1_$2")).as("stat"),
+      aggregate(map_values(col("vals")), lit(0.0), _ + _).as("value")): _*)
+
+  private val statMapType = MapType(StringType, MapType(StringType, DoubleType))
 
   /** Explicit schemas for the side-asymmetric WhoScored JSON (a side whose
     * players never carry e.g. subbedInExpandedMinute would otherwise infer
     * a struct without the field and break the shared projection). */
-  private val wsPlayersType: org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
+  private val wsPlayersType: DataType =
     ArrayType(StructType(Seq(
       StructField("playerId", LongType),
       StructField("isFirstEleven", BooleanType),
@@ -591,40 +555,26 @@ final class OptaLoader(spark: SparkSession, root: String,
       StructField("isManOfTheMatch", BooleanType),
       StructField("subbedInExpandedMinute", LongType),
       StructField("subbedOutExpandedMinute", LongType),
-      StructField("stats", MapType(StringType, MapType(StringType, DoubleType))))))
-  }
+      StructField("stats", statMapType))))
 
-  private val wsIncidentsType: org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
+  private val wsIncidentsType: DataType =
     ArrayType(StructType(Seq(
       StructField("playerId", LongType),
       StructField("expandedMinute", LongType),
       StructField("cardType", StructType(Seq(
         StructField("value", LongType),
         StructField("displayName", StringType)))))))
-  }
-
-  private val statMapType = org.apache.spark.sql.types.MapType(
-    org.apache.spark.sql.types.StringType,
-    org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType,
-      org.apache.spark.sql.types.DoubleType))
 
   /** Per-player stats, long-form (`whoscored.py:363-367`): each dynamic
     * stat dict summed over its minute-keyed values; `*success` stats are
     * dropped (the reference's lowercase endswith filter). */
   def wsPlayerStats(gameId: String): DataFrame = {
-    def side(s: String): DataFrame = ws(gameId).select(
-      lit(gameId.toLong).as("game_id"),
-      col(s"$s.teamId").cast("long").as("team_id"),
-      explode(from_json(to_json(col(s"$s.players")), wsPlayersType)).as("p"))
+    val perPlayer = wsSides(gameId)(s => Seq(
+      explode(from_json(to_json(col(s"$s.players")), wsPlayersType)).as("p")))
       .select(col("game_id"), col("team_id"),
         col("p.playerId").cast("long").as("player_id"),
         explode(col("p.stats")).as(Seq("stat", "vals")))
-    side("home").unionByName(side("away"))
-      .select(col("game_id"), col("team_id"), col("player_id"),
-        camelToSnake(col("stat")).as("stat"),
-        aggregate(map_values(col("vals")), lit(0.0), _ + _).as("value"))
+    statRows(perPlayer, "game_id", "team_id", "player_id")
       .filter(!col("stat").endsWith("success"))
   }
 
@@ -636,34 +586,22 @@ final class OptaLoader(spark: SparkSession, root: String,
   def wsTeamGameStats(gameId: String): DataFrame = {
     // scores normalized through an explicit schema: "penalty" is optional
     // in the feed and would otherwise be absent from the inferred struct
-    val scoresType = {
-      import org.apache.spark.sql.types._
-      StructType(Seq(StructField("halftime", LongType),
-        StructField("fulltime", LongType), StructField("running", LongType),
-        StructField("penalty", LongType)))
-    }
-    def side(s: String): DataFrame = ws(gameId).select(
-      lit(gameId.toLong).as("game_id"),
-      col(s"$s.teamId").cast("long").as("team_id"),
+    val scoresType = StructType(Seq(StructField("halftime", LongType),
+      StructField("fulltime", LongType), StructField("running", LongType),
+      StructField("penalty", LongType)))
+    wsSides(gameId)(s => Seq(
       col(s"$s.field").as("side"),
-      from_json(to_json(col(s"$s.scores")), scoresType).as("scores"))
+      from_json(to_json(col(s"$s.scores")), scoresType).as("scores")))
       .select(col("game_id"), col("team_id"), col("side"),
         col("scores.fulltime").as("score"),
         col("scores.penalty").as("shootout_score"))
-    side("home").unionByName(side("away"))
   }
 
   /** Per-team stats, long-form; sums each dict-valued stat. */
-  def wsTeamStats(gameId: String): DataFrame = {
-    def side(s: String): DataFrame = ws(gameId).select(
-      lit(gameId.toLong).as("game_id"),
-      col(s"$s.teamId").cast("long").as("team_id"),
-      explode(from_json(to_json(col(s"$s.stats")), statMapType)).as(Seq("stat", "vals")))
-    side("home").unionByName(side("away"))
-      .select(col("game_id"), col("team_id"),
-        camelToSnake(col("stat")).as("stat"),
-        aggregate(map_values(col("vals")), lit(0.0), _ + _).as("value"))
-  }
+  def wsTeamStats(gameId: String): DataFrame =
+    statRows(wsSides(gameId)(s => Seq(
+      explode(from_json(to_json(col(s"$s.stats")), statMapType)).as(Seq("stat", "vals")))),
+      "game_id", "team_id")
 
   /** Player formation positions over time (`whoscored.py:275-322`): one row
     * per (formation stint, player); period id = first period whose
@@ -671,15 +609,10 @@ final class OptaLoader(spark: SparkSession, root: String,
     * periodMinuteLimits; position code from the reference's
     * `_position_mapping` (GK at (0, 5), Unknown otherwise). */
   def wsPositions(gameId: String): DataFrame = {
-    val longMap = org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.LongType)
-    def sideDf(s: String): DataFrame = ws(gameId).select(
-      lit(gameId.toLong).as("game_id"),
+    val exploded = wsSides(gameId)(s => Seq(
       from_json(to_json(col("periodEndMinutes")), longMap).as("pem"),
       from_json(to_json(col("periodMinuteLimits")), longMap).as("lims"),
-      col(s"$s.teamId").cast("long").as("team_id"),
-      explode(col(s"$s.formations")).as("f"))
-    val exploded = sideDf("home").unionByName(sideDf("away"))
+      explode(col(s"$s.formations")).as("f")))
       .select(col("game_id"), col("pem"), col("lims"), col("team_id"),
         col("f.formationName").as("formation_scheme"),
         col("f.startMinuteExpanded").cast("long").as("start_minute"),
@@ -693,17 +626,14 @@ final class OptaLoader(spark: SparkSession, root: String,
       k => k.cast("int"))
     val periodId = coalesce(array_min(matching),
       array_max(transform(map_keys(col("pem")), k => k.cast("int"))))
-    val periodMinute = when(periodId > 1,
-      col("start_minute") -
-        coalesce(element_at(col("lims"), (periodId - 1).cast("string")), lit(0L)))
-      .otherwise(col("start_minute"))
     val x = col("z").getField("formationPositions").getField("vertical").cast("double")
     val y = col("z").getField("formationPositions").getField("horizontal").cast("double")
     exploded.select(
       col("game_id"), col("team_id"),
       col("z").getField("playerIds").cast("long").as("player_id"),
       periodId.as("period_id"),
-      (periodMinute * 60 * 1000).as("period_milliseconds"),
+      (periodMinute(col("start_minute"), periodId, col("lims")) * 60 * 1000)
+        .as("period_milliseconds"),
       (col("start_minute") * 60 * 1000).as("start_milliseconds"),
       (col("end_minute") * 60 * 1000).as("end_milliseconds"),
       col("formation_scheme"),
@@ -713,125 +643,74 @@ final class OptaLoader(spark: SparkSession, root: String,
       col("start_minute"))
   }
 
-  // ---- F24 XML feed (`parsers/f24_xml.py`) ----------------------------
-  // Spark 4's native XML source: rowTag "Game", attributes surfaced with
-  // the "_" prefix, child elements as struct arrays.
+  // ---- F24 feed, JSON (`parsers/f24_json.py`) and XML (`f24_xml.py`) ---
+  // The same attribute names in `@attributes` bags and, through Spark 4's
+  // native XML source (rowTag "Game"), as `_`-prefixed attributes.
 
   private def f24Xml(gameId: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "Game")
-      .load(paths("f24xml", gameId = gameId): _*)
-
-  /** Game header from the F24 XML feed (`f24_xml.py:23-55`). */
-  def f24XmlGames(gameId: String = "*"): DataFrame =
-    f24Xml(gameId).select(
-      col("_id").cast("long").as("game_id"),
-      col("_season_id").cast("long").as("season_id"),
-      col("_competition_id").cast("long").as("competition_id"),
-      col("_matchday").cast("int").as("game_day"),
-      to_timestamp(col("_game_date")).as("game_date"),
-      col("_home_team_id").cast("long").as("home_team_id"),
-      col("_away_team_id").cast("long").as("away_team_id"),
-      col("_home_score").cast("long").as("home_score"),
-      col("_away_score").cast("long").as("away_score"))
-
-  /** Event rows from the F24 XML feed (`f24_xml.py:57-108`): identical
-    * semantics to the JSON flavor, attribute-prefixed fields. */
-  def f24XmlEvents(gameId: String): DataFrame = {
-    val raw = f24Xml(gameId).select(
-      col("_id").cast("long").as("game_id"),
-      explode(col("Event")).as("e"))
-    val qmap = map_from_entries(transform(col("e.Q"),
-      q => struct(q.getField("_qualifier_id").cast("int").as("key"),
-        q.getField("_value").cast("string").as("value"))))
-    def qnum(id: Int): Column = element_at(col("qmap"), id).cast("double")
-    val base = raw
-      .withColumn("qmap", qmap)
-      .select(
-        col("game_id"),
-        col("e._id").cast("long").as("event_id"),
-        col("e._period_id").cast("int").as("period_id"),
-        col("e._min").cast("long").as("minute"),
-        greatest(col("e._sec").cast("long"), lit(0L)).as("second"),
-        to_timestamp(col("e._timestamp")).as("timestamp"),
-        col("e._team_id").cast("long").as("team_id"),
-        col("e._player_id").cast("long").as("player_id"),
-        col("e._type_id").cast("int").as("type_id"),
-        coalesce(col("e._outcome").cast("int") === 1, lit(true)).as("outcome"),
-        col("e._x").cast("double").as("start_x"),
-        col("e._y").cast("double").as("start_y"),
-        coalesce(qnum(140), qnum(146), qnum(102), col("e._x").cast("double")).as("end_x"),
-        coalesce(qnum(141), qnum(147), qnum(103), col("e._y").cast("double")).as("end_y"),
-        coalesce(transform(col("e.Q"), q => q.getField("_qualifier_id").cast("int")),
-          array().cast("array<int>")).as("qualifiers"),
-        col("qmap"))
-      .filter(col("type_id") =!= 43)
-    finishEvents(base)
-  }
-
-  // ---- F24 JSON feed (`parsers/f24_json.py`) --------------------------
+    readXml("Game", paths("f24xml", gameId = gameId))
 
   private def f24Game(gameId: String): DataFrame =
     readJson(paths("f24", gameId = gameId))
       .filter(col("data.Games").isNotNull)
       .select(col("data.Games.Game").as("g"))
 
-  /** Game header from the F24 feed (`f24_json.py:25-66`). */
-  def f24Games(gameId: String = "*"): DataFrame =
-    f24Game(gameId).select(
-      col("g.`@attributes`.id").cast("long").as("game_id"),
-      col("g.`@attributes`.season_id").cast("long").as("season_id"),
-      col("g.`@attributes`.competition_id").cast("long").as("competition_id"),
-      col("g.`@attributes`.matchday").cast("int").as("game_day"),
-      to_timestamp(regexp_replace(col("g.`@attributes`.game_date.locale"), "Z$", ""))
-        .as("game_date"),
-      col("g.`@attributes`.home_team_id").cast("long").as("home_team_id"),
-      col("g.`@attributes`.away_team_id").cast("long").as("away_team_id"))
-
-  /** Event rows from the F24 feed (`f24_json.py:68-123`): `@attributes`
-    * bags, Q-qualifier map, the same end-coordinate qualifiers and
-    * accessor tail as MA3. */
-  def f24Events(gameId: String): DataFrame = {
-    val raw = f24Game(gameId).select(
-      col("g.`@attributes`.id").cast("long").as("game_id"),
-      explode(col("g.Event")).as("e"))
-    val a = col("e.`@attributes`")
-    val qmap = map_from_entries(transform(col("e.Q"),
-      q => struct(
-        q.getField("@attributes").getField("qualifier_id").cast("int").as("key"),
-        q.getField("@attributes").getField("value").cast("string").as("value"))))
-    def qnum(id: Int): Column = element_at(col("qmap"), id).cast("double")
-    val base = raw
-      .withColumn("qmap", qmap)
-      .select(
-        col("game_id"),
-        a.getField("id").cast("long").as("event_id"),
-        a.getField("period_id").cast("int").as("period_id"),
-        a.getField("min").cast("long").as("minute"),
-        greatest(a.getField("sec").cast("long"), lit(0L)).as("second"),
-        to_timestamp(regexp_replace(a.getField("TimeStamp").getField("locale"), "Z$", ""))
-          .as("timestamp"),
-        a.getField("team_id").cast("long").as("team_id"),
-        a.getField("player_id").cast("long").as("player_id"),
-        a.getField("type_id").cast("int").as("type_id"),
-        coalesce(a.getField("outcome").cast("int") === 1, lit(true)).as("outcome"),
-        a.getField("x").cast("double").as("start_x"),
-        a.getField("y").cast("double").as("start_y"),
-        coalesce(qnum(140), qnum(146), qnum(102), a.getField("x").cast("double")).as("end_x"),
-        coalesce(qnum(141), qnum(147), qnum(103), a.getField("y").cast("double")).as("end_y"),
-        coalesce(transform(col("e.Q"),
-          q => q.getField("@attributes").getField("qualifier_id").cast("int")),
-          array().cast("array<int>")).as("qualifiers"),
-        col("qmap"))
-      .filter(col("type_id") =!= 43)
-    finishEvents(base)
+  /** The F24 event fields of either flavour, read through its attribute
+    * accessor `a`; only the timestamp's encoding differs. */
+  private def f24Fields(a: (Column, String) => Column, timestamp: Column): EventFields = {
+    def e(name: String): Column = a(col("e"), name)
+    EventFields(col("e.Q"), a(_, "qualifier_id").cast("int"), a(_, "value").cast("string"),
+      id = e("id"), period = e("period_id"), minute = e("min"), second = e("sec"),
+      timestamp = timestamp, team = e("team_id").cast("long"),
+      player = e("player_id").cast("long"), typeId = e("type_id"), outcome = e("outcome"),
+      x = e("x"), y = e("y"))
   }
+
+  /** The F24 game header of either flavour, read through `a`. */
+  private def f24Header(a: String => Column, gameDate: Column): Seq[Column] = Seq(
+    a("id").cast("long").as("game_id"),
+    a("season_id").cast("long").as("season_id"),
+    a("competition_id").cast("long").as("competition_id"),
+    a("matchday").cast("int").as("game_day"),
+    gameDate.as("game_date"),
+    a("home_team_id").cast("long").as("home_team_id"),
+    a("away_team_id").cast("long").as("away_team_id"))
+
+  /** Game header from the F24 XML feed (`f24_xml.py:23-55`), with scores. */
+  def f24XmlGames(gameId: String = "*"): DataFrame = {
+    def a(name: String): Column = col(s"_$name")
+    f24Xml(gameId).select(f24Header(a, to_timestamp(a("game_date"))) ++ Seq(
+      a("home_score").cast("long").as("home_score"),
+      a("away_score").cast("long").as("away_score")): _*)
+  }
+
+  /** Event rows from the F24 XML feed (`f24_xml.py:57-108`,
+    * [[readEvents]]). */
+  def f24XmlEvents(gameId: String): DataFrame =
+    readEvents(
+      f24Xml(gameId).select(col("_id").cast("long").as("game_id"), explode(col("Event")).as("e")),
+      f24Fields(xmlAttr, to_timestamp(col("e._timestamp"))))
+
+  /** Game header from the F24 feed (`f24_json.py:25-66`). */
+  def f24Games(gameId: String = "*"): DataFrame = {
+    def a(name: String): Column = bag(col("g"), name)
+    f24Game(gameId).select(f24Header(a, isoTimestamp(a("game_date").getField("locale"))): _*)
+  }
+
+  /** Event rows from the F24 feed (`f24_json.py:68-123`, [[readEvents]]). */
+  def f24Events(gameId: String): DataFrame =
+    readEvents(
+      f24Game(gameId).select(
+        col("g.`@attributes`.id").cast("long").as("game_id"),
+        explode(col("g.Event")).as("e")),
+      f24Fields(bag, isoTimestamp(bag(col("e"), "TimeStamp").getField("locale"))))
 
   /** Players with minutes from the MA3 stream (`ma3_json.py:124-238`):
     * team-setup lists (qualifier 30 players ∥ 44 positions ∥ 59 jerseys ∥
     * 131 formation slots), substitutions (events 18/19), red cards
     * (event 17, qualifier 32/33), duration (event 30, qualifier 209). */
   def players(gameId: String): DataFrame = {
-    val ev = events(gameId).cache()
+    val ev = events(gameId)
     val duration = coalesce(
       max(when(col("type_id") === 30 && map_contains_key(col("qmap"), 209)
         && col("minute") > 90, col("minute"))), lit(90L))
@@ -852,22 +731,19 @@ final class OptaLoader(spark: SparkSession, root: String,
         col("z").getField("2").cast("long").as("jersey_number"),
         col("z").getField("3").cast("int").as("position_in_formation"))
 
-    val names = ev.filter(col("player_id").isNotNull)
-      .groupBy("player_id").agg(min_by(col("player_name"), col("seq")).as("player_name"))
-    val redCards = ev.filter(col("type_id") === 17 && col("player_id").isNotNull &&
-        (map_contains_key(col("qmap"), 32) || map_contains_key(col("qmap"), 33)))
-      .groupBy("player_id").agg(min("minute").as("red_minute"))
-    val subsOff = ev.filter(col("type_id") === 18)
-      .groupBy("player_id").agg(max("minute").as("minute_end"))
-    val subsOn = ev.filter(col("type_id") === 19)
-      .groupBy("player_id").agg(max("minute").as("minute_start"))
+    // per player: first name seen, first red card, last sub off / sub on
+    def minuteOf(event: Column): Column = when(event, col("minute"))
+    val perPlayer = ev.filter(col("player_id").isNotNull).groupBy("player_id").agg(
+      min_by(col("player_name"), col("seq")).as("player_name"),
+      min(minuteOf(col("type_id") === 17 &&
+        (map_contains_key(col("qmap"), 32) || map_contains_key(col("qmap"), 33))))
+        .as("red_minute"),
+      max(minuteOf(col("type_id") === 18)).as("minute_end"),
+      max(minuteOf(col("type_id") === 19)).as("minute_start"))
 
     setup
       .join(durs, "game_id")
-      .join(names, Seq("player_id"), "left")
-      .join(redCards, Seq("player_id"), "left")
-      .join(subsOff, Seq("player_id"), "left")
-      .join(subsOn, Seq("player_id"), "left")
+      .join(perPlayer, Seq("player_id"), "left")
       .withColumn("minute_start", coalesce(col("minute_start"), lit(0L)))
       .withColumn("minute_end",
         coalesce(col("red_minute"), col("minute_end"), col("game_duration")))
@@ -928,6 +804,6 @@ object OptaLoader {
 
   def eventTypes(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    eventTypeNames.map { case (i, n) => (i, n) }.toDF("type_id", "type_name")
+    eventTypeNames.toDF("type_id", "type_name")
   }
 }

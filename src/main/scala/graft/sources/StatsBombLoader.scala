@@ -193,17 +193,15 @@ object StatsBombLoader {
       .withColumn("dur", col("minute") - regCum)
     val durs = halfEnds.groupBy("game_id").agg(
       sum("dur").as("game_minutes"),
-      count(lit(1)).as("n_periods"),
-      max(when(col("period_id") === 1, col("dur"))).as("dur1"),
-      max(when(col("period_id") === 2, col("dur"))).as("dur2"),
-      max(when(col("period_id") === 3, col("dur"))).as("dur3"))
+      count(lit(1)).as("n_periods") +: (1 to 3).map(p =>
+        max(when(col("period_id") === p, col("dur"))).as(s"dur$p")): _*)
 
-    // expand a minute with the injury time of completed prior periods
-    def expand(minute: Column): Column =
-      minute +
-        coalesce(when(col("n_periods") > 1 && minute > 45, col("dur1") - 45), lit(0)) +
-        coalesce(when(col("n_periods") > 2 && minute > 90, col("dur2") - 45), lit(0)) +
-        coalesce(when(col("n_periods") > 3 && minute > 105, col("dur3") - 15), lit(0))
+    // expand a minute with the injury time of completed prior periods: the
+    // overrun of period p once the minute is past p's regular end
+    def expand(minute: Column): Column = (1 to 3).foldLeft(minute) { (acc, p) =>
+      acc + coalesce(when(col("n_periods") > p && minute > RegularCum(p)._2,
+        col(s"dur$p") - RegularLen(p)), lit(0))
+    }
 
     // first red card (straight red or second yellow) per (game, player)
     val cardName = coalesce(
@@ -246,10 +244,8 @@ object StatsBombLoader {
       .withColumn("minutes_played",
         when(col("red_minute").isNotNull, expand(col("red_minute")) - col("sub_minute"))
           .otherwise(col("game_minutes") - col("sub_minute")))
-      .select(col("game_id"), col("team_id"), col("team_name"), col("player_id"),
-        col("player_name"), lit(null).cast("long").as("position_id"),
-        lit(null).cast("string").as("position_name"),
-        lit(null).cast("long").as("jersey_number"), col("minutes_played"))
+      .select("game_id", "team_id", "team_name", "player_id", "player_name",
+        "minutes_played")
 
     // ...and the player going off keeps only the minutes up to it
     val subbedOut = subs.select(col("game_id"),
@@ -262,6 +258,7 @@ object StatsBombLoader {
       .select("game_id", "team_id", "team_name", "player_id", "player_name",
         "position_id", "position_name", "jersey_number", "minutes_played")
 
-    xiFinal.unionByName(replacements)
+    // a replacement has no starting position or jersey: null
+    xiFinal.unionByName(replacements, allowMissingColumns = true)
   }
 }

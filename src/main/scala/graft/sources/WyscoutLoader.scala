@@ -24,6 +24,9 @@ object WyscoutMinutes {
     StructField("shirtNumber", LongType),
     StructField("redCards", StringType)))
 
+  /** An empty lineup/bench, for a team whose teamsData lacks one. */
+  private[sources] val emptyRoster: Column = array().cast(ArrayType(rosterEntry))
+
   /** teamsData map schema incl. rosters and substitutions (dynamic team-id
     * keys ⇒ explicit map schema over from_json(to_json(...))). */
   val teamsDataType: MapType = MapType(StringType, StructType(Seq(
@@ -88,7 +91,6 @@ object WyscoutMinutes {
         col("durations"))
       .withColumn("duration", aggregate(col("durations"), lit(0L), _ + _))
 
-    val emptyRoster = array().cast(ArrayType(rosterEntry))
     def redOf(pid: Column): Column = {
       val all = concat(coalesce(col("lineup"), emptyRoster),
         coalesce(col("bench"), emptyRoster))
@@ -102,8 +104,7 @@ object WyscoutMinutes {
           .getField("minute"), col("durations"))
 
     val lineupRows = teams
-      .select(col("game_id"), col("team_id"), col("duration"), col("durations"),
-        col("lineup"), col("bench"), col("subs"), explode(col("lineup")).as("p"))
+      .select(col("*"), explode(col("lineup")).as("p"))
       .select(col("game_id"), col("team_id"),
         col("p.playerId").as("player_id"),
         coalesce(col("p.shirtNumber"), lit(0L)).as("jersey_number"),
@@ -112,12 +113,9 @@ object WyscoutMinutes {
           col("duration")).as("minutes_played"))
 
     val subInRows = teams
-      .select(col("game_id"), col("team_id"), col("duration"), col("durations"),
-        col("lineup"), col("bench"), col("subs"), explode(col("subs")).as("s"))
-      .select(col("game_id"), col("team_id"), col("durations"), col("duration"),
-        col("lineup"), col("bench"), col("subs"),
-        col("s.playerIn").as("player_id"),
-        expandMinute(col("s.minute"), col("durations")).as("exp_in"))
+      .select(col("*"), explode(col("subs")).as("s"))
+      .withColumn("player_id", col("s.playerIn"))
+      .withColumn("exp_in", expandMinute(col("s.minute"), col("durations")))
       .select(col("game_id"), col("team_id"), col("player_id"),
         coalesce(
           get(filter(col("bench"),
@@ -150,12 +148,8 @@ final class WyscoutLoader(spark: SparkSession, root: String) {
 
   /** `_convert_competitions` (`loader.py:662-673`). */
   def competitions(): DataFrame =
-    readJson("competitions.json").select(
-      col("wyId").as("competition_id"),
-      col("name").as("competition_name"),
-      when(col("area.name") === "", "International").otherwise(col("area.name"))
-        .as("country_name"),
-      coalesce(col("gender"), lit("male")).as("competition_gender"))
+    readJson("competitions.json")
+      .select(WyscoutLoader.competitionColumns(coalesce(col("gender"), lit("male"))): _*)
 
   /** `_convert_seasons` (`loader.py:676-684`). */
   def seasons(competitionId: Long): DataFrame =
@@ -164,27 +158,16 @@ final class WyscoutLoader(spark: SparkSession, root: String) {
       col("name").as("season_name"),
       col("competitionId").as("competition_id"))
 
-  /** `_convert_games` (`loader.py:687-707`): teamsData is an object keyed by
-    * team id — read with an explicit map schema (dynamic JSON keys must not
-    * become inferred struct fields). */
+  /** Games of a season ([[WyscoutLoader.gameColumns]]); teamsData is an
+    * object keyed by team id — read with an explicit map schema (dynamic
+    * JSON keys must not become inferred struct fields). */
   def games(competitionId: Long, seasonId: Long): DataFrame = {
     val teamsDataType = MapType(StringType,
       StructType(Seq(StructField("side", StringType), StructField("score", LongType))))
-    val m = readJson(s"matches_$seasonId.json")
+    readJson(s"matches_$seasonId.json")
       .select(explode(col("matches")).as("m"))
       .withColumn("teamsData", from_json(to_json(col("m.teamsData")), teamsDataType))
-    def sideTeam(side: String): Column =
-      element_at(
-        map_keys(map_filter(col("teamsData"), (_, v) => v.getField("side") === side)), 1)
-        .cast("long")
-    m.select(
-      col("m.matchId").as("game_id"),
-      col("m.competitionId").as("competition_id"),
-      col("m.seasonId").as("season_id"),
-      to_timestamp(col("m.dateutc")).as("game_date"),
-      col("m.gameweek").as("game_day"),
-      sideTeam("home").as("home_team_id"),
-      sideTeam("away").as("away_team_id"))
+      .select(WyscoutLoader.gameColumns(name => col(s"m.$name"), "matchId"): _*)
       .filter(col("competition_id") === competitionId)
   }
 
@@ -200,10 +183,7 @@ final class WyscoutLoader(spark: SparkSession, root: String) {
         StructField("officialName", StringType)))))))
     eventsPayload(gameId)
       .select(explode(from_json(to_json(col("teams")), teamType)).as(Seq("tid", "t")))
-      .select(
-        col("t.team.wyId").as("team_id"),
-        col("t.team.name").as("team_name_short"),
-        col("t.team.officialName").as("team_name"))
+      .select(WyscoutLoader.teamColumns(name => col(s"t.team.$name")): _*)
   }
 
   /** `_convert_players` (`loader.py:710-722`). */
@@ -218,49 +198,13 @@ final class WyscoutLoader(spark: SparkSession, root: String) {
     eventsPayload(gameId)
       .select(explode(from_json(to_json(col("players")), playersType)).as(Seq("tid", "ps")))
       .select(col("tid").cast("long").as("team_id"), explode(col("ps")).as("p"))
-      .select(
-        col("team_id"),
-        col("p.player.wyId").as("player_id"),
-        col("p.player.shortName").as("nickname"),
-        concat_ws(" ", col("p.player.firstName"), col("p.player.lastName"))
-          .as("player_name"),
-        to_date(col("p.player.birthDate")).as("birth_date"))
+      .select(col("team_id") +: WyscoutLoader.playerColumns(name => col(s"p.player.$name")): _*)
       .withColumn("game_id", lit(gameId))
   }
 
-  /** `_convert_events` (`loader.py:735-780`): the raw event array →
-    * converter-ready rows. Periods follow the 1H/2H/E1/E2/P map
-    * (`wyscout_periods`); `seq` is a per-game (period, eventSec, id)
-    * row number — the canonical event order. */
-  def events(gameId: Long): DataFrame = {
-    val periodId = when(col("e.matchPeriod") === "1H", 1)
-      .when(col("e.matchPeriod") === "2H", 2)
-      .when(col("e.matchPeriod") === "E1", 3)
-      .when(col("e.matchPeriod") === "E2", 4)
-      .when(col("e.matchPeriod") === "P", 5)
-    val w = Window.partitionBy("game_id")
-      .orderBy("period_id", "milliseconds", "event_id")
-    eventsPayload(gameId)
-      .select(explode(col("events")).as("e"))
-      .select(
-        col("e.matchId").as("game_id"),
-        col("e.id").as("event_id"),
-        periodId.cast("int").as("period_id"),
-        (col("e.eventSec") * 1000).cast("long").as("milliseconds"),
-        col("e.teamId").as("team_id"),
-        col("e.playerId").as("player_id"),
-        col("e.eventId").cast("int").as("type_id"),
-        coalesce(col("e.subEventId").cast("int"), lit(0)).as("subtype_id"),
-        col("e.eventName").as("type_name"),
-        col("e.subEventName").as("subtype_name"),
-        coalesce(transform(col("e.tags"), t => t.getField("id").cast("int")),
-          array().cast("array<int>")).as("tags"),
-        coalesce(transform(col("e.positions"),
-          p => struct(p.getField("x").cast("double").as("x"),
-            p.getField("y").cast("double").as("y"))),
-          array().cast("array<struct<x:double,y:double>>")).as("positions"))
-      .withColumn("seq", row_number().over(w).cast("long"))
-  }
+  /** The events of a game ([[WyscoutLoader.eventRows]]). */
+  def events(gameId: Long): DataFrame =
+    WyscoutLoader.eventRows(eventsPayload(gameId).select(explode(col("events")).as("e")))
 
   /** Player minutes from the API payload's match.teamsData + events
     * (`loader.py:620-630` → `_get_minutes_played`). */
@@ -276,6 +220,71 @@ final class WyscoutLoader(spark: SparkSession, root: String) {
 object WyscoutLoader {
   def apply(spark: SparkSession, root: String): WyscoutLoader =
     new WyscoutLoader(spark, root)
+
+  /** `_convert_competitions` (`loader.py:662-673`) of a competitions file;
+    * the two layouts differ only in the gender column. */
+  private[sources] def competitionColumns(gender: Column): Seq[Column] = Seq(
+    col("wyId").as("competition_id"),
+    col("name").as("competition_name"),
+    when(col("area.name") === "", "International").otherwise(col("area.name"))
+      .as("country_name"),
+    gender.as("competition_gender"))
+
+  /** `_convert_teams` / `_convert_players` (`loader.py:710-732`) of a
+    * team or player object whose fields `field` reads. */
+  private[sources] def teamColumns(field: String => Column): Seq[Column] = Seq(
+    field("wyId").as("team_id"), field("name").as("team_name_short"),
+    field("officialName").as("team_name"))
+
+  private[sources] def playerColumns(field: String => Column): Seq[Column] = Seq(
+    field("wyId").as("player_id"), field("shortName").as("nickname"),
+    concat_ws(" ", field("firstName"), field("lastName")).as("player_name"),
+    to_date(field("birthDate")).as("birth_date"))
+
+  /** `_convert_games` (`loader.py:687-707`) of a match object whose fields
+    * `field` reads (the game id in `idField`), next to its parsed
+    * `teamsData` map keyed by team id. */
+  private[sources] def gameColumns(field: String => Column, idField: String): Seq[Column] = {
+    def sideTeam(side: String): Column =
+      Feeds.onSide(map_entries(col("teamsData")), side, _.getField("value").getField("side"))
+        .getField("key").cast("long")
+    Seq(field(idField).as("game_id"), field("competitionId").as("competition_id"),
+      field("seasonId").as("season_id"), to_timestamp(field("dateutc")).as("game_date"),
+      field("gameweek").as("game_day"),
+      sideTeam("home").as("home_team_id"), sideTeam("away").as("away_team_id"))
+  }
+
+  /** `_convert_events` (`loader.py:735-780`): raw events, one struct
+    * column `e` each → converter-ready rows. Periods follow the
+    * 1H/2H/E1/E2/P map (`wyscout_periods`); `seq` is a per-game (period,
+    * eventSec, id) row number — the canonical event order. */
+  private[sources] def eventRows(raw: DataFrame): DataFrame = {
+    val periodId = when(col("e.matchPeriod") === "1H", 1)
+      .when(col("e.matchPeriod") === "2H", 2)
+      .when(col("e.matchPeriod") === "E1", 3)
+      .when(col("e.matchPeriod") === "E2", 4)
+      .when(col("e.matchPeriod") === "P", 5)
+    val w = Window.partitionBy("game_id")
+      .orderBy("period_id", "milliseconds", "event_id")
+    raw.select(
+      col("e.matchId").as("game_id"),
+      col("e.id").as("event_id"),
+      periodId.cast("int").as("period_id"),
+      (col("e.eventSec") * 1000).cast("long").as("milliseconds"),
+      col("e.teamId").as("team_id"),
+      col("e.playerId").as("player_id"),
+      col("e.eventId").cast("int").as("type_id"),
+      coalesce(col("e.subEventId").cast("int"), lit(0)).as("subtype_id"),
+      col("e.eventName").as("type_name"),
+      col("e.subEventName").as("subtype_name"),
+      coalesce(transform(col("e.tags"), t => t.getField("id").cast("int")),
+        array().cast("array<int>")).as("tags"),
+      coalesce(transform(col("e.positions"),
+        p => struct(p.getField("x").cast("double").as("x"),
+          p.getField("y").cast("double").as("y"))),
+        array().cast("array<struct<x:double,y:double>>")).as("positions"))
+      .withColumn("seq", row_number().over(w).cast("long"))
+  }
 }
 
 /** S9 — the PUBLIC Wyscout research dataset layout (Pappalardo et al.,
@@ -319,12 +328,7 @@ final class PublicWyscoutLoader(spark: SparkSession, root: String) {
     import spark.implicits._
     val idx = index.map(e => (e._1, e._2, e._3))
       .toDF("competition_id", "season_id", "season_name")
-    readJson("competitions.json").select(
-      col("wyId").as("competition_id"),
-      col("name").as("competition_name"),
-      when(col("area.name") === "", "International").otherwise(col("area.name"))
-        .as("country_name"),
-      lit("male").as("competition_gender"))
+    readJson("competitions.json").select(WyscoutLoader.competitionColumns(lit("male")): _*)
       .join(idx, Seq("competition_id"), "left")
   }
 
@@ -333,56 +337,34 @@ final class PublicWyscoutLoader(spark: SparkSession, root: String) {
       .withColumn("teamsData",
         from_json(to_json(col("teamsData")), WyscoutMinutes.teamsDataType))
 
-  /** Games of a season (`loader.py:205-223` + `_convert_games`). */
-  def games(competitionId: Long, seasonId: Long): DataFrame = {
-    def sideTeam(side: String): Column =
-      element_at(
-        map_keys(map_filter(col("teamsData"), (_, v) => v.getField("side") === side)), 1)
-        .cast("long")
+  /** Games of a season (`loader.py:205-223`,
+    * [[WyscoutLoader.gameColumns]]). */
+  def games(competitionId: Long, seasonId: Long): DataFrame =
     matchesOf(competitionId)
       .filter(col("seasonId") === seasonId)
-      .select(
-        col("wyId").as("game_id"),
-        col("competitionId").as("competition_id"),
-        col("seasonId").as("season_id"),
-        to_timestamp(col("dateutc")).as("game_date"),
-        col("gameweek").as("game_day"),
-        sideTeam("home").as("home_team_id"),
-        sideTeam("away").as("away_team_id"))
-  }
+      .select(WyscoutLoader.gameColumns(col, "wyId"): _*)
+
+  /** The teamsData entries (`td`) of one game. */
+  private def teamsOf(competitionId: Long, gameId: Long): DataFrame =
+    matchesOf(competitionId).filter(col("wyId") === gameId)
+      .select(explode(col("teamsData")).as(Seq("tid", "td")))
 
   /** Both teams of a game via the global teams.json (`loader.py:231-249`). */
   def teams(competitionId: Long, gameId: Long): DataFrame = {
-    val lineup = matchesOf(competitionId)
-      .filter(col("wyId") === gameId)
-      .select(explode(col("teamsData")).as(Seq("tid", "td")))
-      .select(col("td.teamId").as("team_id"))
-    readJson("teams.json").select(
-      col("wyId").as("team_id"),
-      col("name").as("team_name_short"),
-      col("officialName").as("team_name"))
-      .join(lineup, "team_id")
+    val lineup = teamsOf(competitionId, gameId).select(col("td.teamId").as("team_id"))
+    readJson("teams.json").select(WyscoutLoader.teamColumns(col): _*).join(lineup, "team_id")
   }
 
   /** Lineup + bench identity rows of a game, joined with players.json
     * (`loader.py:251-302`, identity subset; lineup members are starters). */
   def players(competitionId: Long, gameId: Long): DataFrame = {
-    val base = matchesOf(competitionId)
-      .filter(col("wyId") === gameId)
-      .select(explode(col("teamsData")).as(Seq("tid", "td")))
+    val base = teamsOf(competitionId, gameId)
     def roster(field: String, starter: Boolean): DataFrame = base
       .select(col("td.teamId").as("team_id"), col("td.side").as("side"),
-        explode(coalesce(col(s"td.formation.$field"),
-          array().cast(
-            "array<struct<playerId:bigint,shirtNumber:bigint,redCards:string>>")))
-          .as("p"))
+        explode(coalesce(col(s"td.formation.$field"), WyscoutMinutes.emptyRoster)).as("p"))
       .select(col("team_id"), col("side"), col("p.playerId").as("player_id"),
         lit(starter).as("is_starter"))
-    val identities = readJson("players.json").select(
-      col("wyId").as("player_id"),
-      col("shortName").as("nickname"),
-      concat_ws(" ", col("firstName"), col("lastName")).as("player_name"),
-      to_date(col("birthDate")).as("birth_date"))
+    val identities = readJson("players.json").select(WyscoutLoader.playerColumns(col): _*)
     roster("lineup", starter = true).unionByName(roster("bench", starter = false))
       .join(identities, Seq("player_id"), "left")
       .withColumn("game_id", lit(gameId))
@@ -396,38 +378,13 @@ final class PublicWyscoutLoader(spark: SparkSession, root: String) {
         .select(col("wyId").as("game_id"), col("teamsData")),
       events(competitionId, gameId))
 
-  /** Event rows of a game from the per-league file (`loader.py:321-345` +
-    * `_convert_events`) — same output contract as WyscoutLoader.events. */
-  def events(competitionId: Long, gameId: Long): DataFrame = {
-    val periodId = when(col("e.matchPeriod") === "1H", 1)
-      .when(col("e.matchPeriod") === "2H", 2)
-      .when(col("e.matchPeriod") === "E1", 3)
-      .when(col("e.matchPeriod") === "E2", 4)
-      .when(col("e.matchPeriod") === "P", 5)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("game_id")
-      .orderBy("period_id", "milliseconds", "event_id")
-    readJson(filesFor(competitionId)._2)
+  /** Event rows of a game from the per-league file (`loader.py:321-345`,
+    * [[WyscoutLoader.eventRows]]) — same output contract as
+    * WyscoutLoader.events. */
+  def events(competitionId: Long, gameId: Long): DataFrame =
+    WyscoutLoader.eventRows(readJson(filesFor(competitionId)._2)
       .filter(col("matchId") === gameId)
-      .select(struct(col("*")).as("e"))
-      .select(
-        col("e.matchId").as("game_id"),
-        col("e.id").as("event_id"),
-        periodId.cast("int").as("period_id"),
-        (col("e.eventSec") * 1000).cast("long").as("milliseconds"),
-        col("e.teamId").as("team_id"),
-        col("e.playerId").as("player_id"),
-        col("e.eventId").cast("int").as("type_id"),
-        coalesce(col("e.subEventId").cast("int"), lit(0)).as("subtype_id"),
-        col("e.eventName").as("type_name"),
-        col("e.subEventName").as("subtype_name"),
-        coalesce(transform(col("e.tags"), t => t.getField("id").cast("int")),
-          array().cast("array<int>")).as("tags"),
-        coalesce(transform(col("e.positions"),
-          p => struct(p.getField("x").cast("double").as("x"),
-            p.getField("y").cast("double").as("y"))),
-          array().cast("array<struct<x:double,y:double>>")).as("positions"))
-      .withColumn("seq", row_number().over(w).cast("long"))
-  }
+      .select(struct(col("*")).as("e")))
 }
 
 object PublicWyscoutLoader {

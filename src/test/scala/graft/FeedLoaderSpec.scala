@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
+import org.apache.spark.storage.StorageLevel
 
 import graft.sources.{Opta, OptaLoader, Wyscout, WyscoutLoader}
 
@@ -49,6 +52,7 @@ class FeedLoaderSpec extends SparkSpec {
     assert(goal.getAs[String]("type_name") == "goal")
     assert(goal.getAs[Double]("end_x") == 100.0) // goal-line qualifier 102
     assert(goal.getAs[Boolean]("outcome"))
+    ev.unpersist()
   }
 
   test("opta: MA3 player minutes (setup lists, sub, red card, duration)") {
@@ -81,6 +85,40 @@ class FeedLoaderSpec extends SparkSpec {
     val goal = ev.filter(col("event_id") === 3).head()
     assert(goal.getAs[Double]("end_x") == 99.0) // goal-line qualifier 102
     assert(goal.getAs[Double]("end_y") == 51.0)
+    ev.unpersist()
+  }
+
+  test("opta: players leaves the game's events uncached") {
+    assert(opta.players("g900").count() > 0)
+    assert(opta.events("g900").storageLevel == StorageLevel.NONE)
+  }
+
+  test("opta: a feed with no matching file fails naming the feed, pattern and root") {
+    val json = intercept[IllegalArgumentException](opta.events("nope"))
+    assert(json.getMessage.contains("ma3") &&
+      json.getMessage.contains("ma3-*-*-nope.json") && json.getMessage.contains(optaRoot))
+    val xml = intercept[IllegalArgumentException](opta.f7Lineups("nope"))
+    assert(xml.getMessage.contains("f7") &&
+      xml.getMessage.contains("f7-*-*-nope.xml") && xml.getMessage.contains(optaRoot))
+  }
+
+  test("opta: each WhoScored both-sides accessor reads the game file once") {
+    // building the frame infers the file's schema: one job per read
+    val sc = spark.sparkContext
+    val accessors: Seq[(String, () => DataFrame)] = Seq(
+      "wsTeams" -> (() => opta.wsTeams("555")),
+      "wsPlayerGameStats" -> (() => opta.wsPlayerGameStats("555")),
+      "wsPlayerStats" -> (() => opta.wsPlayerStats("555")),
+      "wsTeamGameStats" -> (() => opta.wsTeamGameStats("555")),
+      "wsTeamStats" -> (() => opta.wsTeamStats("555")),
+      "wsPositions" -> (() => opta.wsPositions("555")))
+    for ((name, build) <- accessors) {
+      val group = s"feed-loader-$name"
+      sc.setJobGroup(group, name)
+      try build() finally sc.clearJobGroup()
+      Shim.drainListeners(spark)
+      assert(sc.statusTracker.getJobIdsForGroup(group).length == 1, name)
+    }
   }
 
   test("opta: F1 schedule feed (competitions, per-match sides and scores)") {
