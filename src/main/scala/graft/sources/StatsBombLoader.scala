@@ -197,7 +197,8 @@ object StatsBombLoader {
         max(when(col("period_id") === p, col("dur"))).as(s"dur$p")): _*)
 
     // expand a minute with the injury time of completed prior periods: the
-    // overrun of period p once the minute is past p's regular end
+    // overrun of period p once the minute is past p's regular end (the
+    // regular start of period p + 1, RegularCum(p))
     def expand(minute: Column): Column = (1 to 3).foldLeft(minute) { (acc, p) =>
       acc + coalesce(when(col("n_periods") > p && minute > RegularCum(p)._2,
         col(s"dur$p") - RegularLen(p)), lit(0))
